@@ -883,7 +883,7 @@ object Bench {
       //    as a regression, with per-rep times printed for auditability.
       // the 14M-tick baseline workloads get extra reps: their first rep
       // absorbs the sort-buffer/JIT ramp (measured 6.1 s vs 2.4 s steady
-      // state), and phase-timed runs (GRAFT_SCAN_DEBUG) show job-level
+      // state), and the scan's phase marks in the diag show job-level
       // jitter up to several x on this host — one slow rep must not
       // masquerade as a regression in the ONE number compared against
       // BASELINE.md, so take min-of-4 there

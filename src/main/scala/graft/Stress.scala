@@ -79,7 +79,7 @@ object Stress {
     // prefix cap (4096) or the fallback boundary has been found
     var stats: Renko.ParallelScanStats = null
     timed(s"${n / 1000000}M x 1 series bursty") {
-      val (df, st) = Renko.fromTicksParallelWithStats(burstyTicks(spark, n), 1.0, tsUnit = "us")
+      val (df, st) = Renko.parallelScan(burstyTicks(spark, n), 1.0, tsUnit = "us")
       stats = st
       RenkoModes.project(df, "wicks")
     }

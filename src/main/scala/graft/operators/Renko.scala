@@ -4,6 +4,8 @@ import graft.core.{Brick, RenkoEngine, RenkoSnapshot}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -40,13 +42,13 @@ final case class BrickRow(
   *
   * Spark-first design: the scan is inherently sequential *within* a series
   * (the fold is not associative, so no partial/final split exists), but
-  * embarrassingly parallel *across* series. We therefore shuffle once on the
-  * series key (`groupByKey`) and let Spark's secondary sort
-  * (`flatMapSortedGroups`) order each series by time inside the exchange —
-  * no extra sort pass, no global sort, and at cluster scale parallelism =
-  * number of series. Column pruning to exactly (symbol, datetime, close)
-  * happens *before* the typed operator because Catalyst cannot push a
-  * projection through `flatMapGroups`.
+  * embarrassingly parallel *across* series. `fromTicks` therefore shuffles
+  * once on the series key and sorts each partition by (symbol, t) — no
+  * global sort, and at cluster scale parallelism = number of series. A
+  * series too large for one task goes through the sync-point stitch of
+  * `fromTicksParallel` instead. Column pruning to exactly (symbol, datetime,
+  * close) happens *before* the typed operator because Catalyst cannot push
+  * a projection through `mapPartitions`.
   *
   * Capability match: reference `Renko.__init__`/`_create_renko`
   * (`/root/reference/src/renkodf/renkodf.py:16-252`), generalized from one
@@ -59,7 +61,6 @@ object Renko {
 
   implicit private val tickEnc: Encoder[Tick] = Encoders.product[Tick]
   implicit private val brickEnc: Encoder[BrickRow] = Encoders.product[BrickRow]
-  implicit private val stringEnc: Encoder[String] = Encoders.STRING
 
   /** Columns of the wide brick table, in reference order (renkodf.py:60-67),
     * with the series key prepended.
@@ -93,23 +94,13 @@ object Renko {
       tsUnit: String = "us",
       dropFirst: Boolean = true,
       divideBy: Int = 2): DataFrame = {
-    require(brickSize > 0, "brick_size cannot be 'None' or '<= 0'")
     // validation-surface parity with the reference (renkodf.py:44-45):
     // divide_by is the reference's numpy pre-allocation chunking hint
     // (capacity only, never semantics — renkodf.py:36-39); Spark sizes its
     // own buffers, so the value is validated with the reference's message
     // and otherwise ignored. Kept so reference code ports without edits.
     require(divideBy > 0, "divide_by cannot be 'None' or '<= 0'")
-    require(df.columns.contains(closeCol), s"Column '$closeCol' doesn't exist!")
-    require(df.columns.contains(datetimeCol), s"Column '$datetimeCol' doesn't exist!")
-
-    val symExpr: Column = symbolCol.map(c => col(c).cast(StringType)).getOrElse(lit(""))
-    val ticks = df
-      .select(
-        symExpr.as("symbol"),
-        toEpochMicros(df.schema(datetimeCol).dataType, col(datetimeCol), tsUnit).as("t"),
-        col(closeCol).cast(DoubleType).as("price"))
-      .as[Tick]
+    val ticks = normalizedTicks(df, brickSize, symbolCol, datetimeCol, closeCol, tsUnit).as[Tick]
 
     // one hash exchange on the series key + in-partition sort, then a flat
     // per-partition scan over contiguous same-symbol runs. Measurably
@@ -142,69 +133,23 @@ object Renko {
       closeCol: String = "close",
       tsUnit: String = "us",
       dropFirst: Boolean = true): DataFrame = {
-    require(brickSize > 0, "brick_size cannot be 'None' or '<= 0'")
-    require(df.columns.contains(closeCol), s"Column '$closeCol' doesn't exist!")
-    require(df.columns.contains(datetimeCol), s"Column '$datetimeCol' doesn't exist!")
-    val symExpr: Column = symbolCol.map(c => col(c).cast(StringType)).getOrElse(lit(""))
-    val ticks = df
-      .select(
-        symExpr.as("symbol"),
-        toEpochMicros(df.schema(datetimeCol).dataType, col(datetimeCol), tsUnit).as("t"),
-        col(closeCol).cast(DoubleType).as("price"))
-      .as[Tick]
+    val ticks = normalizedTicks(df, brickSize, symbolCol, datetimeCol, closeCol, tsUnit).as[Tick]
     widen(ticks.mapPartitions(it => scanPartition(it, brickSize, dropFirst)).toDF())
   }
 
-  /** Partition execution plan for the parallel scan's second pass:
-    * `syncIdx = Long.MaxValue` marks a partition fully replayed on the
-    * driver (no suffix work).
-    */
-  private final case class Plan(pidx: Int, syncIdx: Long, syncSnap: RenkoSnapshot, offset: Long)
-
-  /** Summary of one range partition from the parallel scan's first pass. */
-  private final case class PartSummary(
-      pidx: Int,
-      nTicks: Long,
-      prefixTs: Array[Long],
-      prefixPrice: Array[Double],
-      // own-replay snapshot AFTER each prefix tick, local tick indices;
-      // null slot = that tick emitted nothing under the own replay
-      prefixEmitSnap: Array[RenkoSnapshot],
-      exit: RenkoSnapshot,
-      exitStarted: Boolean,
-      // sorted-contract evidence, captured for free during the scan: the
-      // partition's first/last timestamps and whether it was internally
-      // nondecreasing — the driver refuses to stitch (falls back to the
-      // sequential plan) when any partition is unsorted or partitions
-      // overlap in time, instead of silently emitting wrong bricks
-      firstTs: Long,
-      lastTs: Long,
-      sorted: Boolean)
-
-  /** Parallel scan for ONE large series — the 100 TB path when the data is a
-    * single symbol (where `fromTicks` degenerates to a 1-task sort + scan).
+  /** Parallel scan for series too large for `fromTicks`'s one task per
+    * series — one giant series, or a few simultaneously huge ones. The ticks
+    * are range-partitioned on (symbol, t) (on t alone for a single series)
+    * and sorted in parallel, so one series spreads over many partitions;
+    * [[stitch]] then joins each series' runs at sync points.
     *
-    * Renko's fold is not associative, but it SYNCHRONIZES: when a tick emits
-    * a brick, the post-tick state is fully determined by that tick and the
-    * emission (`volume = 1`, `tickOpen = tickClose = i`, wick reset to the
-    * brick boundary, `lastRenko`/`direction` from the brick) — the entry
-    * state only influences a short prefix. So:
+    * For MANY small series `fromTicks` is already parallel and cheaper:
+    * the driver's stitch work is O(runs · syncDepth), and runs grow with
+    * the symbol count.
     *
-    *  1. range-partition by time and sort each partition IN PARALLEL;
-    *  2. job 1: each partition replays its own ticks from a fresh anchor and
-    *     reports (first `prefixCap` ticks, per-tick emission snapshots, exit
-    *     state) — tiny summaries, bricks are not materialized;
-    *  3. the driver chains exact entry states across partitions, replaying
-    *     only each partition's prefix until the true trajectory and the
-    *     own-replay both emit at the same tick with identical state (the
-    *     sync point) — typically a handful of ticks;
-    *  4. job 2: each partition restores the synced snapshot and re-scans
-    *     only its suffix in parallel; driver-computed prefix bricks (a few
-    *     per partition) are unioned in.
-    *
-    * Output is bit-identical to `fromTicks` (verified by ParallelScanSpec);
-    * if some partition never synchronizes within its prefix (pathologically
-    * flat prices), the method falls back to the sequential `fromTicks`.
+    * Output is bit-identical to `fromTicks` with the same `symbolCol`
+    * (ParallelScanSpec); if some run never synchronizes within its prefix
+    * (pathologically flat prices), the method falls back to `fromTicks`.
     */
   def fromTicksParallel(
       df: DataFrame,
@@ -216,21 +161,61 @@ object Renko {
       numPartitions: Int = 0,
       prefixCap: Int = 4096,
       symbolCol: Option[String] = None): DataFrame =
-    symbolCol match {
-      case Some(sc) =>
-        fromTicksParallelMultiWithStats(df, brickSize, sc, datetimeCol, closeCol,
-          tsUnit, dropFirst, numPartitions, prefixCap)._1
-      case None =>
-        fromTicksParallelWithStats(df, brickSize, datetimeCol, closeCol, tsUnit,
-          dropFirst, numPartitions, prefixCap)._1
-    }
+    parallelScan(df, brickSize, datetimeCol, closeCol, tsUnit, dropFirst,
+      numPartitions, prefixCap, symbolCol)._1
+
+  /** [[fromTicksParallel]] together with the stitch's [[ParallelScanStats]]. */
+  private[graft] def parallelScan(
+      df: DataFrame,
+      brickSize: Double,
+      datetimeCol: String = "datetime",
+      closeCol: String = "close",
+      tsUnit: String = "us",
+      dropFirst: Boolean = true,
+      numPartitions: Int = 0,
+      prefixCap: Int = 4096,
+      symbolCol: Option[String] = None): (DataFrame, ParallelScanStats) = {
+    val ticks = normalizedTicks(df, brickSize, symbolCol, datetimeCol, closeCol, tsUnit)
+    val p = if (numPartitions > 0) numPartitions else df.sparkSession.sparkContext.defaultParallelism
+    // a single series orders by t alone and keeps its constant key out of
+    // the shuffle, the sort and the cache: [[stitch]] supplies it
+    val (layout, order) =
+      if (symbolCol.isDefined) (ticks, Seq(col("symbol"), col("t")))
+      else (ticks.drop("symbol"), Seq(col("t")))
+    stitch(layout.repartitionByRange(p, order: _*).sortWithinPartitions(order: _*),
+      brickSize, dropFirst, prefixCap,
+      fromTicks(df, brickSize, symbolCol, datetimeCol, closeCol, tsUnit, dropFirst))
+  }
+
+  /** PARALLEL zero-shuffle scan for pre-sorted single-series input: the
+    * existing partitions ARE the ranges (contract: ascending time within
+    * each partition AND across partition index — a sorted file read or
+    * `spark.range`-shaped source), so [[stitch]] applies with NO exchange
+    * and NO sort at all. This is the sorted-tick-table path at cluster
+    * scale — [[fromSortedTicks]] stays the per-partition-independent-series
+    * form (bucketed multi-series tables); THIS is its single-giant-series
+    * twin. Output is bit-identical to `fromTicks` (ParallelScanSpec).
+    *
+    * The sorted contract is VALIDATED, not trusted (see [[stitch]]): unsorted
+    * input costs one wasted summary pass, never a wrong answer.
+    */
+  def fromSortedTicksParallel(
+      df: DataFrame,
+      brickSize: Double,
+      datetimeCol: String = "datetime",
+      closeCol: String = "close",
+      tsUnit: String = "us",
+      dropFirst: Boolean = true,
+      prefixCap: Int = 4096): DataFrame =
+    stitch(normalizedTicks(df, brickSize, None, datetimeCol, closeCol, tsUnit).drop("symbol"),
+      brickSize, dropFirst, prefixCap,
+      fromTicks(df, brickSize, None, datetimeCol, closeCol, tsUnit, dropFirst))._1
 
   /** Phase timings from the most recent parallel scans, drained by Bench to
-    * embed in its emitted JSON: the stderr `[scan-debug]` marks vanish into
-    * the driver log, but the bench ARTIFACT must carry the evidence that
-    * distinguishes a genuinely slow phase from host contention (r5 lesson:
-    * a 16.5 s artifact rep vs a 2 s re-run was adjudicable only by a manual
-    * re-run). Driver-side, tiny (3 entries per scan call).
+    * embed in its emitted JSON: the bench ARTIFACT must carry the evidence
+    * that distinguishes a genuinely slow phase from host contention (r5
+    * lesson: a 16.5 s artifact rep vs a 2 s re-run was adjudicable only by a
+    * manual re-run). Driver-side, tiny (a few entries per scan call).
     */
   private val phaseLog = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
   private val phaseLogSize = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -268,538 +253,243 @@ object Renko {
   }
 
   /** Diagnostics from the parallel scan's driver phase: whether the scan
-    * fell back to sequential, and how deep into each partition's prefix the
-    * sync-point search had to replay (Long.MaxValue = short partition fully
+    * fell back to sequential, and how deep into each run's prefix the
+    * sync-point search had to replay (Long.MaxValue = short run fully
     * replayed on the driver). The depth distribution is the empirical answer
     * to "does the synchronization argument hold on THIS data" — bounded
-    * depths mean the driver work stays O(partitions · depth) at any scale.
+    * depths mean the driver work stays O(runs · depth) at any scale.
     */
   final case class ParallelScanStats(fellBack: Boolean, syncDepths: Seq[Long])
 
-  private[graft] def fromTicksParallelWithStats(
-      df: DataFrame,
-      brickSize: Double,
-      datetimeCol: String = "datetime",
-      closeCol: String = "close",
-      tsUnit: String = "us",
-      dropFirst: Boolean = true,
-      numPartitions: Int = 0,
-      prefixCap: Int = 4096): (DataFrame, ParallelScanStats) = {
-    require(brickSize > 0, "brick_size cannot be 'None' or '<= 0'")
-    val spark = df.sparkSession
-    val p = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
-
-    // persist pins the sorted layout (job 2 MUST see the exact partitioning
-    // and intra-partition order job 1 summarized; MEMORY_AND_DISK spills
-    // rather than evicting, so partitions are never recomputed with
-    // reordered sort ties) and stores COLUMNAR compressed batches — a
-    // localCheckpoint would hold the rows as 100M+ deserialized objects
-    // (measured 2x slower end-to-end at 100M ticks from GC churn alone).
-    // The cache does NOT leak: the brick result is eagerly materialized
-    // below, after which the ticks are explicitly unpersisted — the entry
-    // lives only for the duration of this call.
-    import org.apache.spark.storage.StorageLevel
-    val ticks = df
-      .select(
-        toEpochMicros(df.schema(datetimeCol).dataType, col(datetimeCol), tsUnit).as("t"),
-        col(closeCol).cast(DoubleType).as("price"))
-      .repartitionByRange(p, col("t"))
-      .sortWithinPartitions(col("t"))
-      .select(col("t"), col("price"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    stitchSingleSeries(ticks, brickSize, dropFirst, prefixCap,
-      () => fromTicks(df, brickSize, None, datetimeCol, closeCol, tsUnit, dropFirst))
-  }
-
-  /** PARALLEL zero-shuffle scan for pre-sorted single-series input: the
-    * existing partitions ARE the ranges (contract: ascending time within
-    * each partition AND across partition index — a sorted file read or
-    * `spark.range`-shaped source), so the sync-point stitch of
-    * [[fromTicksParallel]] applies with NO exchange and NO sort at all:
-    * job 1 summaries per source partition, driver prefix replay, job 2
-    * suffix scan. This is the sorted-tick-table path at cluster scale —
-    * [[fromSortedTicks]] stays the per-partition-independent-series form
-    * (bucketed multi-series tables); THIS is its single-giant-series twin.
-    * Output is bit-identical to `fromTicks` (ParallelScanSpec).
-    *
-    * The sorted contract is VALIDATED, not trusted: job 1 records each
-    * partition's first/last timestamp and internal ordering, and any
-    * violation (unsorted partition, or partitions overlapping in time)
-    * falls back to the sequential plan — unsorted input costs one wasted
-    * summary pass, never a wrong answer.
+  /** Second-pass plan for one run: restore `syncSnap` and scan the ticks
+    * after run-local index `syncIdx`, shifting tick indices by `offset` (the
+    * symbol's ticks in earlier runs). `syncIdx = Long.MaxValue` marks a run
+    * fully replayed on the driver (no suffix work).
     */
-  def fromSortedTicksParallel(
-      df: DataFrame,
-      brickSize: Double,
-      datetimeCol: String = "datetime",
-      closeCol: String = "close",
-      tsUnit: String = "us",
-      dropFirst: Boolean = true,
-      prefixCap: Int = 4096): DataFrame = {
-    require(brickSize > 0, "brick_size cannot be 'None' or '<= 0'")
-    require(df.columns.contains(closeCol), s"Column '$closeCol' doesn't exist!")
-    require(df.columns.contains(datetimeCol), s"Column '$datetimeCol' doesn't exist!")
-    import org.apache.spark.storage.StorageLevel
-    // persist pins the source partitioning across the two jobs (same
-    // contract as the range-partitioned scan) — columnar batches, freed
-    // before return
-    val ticks = df
-      .select(
-        toEpochMicros(df.schema(datetimeCol).dataType, col(datetimeCol), tsUnit).as("t"),
-        col(closeCol).cast(DoubleType).as("price"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    stitchSingleSeries(ticks, brickSize, dropFirst, prefixCap,
-      () => fromTicks(df, brickSize, None, datetimeCol, closeCol, tsUnit, dropFirst))._1
-  }
+  private final case class Plan(syncIdx: Long, syncSnap: RenkoSnapshot, offset: Long)
 
-  /** The single-series stitch core shared by [[fromTicksParallel]] (range
-    * partition + sort first) and [[fromSortedTicksParallel]] (source
-    * partitions as-is): job 1 per-partition own-replay summaries, driver
-    * sync-point chaining, job 2 suffix scans. `ticks` must be a persisted
-    * (t, price) frame whose partitions are time-contiguous and ascending in
-    * partition index; `fallback` is the sequential plan used when some
-    * partition never synchronizes within its prefix.
-    */
-  private def stitchSingleSeries(
-      ticks: DataFrame,
-      brickSize: Double,
-      dropFirst: Boolean,
-      prefixCap: Int,
-      fallback: () => DataFrame): (DataFrame, ParallelScanStats) = {
-    val spark = ticks.sparkSession
-
-    implicit val rowEnc: Encoder[(Long, Double)] = Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)
-
-    // phase timing: ALWAYS recorded into the drainable phase log (3 entries
-    // per call — Bench embeds them in its JSON so a contention-polluted rep
-    // is self-diagnosing), printed to stderr only under GRAFT_SCAN_DEBUG.
-    // The parallel scan is 4 distinct Spark jobs and a driver phase; a slow
-    // run is diagnosable only if we can see WHICH phase absorbed the time.
-    val debug = sys.env.contains("GRAFT_SCAN_DEBUG")
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = {
-      val now = System.nanoTime()
-      val sec = (now - tMark) / 1e9
-      logPhase(phase, sec)
-      if (debug) System.err.println(f"[scan-debug] $phase%-18s $sec%7.3f s")
-      tMark = now
-    }
-
-    // job 1: per-partition own replay → summaries (small; bricks discarded)
-    val summaries = ticks.as[(Long, Double)].rdd
-      .mapPartitionsWithIndex { (pidx, it) =>
-        val pts = new ArrayBuffer[Long](64)
-        val pps = new ArrayBuffer[Double](64)
-        val snaps = new ArrayBuffer[RenkoSnapshot](64)
-        val eng = new RenkoEngine(brickSize)
-        val buf = new ArrayBuffer[Brick](4)
-        var n = 0L
-        var i = -1L
-        var firstTs = 0L
-        var lastTs = Long.MinValue
-        var inOrder = true
-        while (it.hasNext) {
-          val (ts, price) = it.next()
-          n += 1; i += 1
-          if (i == 0L) firstTs = ts
-          if (ts < lastTs) inOrder = false
-          lastTs = ts
-          if (i == 0L) {
-            eng.initAnchor(price)
-            if (i < prefixCap) { pts += ts; pps += price; snaps += null }
-          } else {
-            buf.clear()
-            val emitted = eng.step(ts, price, i, buf)
-            if (i < prefixCap) {
-              pts += ts; pps += price
-              snaps += (if (emitted > 0) eng.snapshot else null)
-            }
-          }
-        }
-        Iterator.single(PartSummary(pidx, n, pts.toArray, pps.toArray, snaps.toArray,
-          if (n > 0) eng.snapshot else null, n > 0, firstTs, lastTs, inOrder))
-      }
-      .collect()
-      .sortBy(_.pidx)
-    mark("job1 sort+summar")
-
-    // sorted-contract validation (free — job 1 captured the evidence): the
-    // stitch is only correct when partitions are internally nondecreasing
-    // and time-contiguous across partition index. fromTicksParallel's range
-    // partition + sort satisfies this by construction; the pre-sorted entry
-    // point trusts the caller, so a violated contract must fall back to the
-    // sequential plan rather than stitch wrong bricks.
-    {
-      var prevLast = Long.MinValue
-      var ok = true
-      for (s <- summaries if s.nTicks > 0) {
-        if (!s.sorted || s.firstTs < prevLast) ok = false
-        prevLast = s.lastTs
-      }
-      if (!ok) {
-        ticks.unpersist(blocking = true)
-        return (fallback(), ParallelScanStats(fellBack = true, Seq.empty))
-      }
-    }
-
-    // driver: chain exact entry states, replay prefixes, find sync points
-    val prefixBricks = new ArrayBuffer[BrickRow]()
-    val plans = new ArrayBuffer[Plan]()
-    var offset = 0L
-    var entry: Option[RenkoSnapshot] = None
-    var fellBack = false
-    for (s <- summaries if !fellBack && s.nTicks > 0) {
-      val eng = new RenkoEngine(brickSize)
-      entry.foreach(eng.restore)
-      val buf = new ArrayBuffer[Brick](4)
-      var j = 0
-      var sync = -1L
-      while (sync < 0 && j < s.prefixTs.length) {
-        if (j == 0 && entry.isEmpty) {
-          eng.initAnchor(s.prefixPrice(0))
-        } else {
-          buf.clear()
-          val emitted = eng.step(s.prefixTs(j), s.prefixPrice(j), offset + j, buf)
-          buf.foreach(b => prefixBricks += toRow("", b))
-          val own = s.prefixEmitSnap(j)
-          if (emitted > 0 && own != null) {
-            val d = eng.snapshot
-            // local-vs-global tick indices differ by `offset`; emission at j
-            // sets tickOpen = tickClose = j in each basis, so compare the
-            // price-state fields and the index fields modulo offset
-            if (d.lastRenko == own.lastRenko && d.lastDirection == own.lastDirection &&
-                d.wickMin == own.wickMin && d.wickMax == own.wickMax &&
-                d.volume == own.volume &&
-                d.tickOpen == own.tickOpen + offset && d.tickClose == own.tickClose + offset)
-              sync = j
-          }
-        }
-        j += 1
-      }
-      if (sync < 0 && s.nTicks <= s.prefixTs.length) {
-        // short partition: the driver replayed it fully — exact, no suffix
-        plans += Plan(s.pidx, Long.MaxValue, null, offset)
-        entry = Some(eng.snapshot)
-      } else if (sync < 0) {
-        fellBack = true // prefix exhausted without sync — sequential fallback
-      } else {
-        plans += Plan(s.pidx, sync, s.prefixEmitSnap(sync.toInt), offset)
-        entry = Some(RenkoSnapshot(
-          s.exit.lastRenko, s.exit.lastDirection, s.exit.wickMin, s.exit.wickMax,
-          s.exit.volume, s.exit.tickOpen + offset, s.exit.tickClose + offset))
-      }
-      offset += s.nTicks
-    }
-    mark("driver stitch")
-    if (fellBack) {
-      ticks.unpersist(blocking = true)
-      return (fallback(), ParallelScanStats(fellBack = true, plans.toSeq.map(_.syncIdx)))
-    }
-
-    // job 2: suffix scan per partition from the synced snapshot
-    val planByPidx = plans.map(pl => pl.pidx -> pl).toMap
-    val bcPlans = spark.sparkContext.broadcast(planByPidx)
-    // spill/GC evidence for the job2 diagnosis (r12 verdict: a twice-
-    // observed "job2 suffix+ckpt" spike needed a cause channel, not another
-    // adjudication): the pinned ticks' cache residency BEFORE job 2 runs —
-    // a nonzero disk share means the MEMORY_AND_DISK persist spilled and
-    // the suffix scan re-reads disk blocks — plus the JVM GC time absorbed
-    // by the job2 phase. Both ride the phase log into the bench's per-rep
-    // diag, so a slow rep carries its cause inside the artifact.
-    locally {
-      val infos = spark.sparkContext.getRDDStorageInfo
-      logPhase("cacheMemMB", infos.map(_.memSize).sum / 1e6)
-      logPhase("cacheDiskMB", infos.map(_.diskSize).sum / 1e6)
-    }
-    val gcBeforeJob2 = gcMillis()
-    val suffixRdd = ticks.as[(Long, Double)].rdd
-      .mapPartitionsWithIndex { (pidx, it) =>
-        bcPlans.value.get(pidx) match {
-          case None => Iterator.empty
-          case Some(pl) if pl.syncIdx == Long.MaxValue => Iterator.empty
-          case Some(pl) =>
-            val eng = new RenkoEngine(brickSize)
-            eng.restore(pl.syncSnap)
-            var j = 0L
-            val skipped = it.dropWhile { _ => val keep = j <= pl.syncIdx; if (keep) j += 1; keep }
-            val buf = new ArrayBuffer[Brick](4)
-            new Iterator[BrickRow] {
-              private var pos = 0
-              override def hasNext: Boolean = {
-                while (pos >= buf.length) {
-                  if (!skipped.hasNext) return false
-                  val (ts, price) = skipped.next()
-                  buf.clear(); pos = 0
-                  eng.step(ts, price, j, buf)
-                  j += 1
-                }
-                true
-              }
-              override def next(): BrickRow = {
-                if (!hasNext) throw new NoSuchElementException
-                val b = buf(pos); pos += 1
-                // shift local tick indices into the global basis
-                toRow("", b.copy(
-                  tickIndexOpen = b.tickIndexOpen + pl.offset,
-                  tickIndexClose = b.tickIndexClose + pl.offset))
-              }
-            }
-        }
-      }
-
-    val prefixDf = spark.createDataset(prefixBricks.toSeq)(brickEnc).toDF()
-    val suffixDf = spark.createDataFrame(suffixRdd)
-    // eagerly materialize the bricks (orders of magnitude smaller than the
-    // ticks): the suffix scan then runs exactly once even though the
-    // drop-first rule reads the result twice (min-ts aggregate + anti-join),
-    // and the returned plan no longer references the ticks at all — which
-    // is what makes the immediate unpersist below safe. The brick blocks
-    // themselves are RDD-level (localCheckpoint), freed by the
-    // ContextCleaner once the caller drops the result.
-    // per-task histogram + driver-gap split + stall watchdog (r13 verdict:
-    // the spike shows zero spill/GC — the remaining suspects are straggler
-    // tasks, scheduler starvation, and driver-side checkpoint bookkeeping,
-    // which this window separates as taskMax/launchGap/postGap)
-    val all = graft.util.StallDiag.watch(spark, "job2", logPhase) {
-      widen(prefixDf.unionByName(suffixDf)).localCheckpoint(true)
-    }
-    logPhase("job2GcSec", (gcMillis() - gcBeforeJob2) / 1e3)
-    mark("job2 suffix+ckpt")
-    ticks.unpersist(blocking = true)
-    val result = if (!dropFirst) all
-    else {
-      // ts is nondecreasing in emission order, so the first emitted brick's
-      // timestamp is the global minimum — reference drop rule (renkodf.py:69)
-      val fts = all.agg(min(col("datetime")).as("__fts"))
-      all.join(broadcast(fts), col("datetime") === col("__fts"), "left_anti")
-    }
-    (result, ParallelScanStats(fellBack = false, plans.toSeq.map(_.syncIdx)))
-  }
-
-  /** One contiguous same-symbol run inside a range partition, summarized by
-    * the multi-series parallel scan's first pass (the per-symbol analogue of
-    * [[PartSummary]]). Prefix arrays and snapshots are run-local.
+  /** First-pass summary of one contiguous same-symbol run of a partition,
+    * from the run's own replay off a fresh anchor. Prefix arrays, snapshots
+    * and indices are run-local.
     */
   private final case class RunSummary(
+      pidx: Int,
       symbol: String,
       nTicks: Long,
       prefixTs: Array[Long],
       prefixPrice: Array[Double],
+      // own-replay snapshot AFTER each prefix tick; null slot = that tick
+      // emitted nothing under the own replay
       prefixEmitSnap: Array[RenkoSnapshot],
-      exit: RenkoSnapshot)
+      exit: RenkoSnapshot,
+      // sorted-contract evidence, captured for free during the scan
+      firstTs: Long,
+      lastTs: Long,
+      sorted: Boolean)
 
-  private final case class MultiPartSummary(pidx: Int, runs: Array[RunSummary])
-
-  /** Multi-series generalization of the parallel scan: N series, each
-    * potentially too large for `fromTicks`'s one-task-per-series layout, are
-    * range-partitioned TOGETHER on `(symbol, t)` — so one giant series still
-    * spreads over many partitions — and stitched per symbol with the same
-    * sync-point argument as the single-series scan (the fold synchronizes on
-    * any emission; a series' entry state only influences a short prefix of
-    * each of its runs).
+  /** The sync-point stitch behind every parallel entry point. Renko's fold
+    * is not associative, but it SYNCHRONIZES: when a tick emits a brick, the
+    * post-tick state is fully determined by that tick and the emission
+    * (`volume = 1`, `tickOpen = tickClose = i`, wick reset to the brick
+    * boundary, `lastRenko`/`direction` from the brick) — the entry state
+    * only influences a short prefix. So:
     *
-    * Target shape: a FEW simultaneously-huge series (the 100 TB case the
-    * single-series scan could only handle one-at-a-time). For MANY small
-    * series `fromTicks` is already parallel (one series per task) and
-    * cheaper — driver stitch work here is O(runs · syncDepth) and runs grow
-    * with the symbol count.
+    *  1. job 1: each same-symbol run of each partition replays its own ticks
+    *     from a fresh anchor and reports a [[RunSummary]] — tiny, bricks are
+    *     not materialized;
+    *  2. the driver chains each symbol's exact entry states across its runs,
+    *     replaying only each run's prefix until the true trajectory and the
+    *     own replay both emit at the same tick with identical state (the
+    *     sync point) — typically a handful of ticks;
+    *  3. job 2: each run restores its synced snapshot and re-scans only its
+    *     suffix in parallel; driver-computed prefix bricks (a few per run)
+    *     are unioned in.
     *
-    * Output is bit-identical to `fromTicks(df, …, symbolCol = Some(…))`
-    * (ParallelScanSpec); any run failing to sync within its prefix falls
-    * back to the sequential path, like the single-series scan.
+    * `layout` holds (symbol, t, price) rows — without `symbol` for a single
+    * series, whose key is the constant "" — and must place each symbol's
+    * ticks in runs that are internally nondecreasing in t and do not overlap
+    * in time in partition order. The range partition + sort of
+    * [[parallelScan]] satisfies this by construction; a pre-sorted source is
+    * checked against job 1's evidence, and any violation — or a run that
+    * never synchronizes within its prefix — returns `fallback`, the
+    * sequential plan, instead of stitching wrong bricks.
     */
-  private[graft] def fromTicksParallelMultiWithStats(
-      df: DataFrame,
+  private def stitch(
+      layout: DataFrame,
       brickSize: Double,
-      symbolCol: String,
-      datetimeCol: String = "datetime",
-      closeCol: String = "close",
-      tsUnit: String = "us",
-      dropFirst: Boolean = true,
-      numPartitions: Int = 0,
-      prefixCap: Int = 4096): (DataFrame, ParallelScanStats) = {
-    require(brickSize > 0, "brick_size cannot be 'None' or '<= 0'")
-    val spark = df.sparkSession
-    val p = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
-
-    // same persist rationale as the single-series scan: job 2 must see the
-    // exact partitioning and intra-partition order job 1 summarized
-    import org.apache.spark.storage.StorageLevel
-    val ticks = df
-      .select(
-        col(symbolCol).cast(StringType).as("symbol"),
-        toEpochMicros(df.schema(datetimeCol).dataType, col(datetimeCol), tsUnit).as("t"),
-        col(closeCol).cast(DoubleType).as("price"))
-      .repartitionByRange(p, col("symbol"), col("t"))
-      .sortWithinPartitions(col("symbol"), col("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // same phase log as the single-series scan: Bench embeds these in its
-    // self-diagnosis JSON, so this path's reps carry their cause too
-    val debug = sys.env.contains("GRAFT_SCAN_DEBUG")
+      dropFirst: Boolean,
+      prefixCap: Int,
+      fallback: => DataFrame): (DataFrame, ParallelScanStats) = {
+    val spark = layout.sparkSession
+    // phase timing into the drainable phase log (Bench embeds it in its
+    // JSON, so a contention-polluted rep is self-diagnosing): the scan is
+    // several Spark jobs and a driver phase, and a slow run is diagnosable
+    // only if we can see WHICH phase absorbed the time
     var tMark = System.nanoTime()
     def mark(phase: String): Unit = {
       val now = System.nanoTime()
-      val sec = (now - tMark) / 1e9
-      logPhase(phase, sec)
-      if (debug) System.err.println(f"[scan-debug] $phase%-18s $sec%7.3f s")
+      logPhase(phase, (now - tMark) / 1e9)
       tMark = now
     }
 
-    // job 1: per-partition, per same-symbol run: own replay from a fresh
-    // anchor → (prefix ticks, per-tick emission snapshots, exit state)
-    val summaries = ticks.as[Tick].rdd
-      .mapPartitionsWithIndex { (pidx, it) =>
+    // persist pins the layout (job 2 MUST see the exact partitioning and
+    // intra-partition order job 1 summarized; MEMORY_AND_DISK spills rather
+    // than evicting, so partitions are never recomputed with reordered sort
+    // ties) and stores COLUMNAR compressed batches — a localCheckpoint would
+    // hold the rows as 100M+ deserialized objects (measured 2x slower
+    // end-to-end at 100M ticks from GC churn alone). Every exit unpersists
+    // it; the success path first materializes the bricks, so the returned
+    // plan no longer references the ticks.
+    val pinned = layout.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // internal rows, not a typed decode: the run key is compared per tick
+      // in its UTF-8 form and decoded to a String once per run
+      val keyCol = if (pinned.columns.contains("symbol")) col("symbol") else lit("")
+      val rows = pinned.select(keyCol, col("t"), col("price")).queryExecution.toRdd
+
+      // job 1: per partition, per same-symbol run: own replay from a fresh
+      // anchor → (prefix ticks, per-tick emission snapshots, exit state)
+      val summaries = rows.mapPartitionsWithIndex { (pidx, it) =>
         val runs = new ArrayBuffer[RunSummary](4)
         val pts = new ArrayBuffer[Long](64)
         val pps = new ArrayBuffer[Double](64)
         val snaps = new ArrayBuffer[RenkoSnapshot](64)
         val buf = new ArrayBuffer[Brick](4)
         var eng: RenkoEngine = null
-        var sym: String = null
-        var n = 0L
-        var i = -1L
-        def closeRun(): Unit = if (eng != null && n > 0) {
-          runs += RunSummary(sym, n, pts.toArray, pps.toArray, snaps.toArray, eng.snapshot)
-        }
+        var key: UTF8String = null
+        var n, firstTs, lastTs = 0L
+        var sorted = true
+        def closeRun(): Unit = if (eng != null) runs += RunSummary(pidx, keyString(key), n,
+          pts.toArray, pps.toArray, snaps.toArray, eng.snapshot, firstTs, lastTs, sorted)
         while (it.hasNext) {
-          val tk = it.next()
-          if (eng == null || tk.symbol != sym) {
+          val row = it.next()
+          if (row.isNullAt(1) || row.isNullAt(2))
+            throw new IllegalArgumentException("ticks need a non-null datetime and close")
+          val ts = row.getLong(1)
+          val price = row.getDouble(2)
+          val k = row.getUTF8String(0)
+          val emitted = if (eng == null || k != key) {
             closeRun()
-            sym = tk.symbol
+            key = if (k == null) null else k.clone()
             eng = new RenkoEngine(brickSize)
-            n = 0L; i = -1L
+            eng.initAnchor(price)
+            n = 0L; firstTs = ts; lastTs = ts; sorted = true
             pts.clear(); pps.clear(); snaps.clear()
-          }
-          n += 1; i += 1
-          if (i == 0L) {
-            eng.initAnchor(tk.price)
-            if (i < prefixCap) { pts += tk.t; pps += tk.price; snaps += null }
+            0
           } else {
+            if (ts < lastTs) sorted = false
+            lastTs = ts
             buf.clear()
-            val emitted = eng.step(tk.t, tk.price, i, buf)
-            if (i < prefixCap) {
-              pts += tk.t; pps += tk.price
-              snaps += (if (emitted > 0) eng.snapshot else null)
-            }
+            eng.step(ts, price, n, buf)
           }
+          if (n < prefixCap) {
+            pts += ts; pps += price
+            snaps += (if (emitted > 0) eng.snapshot else null)
+          }
+          n += 1
         }
         closeRun()
-        Iterator.single(MultiPartSummary(pidx, runs.toArray))
+        runs.iterator
+      }.collect()
+      mark("job1 sort+summar")
+
+      // driver: a symbol's runs arrive in partition order. Check the layout
+      // contract, then chain exact entry states and find the sync points
+      val runsBySym = summaries.groupBy(_.symbol)
+      var fellBack = !runsBySym.values.forall { runs =>
+        runs.forall(_.sorted) && runs.zip(runs.drop(1)).forall { case (a, b) => a.lastTs <= b.firstTs }
       }
-      .collect()
-      .sortBy(_.pidx)
-    mark("job1 sort+summar")
-
-    // driver: group runs per symbol (runs arrive in partition order; range
-    // partitioning on (symbol, t) keeps each symbol's runs consecutive) and
-    // chain each symbol exactly like the single-series stitch
-    val runsBySym = new scala.collection.mutable.LinkedHashMap[String, ArrayBuffer[(Int, RunSummary)]]()
-    for (ps <- summaries; r <- ps.runs)
-      runsBySym.getOrElseUpdate(r.symbol, new ArrayBuffer) += ((ps.pidx, r))
-
-    val prefixBricks = new ArrayBuffer[BrickRow]()
-    val plans = new scala.collection.mutable.HashMap[(Int, String), Plan]()
-    val syncDepths = new ArrayBuffer[Long]()
-    var fellBack = false
-    for ((sym, runs) <- runsBySym if !fellBack) {
-      var offset = 0L
-      var entry: Option[RenkoSnapshot] = None
-      for ((pidx, s) <- runs if !fellBack) {
-        val eng = new RenkoEngine(brickSize)
-        entry.foreach(eng.restore)
-        val buf = new ArrayBuffer[Brick](4)
-        var j = 0
-        var sync = -1L
-        while (sync < 0 && j < s.prefixTs.length) {
-          if (j == 0 && entry.isEmpty) {
-            eng.initAnchor(s.prefixPrice(0))
-          } else {
-            buf.clear()
-            val emitted = eng.step(s.prefixTs(j), s.prefixPrice(j), offset + j, buf)
-            buf.foreach(b => prefixBricks += toRow(sym, b))
-            val own = s.prefixEmitSnap(j)
-            if (emitted > 0 && own != null) {
-              val d = eng.snapshot
-              if (d.lastRenko == own.lastRenko && d.lastDirection == own.lastDirection &&
-                  d.wickMin == own.wickMin && d.wickMax == own.wickMax &&
-                  d.volume == own.volume &&
-                  d.tickOpen == own.tickOpen + offset && d.tickClose == own.tickClose + offset)
-                sync = j
+      val prefixBricks = new ArrayBuffer[BrickRow]()
+      val plans = new scala.collection.mutable.HashMap[(Int, String), Plan]()
+      val syncDepths = new ArrayBuffer[Long]()
+      for (sym <- summaries.map(_.symbol).distinct if !fellBack) {
+        var offset = 0L
+        var entry: RenkoSnapshot = null
+        for (s <- runsBySym(sym) if !fellBack) {
+          val eng = new RenkoEngine(brickSize)
+          if (entry != null) eng.restore(entry)
+          val buf = new ArrayBuffer[Brick](4)
+          var j = 0
+          var sync = -1
+          while (sync < 0 && j < s.prefixTs.length) {
+            if (j == 0 && entry == null) eng.initAnchor(s.prefixPrice(0))
+            else {
+              buf.clear()
+              val emitted = eng.step(s.prefixTs(j), s.prefixPrice(j), offset + j, buf)
+              buf.foreach(b => prefixBricks += toRow(sym, b))
+              val own = s.prefixEmitSnap(j)
+              // emission at j sets tickOpen = tickClose = j in both index
+              // bases, which differ by `offset`
+              if (emitted > 0 && own != null && eng.snapshot == shifted(own, offset)) sync = j
             }
+            j += 1
           }
-          j += 1
+          if (sync >= 0) {
+            plans((s.pidx, sym)) = Plan(sync, s.prefixEmitSnap(sync), offset)
+            syncDepths += sync
+            entry = shifted(s.exit, offset)
+          } else if (s.nTicks <= s.prefixTs.length) {
+            // short run: the driver replayed it fully — exact, no suffix
+            plans((s.pidx, sym)) = Plan(Long.MaxValue, null, offset)
+            syncDepths += Long.MaxValue
+            entry = eng.snapshot
+          } else fellBack = true // prefix exhausted without sync
+          offset += s.nTicks
         }
-        if (sync < 0 && s.nTicks <= s.prefixTs.length) {
-          plans((pidx, sym)) = Plan(pidx, Long.MaxValue, null, offset)
-          syncDepths += Long.MaxValue
-          entry = Some(eng.snapshot)
-        } else if (sync < 0) {
-          fellBack = true
-        } else {
-          plans((pidx, sym)) = Plan(pidx, sync, s.prefixEmitSnap(sync.toInt), offset)
-          syncDepths += sync
-          entry = Some(RenkoSnapshot(
-            s.exit.lastRenko, s.exit.lastDirection, s.exit.wickMin, s.exit.wickMax,
-            s.exit.volume, s.exit.tickOpen + offset, s.exit.tickClose + offset))
-        }
-        offset += s.nTicks
       }
-    }
-    mark("driver stitch")
-    if (fellBack) {
-      ticks.unpersist(blocking = true)
-      return (fromTicks(df, brickSize, Some(symbolCol), datetimeCol, closeCol, tsUnit, dropFirst),
-        ParallelScanStats(fellBack = true, syncDepths.toSeq))
-    }
+      mark("driver stitch")
+      if (fellBack) return (fallback, ParallelScanStats(fellBack = true, syncDepths.toSeq))
 
-    // job 2: per partition, per run: restore the synced snapshot, skip the
-    // driver-replayed prefix, scan the suffix with symbol-global indices
-    val bcPlans = spark.sparkContext.broadcast(plans.toMap)
-    // same spill/GC evidence channel as the single-series stitch — this IS
-    // the path whose "job2 suffix+ckpt" spiked in r11/r12 sweeps
-    locally {
-      val infos = spark.sparkContext.getRDDStorageInfo
-      logPhase("cacheMemMB", infos.map(_.memSize).sum / 1e6)
-      logPhase("cacheDiskMB", infos.map(_.diskSize).sum / 1e6)
-    }
-    val gcBeforeJob2 = gcMillis()
-    val suffixRdd = ticks.as[Tick].rdd
-      .mapPartitionsWithIndex { (pidx, it) =>
+      // job 2: per partition, per run: restore the synced snapshot, skip the
+      // driver-replayed prefix, scan the suffix with symbol-global indices
+      val bcPlans = spark.sparkContext.broadcast(plans.toMap)
+      // spill/GC evidence for a slow job 2: the pinned ticks' cache
+      // residency before it runs (a nonzero disk share means the persist
+      // spilled and the suffix scan re-reads disk blocks) and the JVM GC
+      // time it absorbs — both ride the phase log into the bench's diag
+      locally {
+        val infos = spark.sparkContext.getRDDStorageInfo
+        logPhase("cacheMemMB", infos.map(_.memSize).sum / 1e6)
+        logPhase("cacheDiskMB", infos.map(_.diskSize).sum / 1e6)
+      }
+      val gcBeforeJob2 = gcMillis()
+      val suffixRdd = rows.mapPartitionsWithIndex { (pidx, it) =>
         val pm = bcPlans.value
-        val in = it.buffered
         new Iterator[BrickRow] {
           private val buf = new ArrayBuffer[Brick](4)
           private var pos = 0
-          private var eng: RenkoEngine = null
+          private var inRun = false
+          private var key: UTF8String = null
           private var sym: String = null
           private var plan: Plan = null
+          private var eng: RenkoEngine = null
           private var j = 0L
           override def hasNext: Boolean = {
             while (pos >= buf.length) {
-              if (!in.hasNext) return false
-              if (sym == null || in.head.symbol != sym) {
-                sym = in.head.symbol
-                plan = pm.getOrElse((pidx, sym), null)
+              if (!it.hasNext) return false
+              val row = it.next()
+              val k = row.getUTF8String(0)
+              if (!inRun || k != key) {
+                inRun = true
+                key = if (k == null) null else k.clone()
+                sym = keyString(key)
+                plan = pm((pidx, sym))
+                eng = if (plan.syncIdx == Long.MaxValue) null
+                  else { val e = new RenkoEngine(brickSize); e.restore(plan.syncSnap); e }
                 j = 0L
-                eng = if (plan != null && plan.syncIdx != Long.MaxValue) {
-                  val e = new RenkoEngine(brickSize); e.restore(plan.syncSnap); e
-                } else null
               }
-              if (eng == null || j <= plan.syncIdx) { in.next(); j += 1 }
-              else {
-                val tk = in.next()
+              if (eng != null && j > plan.syncIdx) {
                 buf.clear(); pos = 0
-                eng.step(tk.t, tk.price, j, buf)
-                j += 1
+                eng.step(row.getLong(1), row.getDouble(2), j, buf)
               }
+              j += 1
             }
             true
           }
           override def next(): BrickRow = {
             if (!hasNext) throw new NoSuchElementException
             val b = buf(pos); pos += 1
+            // shift run-local tick indices into the symbol's global basis
             toRow(sym, b.copy(
               tickIndexOpen = b.tickIndexOpen + plan.offset,
               tickIndexClose = b.tickIndexClose + plan.offset))
@@ -807,34 +497,48 @@ object Renko {
         }
       }
 
-    val prefixDf = spark.createDataset(prefixBricks.toSeq)(brickEnc).toDF()
-    val suffixDf = spark.createDataFrame(suffixRdd)
-    // same eager-materialization rationale as the single-series scan
-    // per-task histogram + driver-gap split + stall watchdog (r13 verdict:
-    // the spike shows zero spill/GC — the remaining suspects are straggler
-    // tasks, scheduler starvation, and driver-side checkpoint bookkeeping,
-    // which this window separates as taskMax/launchGap/postGap)
-    val all = graft.util.StallDiag.watch(spark, "job2", logPhase) {
-      widen(prefixDf.unionByName(suffixDf)).localCheckpoint(true)
-    }
-    logPhase("job2GcSec", (gcMillis() - gcBeforeJob2) / 1e3)
-    mark("job2 suffix+ckpt")
-    ticks.unpersist(blocking = true)
-    val result = if (!dropFirst) all
-    else {
-      // per-symbol drop rule: ts is nondecreasing in each symbol's emission
-      // order, so the first emitted brick's timestamp is that symbol's min
-      val fts = all.groupBy(col("symbol")).agg(min(col("datetime")).as("__fts"))
-        .withColumnRenamed("symbol", "__sym")
-      all.join(broadcast(fts),
-        col("symbol") === col("__sym") && col("datetime") === col("__fts"), "left_anti")
-    }
-    (result, ParallelScanStats(fellBack = false, syncDepths.toSeq))
+      val prefixDf = spark.createDataset(prefixBricks.toSeq)(brickEnc).toDF()
+      val suffixDf = spark.createDataFrame(suffixRdd)
+      // eagerly materialize the bricks (orders of magnitude smaller than the
+      // ticks): the suffix scan then runs exactly once even though the
+      // drop-first rule reads the result twice (min-ts aggregate + anti-join),
+      // and the returned plan no longer references the ticks at all — which
+      // is what makes the unpersist on exit safe. The brick blocks
+      // themselves are RDD-level (localCheckpoint), freed by the
+      // ContextCleaner once the caller drops the result. StallDiag adds a
+      // per-task histogram, the driver-gap split (taskMax/launchGap/postGap)
+      // and a stall watchdog around job 2.
+      val all = graft.util.StallDiag.watch(spark, "job2", logPhase) {
+        widen(prefixDf.unionByName(suffixDf)).localCheckpoint(true)
+      }
+      logPhase("job2GcSec", (gcMillis() - gcBeforeJob2) / 1e3)
+      mark("job2 suffix+ckpt")
+      val result = if (!dropFirst) all
+      else {
+        // per-symbol drop rule (renkodf.py:69): ts is nondecreasing in each
+        // symbol's emission order, so the first emitted brick's timestamp is
+        // that symbol's min
+        val fts = all.groupBy(col("symbol")).agg(min(col("datetime")).as("__fts"))
+          .withColumnRenamed("symbol", "__sym")
+        all.join(broadcast(fts),
+          col("symbol") === col("__sym") && col("datetime") === col("__fts"), "left_anti")
+      }
+      (result, ParallelScanStats(fellBack = false, syncDepths.toSeq))
+    } finally pinned.unpersist(blocking = true)
   }
+
+  /** A snapshot with its tick indices moved `offset` ticks later. */
+  private def shifted(s: RenkoSnapshot, offset: Long): RenkoSnapshot =
+    s.copy(tickOpen = s.tickOpen + offset, tickClose = s.tickClose + offset)
+
+  private def keyString(k: UTF8String): String = if (k == null) null else k.toString
 
   /** Scan one pre-ordered partition: split into consecutive same-symbol runs
     * and scan each run as an independent series, lazily, in one flat
-    * iterator (no per-series iterator nesting).
+    * iterator (no per-series iterator nesting). Implements the reference's
+    * drop-first-label epilogue (renkodf.py:69) per run: *every* brick
+    * carrying the first emitted timestamp is dropped — with a multi-brick
+    * first gap this can legally produce an empty series.
     */
   private[graft] def scanPartition(
       it: Iterator[Tick],
@@ -882,6 +586,27 @@ object Renko {
     }
   }
 
+  /** The reference's argument checks (renkodf.py) and the one input shape
+    * every entry point scans: (symbol, t = epoch µs, price), with the
+    * constant key "" for a single series. Extra columns are pruned here,
+    * before any typed operator Catalyst cannot push a projection through.
+    */
+  private def normalizedTicks(
+      df: DataFrame,
+      brickSize: Double,
+      symbolCol: Option[String],
+      datetimeCol: String,
+      closeCol: String,
+      tsUnit: String): DataFrame = {
+    require(brickSize > 0, "brick_size cannot be 'None' or '<= 0'")
+    require(df.columns.contains(closeCol), s"Column '$closeCol' doesn't exist!")
+    require(df.columns.contains(datetimeCol), s"Column '$datetimeCol' doesn't exist!")
+    df.select(
+      symbolCol.map(c => col(c).cast(StringType)).getOrElse(lit("")).as("symbol"),
+      toEpochMicros(df.schema(datetimeCol).dataType, col(datetimeCol), tsUnit).as("t"),
+      col(closeCol).cast(DoubleType).as("price"))
+  }
+
   /** Epoch-µs conversion for the supported datetime representations. The
     * reference's `ts_unit ∈ {D, s, ms, us, ns}` (renkodf.py:454-455) applies
     * to integer columns; TIMESTAMP columns carry their own unit.
@@ -913,52 +638,6 @@ object Renko {
       case c => col(c)
     }
     df.select(cols: _*)
-  }
-
-  /** Scan one ordered series. Lazy: pulls ticks and yields bricks without
-    * materializing either side, so a series larger than memory still scans
-    * in O(state). Implements the reference's drop-first-label epilogue
-    * (renkodf.py:69): *every* brick carrying the first emitted timestamp is
-    * dropped — with a multi-brick first gap this can legally produce an
-    * empty series.
-    */
-  private[graft] def scanSeries(
-      sym: String,
-      ticks: Iterator[Tick],
-      brickSize: Double,
-      dropFirst: Boolean): Iterator[BrickRow] = {
-    if (!ticks.hasNext) return Iterator.empty
-    val eng = new RenkoEngine(brickSize)
-    eng.initAnchor(ticks.next().price)
-
-    val raw: Iterator[Brick] = new Iterator[Brick] {
-      private val buf = new ArrayBuffer[Brick](4)
-      private var pos = 0
-      private var i = 0L // reference loop index; first tick was i = 0
-
-      override def hasNext: Boolean = {
-        while (pos >= buf.length && ticks.hasNext) {
-          buf.clear(); pos = 0
-          val t = ticks.next()
-          i += 1
-          eng.step(t.t, t.price, i, buf)
-        }
-        pos < buf.length
-      }
-      override def next(): Brick = {
-        if (!hasNext) throw new NoSuchElementException
-        val b = buf(pos); pos += 1; b
-      }
-    }
-
-    var firstTs = Long.MinValue
-    var haveFirst = false
-    raw
-      .filter { b =>
-        if (!haveFirst) { firstTs = b.ts; haveFirst = true }
-        !(dropFirst && b.ts == firstTs)
-      }
-      .map(toRow(sym, _))
   }
 
   private def toRow(sym: String, b: Brick): BrickRow = BrickRow(

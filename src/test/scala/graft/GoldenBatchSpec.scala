@@ -48,7 +48,7 @@ class GoldenBatchSpec extends SparkTestBase {
   }
 
   private lazy val eurgbpWide: DataFrame = {
-    val ticks = spark.read.parquet("/root/reference/examples/data/EURGBP_T1_cT.parquet")
+    val ticks = spark.read.parquet(ReferenceData.path("EURGBP_T1_cT.parquet"))
       .withColumnRenamed("bid", "close")
     Renko.fromTicks(ticks, 0.0003)
   }
@@ -58,7 +58,7 @@ class GoldenBatchSpec extends SparkTestBase {
   }
 
   test("US30 57.6k ticks, brick 5: 693 bricks bit-exact") {
-    val ticks = spark.read.parquet("/root/reference/examples/data/US30_T1_cT.parquet")
+    val ticks = spark.read.parquet(ReferenceData.path("US30_T1_cT.parquet"))
       .withColumnRenamed("bid", "close")
     assertMatchesGolden(Renko.fromTicks(ticks, 5), s"$golden/us30_wide.parquet")
   }
@@ -131,10 +131,21 @@ class GoldenBatchSpec extends SparkTestBase {
   test("validation errors mirror the reference") {
     val ticks = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .select(col("ts").as("datetime"), col("value").as("close"))
-    assert(intercept[IllegalArgumentException](Renko.fromTicks(ticks, 0.0))
-      .getMessage.contains("brick_size"))
-    assert(intercept[IllegalArgumentException](
-      Renko.fromTicks(ticks.drop("close"), 1.0)).getMessage.contains("close"))
+    // every public batch entry point validates with the reference's messages
+    val entryPoints: Seq[(String, (DataFrame, Double) => DataFrame)] = Seq(
+      "fromTicks" -> ((d, b) => Renko.fromTicks(d, b)),
+      "fromSortedTicks" -> ((d, b) => Renko.fromSortedTicks(d, b)),
+      "fromTicksParallel" -> ((d, b) => Renko.fromTicksParallel(d, b)),
+      "fromTicksParallel(symbolCol)" -> ((d, b) =>
+        Renko.fromTicksParallel(d.withColumn("symbol", lit("s")), b, symbolCol = Some("symbol"))),
+      "fromSortedTicksParallel" -> ((d, b) => Renko.fromSortedTicksParallel(d, b)))
+    for ((name, scan) <- entryPoints) {
+      def message(d: DataFrame, b: Double): String =
+        intercept[IllegalArgumentException](scan(d, b)).getMessage
+      assert(message(ticks, 0.0).contains("brick_size cannot be 'None' or '<= 0'"), name)
+      assert(message(ticks.drop("close"), 1.0).contains("Column 'close' doesn't exist!"), name)
+      assert(message(ticks.drop("datetime"), 1.0).contains("Column 'datetime' doesn't exist!"), name)
+    }
     // divide_by parity (renkodf.py:44-45): validated, semantically ignored
     assert(intercept[IllegalArgumentException](
       Renko.fromTicks(ticks, 25.0, tsUnit = "ns", divideBy = 0))

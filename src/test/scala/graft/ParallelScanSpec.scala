@@ -14,11 +14,27 @@ import org.apache.spark.sql.functions._
   */
 class ParallelScanSpec extends SparkTestBase {
 
+  /** Runs `scan` and asserts it leaves no persisted RDD behind except the
+    * checkpointed bricks its own result reads: the stitch pins its ticks
+    * for the two jobs and must free them on every exit (success, no-sync
+    * fallback, sorted-contract fallback).
+    */
+  private def noCacheLeft(scan: => DataFrame): DataFrame = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = scan
+    val own = out.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before -- own
+    assert(left.isEmpty, s"persisted RDDs left behind: ${left.map(spark.sparkContext.getPersistentRDDs)}")
+    out
+  }
+
   private def assertSame(df: DataFrame, brick: Double, parts: Int, cap: Int = 4096): Unit = {
     val seqOut = Renko.fromTicks(df, brick)
       .orderBy(col("datetime"), (col("close") * col("direction")).asc)
       .collect()
-    val parOut = Renko.fromTicksParallel(df, brick, numPartitions = parts, prefixCap = cap)
+    val parOut = noCacheLeft(Renko.fromTicksParallel(df, brick, numPartitions = parts, prefixCap = cap))
       .orderBy(col("datetime"), (col("close") * col("direction")).asc)
       .collect()
     assert(seqOut.length == parOut.length,
@@ -77,7 +93,7 @@ class ParallelScanSpec extends SparkTestBase {
     val bursty = walk(20000).withColumn("datetime",
       col("datetime") + (col("datetime") / lit(500000L)) * lit(86400000000L))
     assertSame(bursty, 2.0, 8)
-    val (_, stats) = Renko.fromTicksParallelWithStats(bursty, 2.0, numPartitions = 8)
+    val (_, stats) = Renko.parallelScan(bursty, 2.0, numPartitions = 8)
     assert(!stats.fellBack)
     val real = stats.syncDepths.filter(_ != Long.MaxValue)
     assert(real.nonEmpty && real.forall(_ < 4096),
@@ -135,8 +151,8 @@ class ParallelScanSpec extends SparkTestBase {
       .toDF("symbol", "datetime", "close")
     val df = multiWalk(5000, Seq("MOVES")).unionByName(flat)
     assertSameMulti(df, 1.0, 4, cap = 64)
-    val (_, stats) = Renko.fromTicksParallelMultiWithStats(df, 1.0, "symbol",
-      numPartitions = 4, prefixCap = 64)
+    val (_, stats) = Renko.parallelScan(df, 1.0, numPartitions = 4, prefixCap = 64,
+      symbolCol = Some("symbol"))
     assert(stats.fellBack, "the flat symbol should exhaust its prefix without syncing")
   }
 
@@ -207,7 +223,7 @@ class ParallelScanSpec extends SparkTestBase {
       (lit(100.0) + lit(10.0) * sin(col("id").cast("double") / lit(200.0))).as("close"))
     val ord = Seq(col("datetime"), (col("close") * col("direction")).asc)
     val seqOut = Renko.fromTicks(df, 1.0).orderBy(ord: _*).collect()
-    val parOut = Renko.fromSortedTicksParallel(df, 1.0).orderBy(ord: _*).collect()
+    val parOut = noCacheLeft(Renko.fromSortedTicksParallel(df, 1.0)).orderBy(ord: _*).collect()
     assert(seqOut.length == parOut.length && seqOut.length > 0,
       s"row count: seq=${seqOut.length} par=${parOut.length}")
     seqOut.zip(parOut).foreach { case (a, b) => assert(a == b) }

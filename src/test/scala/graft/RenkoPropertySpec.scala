@@ -37,7 +37,7 @@ class RenkoPropertySpec extends AnyFunSuite {
 
   private def scan(prices: Seq[Double], dropFirst: Boolean = false): Vector[Brick] = {
     val ticks = prices.zipWithIndex.map { case (p, i) => Tick("", i.toLong, p) }
-    Renko.scanSeries("", ticks.iterator, 1.0, dropFirst).map { r =>
+    Renko.scanPartition(ticks.iterator, 1.0, dropFirst).map { r =>
       Brick(r.datetime_us, r.open, r.high, r.low, r.close, r.volume, r.direction,
         r.is_reversal, r.tick_index_open, r.tick_index_close, r.normal_high,
         r.normal_low, r.nongap_open, r.reverse_nongap_open,

@@ -34,7 +34,7 @@ class SourcesAndUnitsSpec extends SparkTestBase {
     import spark.implicits._
     // aggTrades carry epoch-ms timestamps; brick 0.04 per the reference demo
     val events = spark.read.parquet(
-        "/root/reference/examples/data/BNBUSDT-aggTrades-2023-06_9000Rows.parquet")
+        ReferenceData.path("BNBUSDT-aggTrades-2023-06_9000Rows.parquet"))
       .select(lit("BNB").as("symbol"), col("timestamp"), col("close").as("price"))
       .as[PriceEvent]
     val got = RenkoWS.replay(events, 0.04).toDF()

@@ -21,7 +21,7 @@ class StreamingSpec extends SparkTestBase {
 
   private def us30Events = {
     import spark.implicits._
-    spark.read.parquet("/root/reference/examples/data/US30_T1_cT.parquet")
+    spark.read.parquet(ReferenceData.path("US30_T1_cT.parquet"))
       .select(lit("US30").as("symbol"), unix_micros(col("datetime").cast("timestamp")).as("timestamp"),
         col("bid").as("price"))
       .as[PriceEvent]
@@ -70,7 +70,7 @@ class StreamingSpec extends SparkTestBase {
     // test/test_ws.py:32-63 — drop initial brick + first bar from the stream
     // table; batch table already dropped its first label row
     val batchWide = Renko.fromTicks(
-      spark.read.parquet("/root/reference/examples/data/US30_T1_cT.parquet")
+      spark.read.parquet(ReferenceData.path("US30_T1_cT.parquet"))
         .withColumnRenamed("bid", "close"), 5).cache()
     val streamTail = replayed.toDF().orderBy(col("timestamp")).offset(2)
     for (mode <- RenkoModes.all) {
@@ -89,7 +89,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("checkpoint/resume: to_rws -> stateFromCheckpoint -> replay matches reference splice") {
-    val ticks = spark.read.parquet("/root/reference/examples/data/US30_T1_cT.parquet")
+    val ticks = spark.read.parquet(ReferenceData.path("US30_T1_cT.parquet"))
       .withColumnRenamed("bid", "close")
     val split = to_timestamp(lit("2023-06-28 13:50:00"))
     val head = ticks.filter(col("datetime") <= split)
