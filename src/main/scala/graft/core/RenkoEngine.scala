@@ -109,6 +109,7 @@ final class RenkoEngine(val brickSize: Double) extends Serializable {
     * itself emits nothing and does not touch the wick accumulators.
     */
   def initAnchor(firstPrice: Double): Double = {
+    requireFinite(firstPrice)
     val anchor = PyMath.floorDiv(firstPrice, brickSize) * brickSize
     initAt(anchor, 0)
     anchor
@@ -118,6 +119,7 @@ final class RenkoEngine(val brickSize: Double) extends Serializable {
     * direction (streaming resume path, renkodf.py:504-508).
     */
   def initAt(price: Double, direction: Int): Unit = {
+    requireFinite(price)
     lastRenko = price
     lastDirection = direction
     wickMin = price
@@ -147,6 +149,7 @@ final class RenkoEngine(val brickSize: Double) extends Serializable {
     * of the tick in its series (the reference's loop variable `i`).
     */
   def step(ts: Long, price: Double, tickIdx: Long, out: Growable[Brick]): Int = {
+    requireFinite(price)
     // per-tick accumulator update (renkodf.py:104-107)
     if (price < wickMin) wickMin = price
     if (price > wickMax) wickMax = price
@@ -182,6 +185,16 @@ final class RenkoEngine(val brickSize: Double) extends Serializable {
     }
     emitted
   }
+
+  /** A non-finite price has no place on the grid and is rejected before it
+    * touches the state: +∞ would emit without end (`(+∞).toLong` is
+    * `Long.MaxValue` bricks), −∞ a spurious reversal, NaN nothing while
+    * still counting toward the next brick's volume, and a non-finite first
+    * price a NaN anchor that never emits.
+    */
+  private def requireFinite(price: Double): Unit =
+    if (!java.lang.Double.isFinite(price))
+      throw new IllegalArgumentException(s"renko price must be finite, got $price")
 
   /** Emit one brick and reset the per-brick accumulators. Shared between the
     * reversal and same-direction paths — they differ only in the multiplier

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.core.{Brick, RenkoEngine, RenkoSnapshot}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -141,7 +142,8 @@ object Renko {
     * series — one giant series, or a few simultaneously huge ones. The ticks
     * are range-partitioned on (symbol, t) (on t alone for a single series)
     * and sorted in parallel, so one series spreads over many partitions;
-    * [[stitch]] then joins each series' runs at sync points.
+    * [[stitch]] then chains each series' exact entry state across its runs
+    * and folds every run from its entry in parallel.
     *
     * For MANY small series `fromTicks` is already parallel and cheaper:
     * the driver's stitch work is O(runs · syncDepth), and runs grow with
@@ -159,12 +161,14 @@ object Renko {
       tsUnit: String = "us",
       dropFirst: Boolean = true,
       numPartitions: Int = 0,
-      prefixCap: Int = 4096,
       symbolCol: Option[String] = None): DataFrame =
     parallelScan(df, brickSize, datetimeCol, closeCol, tsUnit, dropFirst,
-      numPartitions, prefixCap, symbolCol)._1
+      numPartitions, symbolCol = symbolCol)._1
 
-  /** [[fromTicksParallel]] together with the stitch's [[ParallelScanStats]]. */
+  /** [[fromTicksParallel]] (or, `presorted`, [[fromSortedTicksParallel]])
+    * together with the stitch's [[ParallelScanStats]]. `prefixCap` bounds
+    * the ticks per run that job 1 keeps for the driver's sync search.
+    */
   private[graft] def parallelScan(
       df: DataFrame,
       brickSize: Double,
@@ -174,7 +178,8 @@ object Renko {
       dropFirst: Boolean = true,
       numPartitions: Int = 0,
       prefixCap: Int = 4096,
-      symbolCol: Option[String] = None): (DataFrame, ParallelScanStats) = {
+      symbolCol: Option[String] = None,
+      presorted: Boolean = false): (DataFrame, ParallelScanStats) = {
     val ticks = normalizedTicks(df, brickSize, symbolCol, datetimeCol, closeCol, tsUnit)
     val p = if (numPartitions > 0) numPartitions else df.sparkSession.sparkContext.defaultParallelism
     // a single series orders by t alone and keeps its constant key out of
@@ -182,7 +187,8 @@ object Renko {
     val (layout, order) =
       if (symbolCol.isDefined) (ticks, Seq(col("symbol"), col("t")))
       else (ticks.drop("symbol"), Seq(col("t")))
-    stitch(layout.repartitionByRange(p, order: _*).sortWithinPartitions(order: _*),
+    // a presorted source's own partitions are the ranges: no exchange, no sort
+    stitch(if (presorted) layout else layout.repartitionByRange(p, order: _*).sortWithinPartitions(order: _*),
       brickSize, dropFirst, prefixCap,
       fromTicks(df, brickSize, symbolCol, datetimeCol, closeCol, tsUnit, dropFirst))
   }
@@ -205,11 +211,8 @@ object Renko {
       datetimeCol: String = "datetime",
       closeCol: String = "close",
       tsUnit: String = "us",
-      dropFirst: Boolean = true,
-      prefixCap: Int = 4096): DataFrame =
-    stitch(normalizedTicks(df, brickSize, None, datetimeCol, closeCol, tsUnit).drop("symbol"),
-      brickSize, dropFirst, prefixCap,
-      fromTicks(df, brickSize, None, datetimeCol, closeCol, tsUnit, dropFirst))._1
+      dropFirst: Boolean = true): DataFrame =
+    parallelScan(df, brickSize, datetimeCol, closeCol, tsUnit, dropFirst, presorted = true)._1
 
   /** Phase timings from the most recent parallel scans, drained by Bench to
     * embed in its emitted JSON: the bench ARTIFACT must carry the evidence
@@ -261,12 +264,13 @@ object Renko {
     */
   final case class ParallelScanStats(fellBack: Boolean, syncDepths: Seq[Long])
 
-  /** Second-pass plan for one run: restore `syncSnap` and scan the ticks
-    * after run-local index `syncIdx`, shifting tick indices by `offset` (the
-    * symbol's ticks in earlier runs). `syncIdx = Long.MaxValue` marks a run
-    * fully replayed on the driver (no suffix work).
+  /** Where the fold of one run starts: `entry` is the exact state before
+    * the run's first tick (null = a symbol's first run, which anchors on
+    * that tick), `offset` the symbol's ticks in earlier runs, and `firstTs`
+    * the symbol's first emitted timestamp when an earlier run emitted it
+    * (None = the run learns it from its own first brick).
     */
-  private final case class Plan(syncIdx: Long, syncSnap: RenkoSnapshot, offset: Long)
+  private final case class RunStart(sym: String, entry: RenkoSnapshot, offset: Long, firstTs: Option[Long])
 
   /** First-pass summary of one contiguous same-symbol run of a partition,
     * from the run's own replay off a fresh anchor. Prefix arrays, snapshots
@@ -297,13 +301,16 @@ object Renko {
     *  1. job 1: each same-symbol run of each partition replays its own ticks
     *     from a fresh anchor and reports a [[RunSummary]] — tiny, bricks are
     *     not materialized;
-    *  2. the driver chains each symbol's exact entry states across its runs,
-    *     replaying only each run's prefix until the true trajectory and the
-    *     own replay both emit at the same tick with identical state (the
-    *     sync point) — typically a handful of ticks;
-    *  3. job 2: each run restores its synced snapshot and re-scans only its
-    *     suffix in parallel; driver-computed prefix bricks (a few per run)
-    *     are unioned in.
+    *  2. the driver chains each symbol's exact entry states across its runs:
+    *     it replays only each run's prefix from the run's entry until the
+    *     true trajectory and the own replay both emit at the same tick with
+    *     identical state (the sync point, typically a handful of ticks),
+    *     after which the own replay's exit state is the true one. The same
+    *     replay sees the symbol's first emitted timestamp: a run's first true
+    *     emission is at or before its sync tick;
+    *  3. job 2: each run restores its entry state (or anchors fresh, for a
+    *     symbol's first run) and runs [[RunFold]], the fold `scanPartition`
+    *     runs, over all of its ticks in parallel.
     *
     * `layout` holds (symbol, t, price) rows — without `symbol` for a single
     * series, whose key is the constant "" — and must place each symbol's
@@ -399,13 +406,14 @@ object Renko {
       var fellBack = !runsBySym.values.forall { runs =>
         runs.forall(_.sorted) && runs.zip(runs.drop(1)).forall { case (a, b) => a.lastTs <= b.firstTs }
       }
-      val prefixBricks = new ArrayBuffer[BrickRow]()
-      val plans = new scala.collection.mutable.HashMap[(Int, String), Plan]()
+      val starts = new scala.collection.mutable.HashMap[(Int, String), RunStart]()
       val syncDepths = new ArrayBuffer[Long]()
       for (sym <- summaries.map(_.symbol).distinct if !fellBack) {
         var offset = 0L
         var entry: RenkoSnapshot = null
+        var firstTs: Option[Long] = None
         for (s <- runsBySym(sym) if !fellBack) {
+          starts((s.pidx, sym)) = RunStart(sym, entry, offset, firstTs)
           val eng = new RenkoEngine(brickSize)
           if (entry != null) eng.restore(entry)
           val buf = new ArrayBuffer[Brick](4)
@@ -416,7 +424,7 @@ object Renko {
             else {
               buf.clear()
               val emitted = eng.step(s.prefixTs(j), s.prefixPrice(j), offset + j, buf)
-              buf.foreach(b => prefixBricks += toRow(sym, b))
+              if (emitted > 0 && firstTs.isEmpty) firstTs = Some(buf(0).ts)
               val own = s.prefixEmitSnap(j)
               // emission at j sets tickOpen = tickClose = j in both index
               // bases, which differ by `offset`
@@ -425,12 +433,10 @@ object Renko {
             j += 1
           }
           if (sync >= 0) {
-            plans((s.pidx, sym)) = Plan(sync, s.prefixEmitSnap(sync), offset)
             syncDepths += sync
             entry = shifted(s.exit, offset)
           } else if (s.nTicks <= s.prefixTs.length) {
-            // short run: the driver replayed it fully — exact, no suffix
-            plans((s.pidx, sym)) = Plan(Long.MaxValue, null, offset)
+            // short run: the driver replayed it fully, its exit is exact
             syncDepths += Long.MaxValue
             entry = eng.snapshot
           } else fellBack = true // prefix exhausted without sync
@@ -440,89 +446,44 @@ object Renko {
       mark("driver stitch")
       if (fellBack) return (fallback, ParallelScanStats(fellBack = true, syncDepths.toSeq))
 
-      // job 2: per partition, per run: restore the synced snapshot, skip the
-      // driver-replayed prefix, scan the suffix with symbol-global indices
-      val bcPlans = spark.sparkContext.broadcast(plans.toMap)
+      // job 2: per partition, per run: fold all of the run's ticks from its
+      // start, with symbol-global indices
+      val bcStarts = spark.sparkContext.broadcast(starts.toMap)
       // spill/GC evidence for a slow job 2: the pinned ticks' cache
       // residency before it runs (a nonzero disk share means the persist
-      // spilled and the suffix scan re-reads disk blocks) and the JVM GC
-      // time it absorbs — both ride the phase log into the bench's diag
+      // spilled and the fold re-reads disk blocks) and the JVM GC time it
+      // absorbs — both ride the phase log into the bench's diag
       locally {
         val infos = spark.sparkContext.getRDDStorageInfo
         logPhase("cacheMemMB", infos.map(_.memSize).sum / 1e6)
         logPhase("cacheDiskMB", infos.map(_.diskSize).sum / 1e6)
       }
       val gcBeforeJob2 = gcMillis()
-      val suffixRdd = rows.mapPartitionsWithIndex { (pidx, it) =>
-        val pm = bcPlans.value
-        new Iterator[BrickRow] {
-          private val buf = new ArrayBuffer[Brick](4)
-          private var pos = 0
-          private var inRun = false
+      val bricks = rows.mapPartitionsWithIndex { (pidx, it) =>
+        val runStarts = bcStarts.value
+        new RunFold[InternalRow](it, brickSize, dropFirst) {
           private var key: UTF8String = null
-          private var sym: String = null
-          private var plan: Plan = null
-          private var eng: RenkoEngine = null
-          private var j = 0L
-          override def hasNext: Boolean = {
-            while (pos >= buf.length) {
-              if (!it.hasNext) return false
-              val row = it.next()
-              val k = row.getUTF8String(0)
-              if (!inRun || k != key) {
-                inRun = true
-                key = if (k == null) null else k.clone()
-                sym = keyString(key)
-                plan = pm((pidx, sym))
-                eng = if (plan.syncIdx == Long.MaxValue) null
-                  else { val e = new RenkoEngine(brickSize); e.restore(plan.syncSnap); e }
-                j = 0L
-              }
-              if (eng != null && j > plan.syncIdx) {
-                buf.clear(); pos = 0
-                eng.step(row.getLong(1), row.getDouble(2), j, buf)
-              }
-              j += 1
-            }
-            true
+          protected def runStart(row: InternalRow): RunStart = {
+            val k = row.getUTF8String(0)
+            if (run != null && k == key) null
+            else { key = if (k == null) null else k.clone(); runStarts((pidx, keyString(key))) }
           }
-          override def next(): BrickRow = {
-            if (!hasNext) throw new NoSuchElementException
-            val b = buf(pos); pos += 1
-            // shift run-local tick indices into the symbol's global basis
-            toRow(sym, b.copy(
-              tickIndexOpen = b.tickIndexOpen + plan.offset,
-              tickIndexClose = b.tickIndexClose + plan.offset))
-          }
+          protected def ts(row: InternalRow): Long = row.getLong(1)
+          protected def price(row: InternalRow): Double = row.getDouble(2)
         }
       }
-
-      val prefixDf = spark.createDataset(prefixBricks.toSeq)(brickEnc).toDF()
-      val suffixDf = spark.createDataFrame(suffixRdd)
       // eagerly materialize the bricks (orders of magnitude smaller than the
-      // ticks): the suffix scan then runs exactly once even though the
-      // drop-first rule reads the result twice (min-ts aggregate + anti-join),
-      // and the returned plan no longer references the ticks at all — which
-      // is what makes the unpersist on exit safe. The brick blocks
-      // themselves are RDD-level (localCheckpoint), freed by the
+      // ticks): the returned plan then no longer references the ticks at
+      // all, which is what makes the unpersist on exit safe. The brick
+      // blocks themselves are RDD-level (localCheckpoint), freed by the
       // ContextCleaner once the caller drops the result. StallDiag adds a
       // per-task histogram, the driver-gap split (taskMax/launchGap/postGap)
       // and a stall watchdog around job 2.
-      val all = graft.util.StallDiag.watch(spark, "job2", logPhase) {
-        widen(prefixDf.unionByName(suffixDf)).localCheckpoint(true)
+      val result = graft.util.StallDiag.watch(spark, "job2", logPhase) {
+        widen(spark.createDataFrame(bricks)).localCheckpoint(true)
       }
       logPhase("job2GcSec", (gcMillis() - gcBeforeJob2) / 1e3)
       mark("job2 suffix+ckpt")
-      val result = if (!dropFirst) all
-      else {
-        // per-symbol drop rule (renkodf.py:69): ts is nondecreasing in each
-        // symbol's emission order, so the first emitted brick's timestamp is
-        // that symbol's min
-        val fts = all.groupBy(col("symbol")).agg(min(col("datetime")).as("__fts"))
-          .withColumnRenamed("symbol", "__sym")
-        all.join(broadcast(fts),
-          col("symbol") === col("__sym") && col("datetime") === col("__fts"), "left_anti")
-      }
       (result, ParallelScanStats(fellBack = false, syncDepths.toSeq))
     } finally pinned.unpersist(blocking = true)
   }
@@ -533,58 +494,79 @@ object Renko {
 
   private def keyString(k: UTF8String): String = if (k == null) null else k.toString
 
-  /** Scan one pre-ordered partition: split into consecutive same-symbol runs
-    * and scan each run as an independent series, lazily, in one flat
-    * iterator (no per-series iterator nesting). Implements the reference's
-    * drop-first-label epilogue (renkodf.py:69) per run: *every* brick
-    * carrying the first emitted timestamp is dropped — with a multi-brick
-    * first gap this can legally produce an empty series.
+  /** The one per-run fold behind every batch scan: splits an ordered
+    * partition into consecutive same-symbol runs and folds each lazily, in
+    * one flat iterator (no per-series iterator nesting). A run starts as its
+    * [[RunStart]] says — a fresh anchor on its first tick or a restored
+    * entry state — and indexes its ticks from `offset`. Implements the
+    * reference's drop-first-label epilogue (renkodf.py:69) per symbol:
+    * *every* brick carrying the symbol's first emitted timestamp is dropped
+    * — with a multi-brick first gap this can legally produce an empty
+    * series.
+    */
+  private abstract class RunFold[R](in: Iterator[R], brickSize: Double, dropFirst: Boolean)
+      extends Iterator[BrickRow] {
+    /** The start of the run `r` opens, or null when `r` continues `run`. */
+    protected def runStart(r: R): RunStart
+    protected def ts(r: R): Long
+    protected def price(r: R): Double
+
+    /** The run being folded; null before the first tick. */
+    protected var run: RunStart = null
+    private val buf = new ArrayBuffer[Brick](8)
+    private var pos = 0
+    private var eng: RenkoEngine = null
+    private var i = 0L
+    private var firstTs = 0L
+    private var haveFirst = false
+
+    override def hasNext: Boolean = {
+      while (pos >= buf.length) {
+        if (!in.hasNext) return false
+        val r = in.next()
+        val start = runStart(r)
+        if (start != null) {
+          run = start
+          eng = new RenkoEngine(brickSize)
+          if (start.entry != null) eng.restore(start.entry)
+          i = start.offset
+          haveFirst = start.firstTs.isDefined
+          firstTs = start.firstTs.getOrElse(0L)
+        }
+        // a symbol's first tick only sets the anchor
+        if (!eng.isStarted) eng.initAnchor(price(r))
+        else {
+          buf.clear(); pos = 0
+          if (eng.step(ts(r), price(r), i, buf) > 0) {
+            if (!haveFirst) { firstTs = buf(0).ts; haveFirst = true }
+            // reference drop-first-label rule (renkodf.py:69)
+            if (dropFirst) buf.filterInPlace(_.ts != firstTs)
+          }
+        }
+        i += 1
+      }
+      true
+    }
+    override def next(): BrickRow = {
+      if (!hasNext) throw new NoSuchElementException
+      val b = buf(pos); pos += 1
+      toRow(run.sym, b)
+    }
+  }
+
+  /** Scan one pre-ordered partition: each consecutive same-symbol run is an
+    * independent series folded by [[RunFold]] from a fresh anchor.
     */
   private[graft] def scanPartition(
       it: Iterator[Tick],
       brickSize: Double,
-      dropFirst: Boolean): Iterator[BrickRow] = {
-    val in = it.buffered
-    new Iterator[BrickRow] {
-      private val buf = new ArrayBuffer[Brick](8)
-      private var pos = 0
-      private var eng: RenkoEngine = null
-      private var sym: String = null
-      private var i = 0L
-      private var firstTs = Long.MinValue
-      private var haveFirst = false
-
-      override def hasNext: Boolean = {
-        while (pos >= buf.length) {
-          if (!in.hasNext) return false
-          if (eng == null || in.head.symbol != sym) {
-            // next series begins: its first tick only sets the anchor
-            sym = in.head.symbol
-            eng = new RenkoEngine(brickSize)
-            eng.initAnchor(in.next().price)
-            i = 0L
-            haveFirst = false
-          } else {
-            val t = in.next()
-            i += 1
-            buf.clear(); pos = 0
-            eng.step(t.t, t.price, i, buf)
-            if (buf.nonEmpty) {
-              if (!haveFirst) { firstTs = buf(0).ts; haveFirst = true }
-              // reference drop-first-label rule (renkodf.py:69)
-              if (dropFirst) buf.filterInPlace(_.ts != firstTs)
-            }
-          }
-        }
-        true
-      }
-      override def next(): BrickRow = {
-        if (!hasNext) throw new NoSuchElementException
-        val b = buf(pos); pos += 1
-        toRow(sym, b)
-      }
+      dropFirst: Boolean): Iterator[BrickRow] =
+    new RunFold[Tick](it, brickSize, dropFirst) {
+      protected def runStart(t: Tick): RunStart =
+        if (run != null && t.symbol == run.sym) null else RunStart(t.symbol, null, 0L, None)
+      protected def ts(t: Tick): Long = t.t
+      protected def price(t: Tick): Double = t.price
     }
-  }
 
   /** The reference's argument checks (renkodf.py) and the one input shape
     * every entry point scans: (symbol, t = epoch µs, price), with the

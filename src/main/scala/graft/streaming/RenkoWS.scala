@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.{Brick, PyMath, RenkoEngine, RenkoSnapshot}
+import graft.core.{Brick, RenkoEngine, RenkoSnapshot}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
@@ -400,7 +400,7 @@ object RenkoWS {
         lastPrice = s.lastPrice
       case None =>
         val first = evs.head
-        val anchor = PyMath.floorDiv(first.price, bs) * bs
+        val anchor = eng.initAnchor(first.price)
         eng.initAt(anchor, 1) // synthetic row has direction 1 (renkodf.py:471,508)
         out += initialBrick(sym, first.timestamp, anchor)
         lastTs = first.timestamp

@@ -56,6 +56,34 @@ class EdgeCaseSpec extends SparkTestBase {
     assert(out.map(_.getAs[Double]("close")).toSeq == Seq(-10.0, -9.0))
   }
 
+  /** The message of the IllegalArgumentException `run` fails with,
+    * wrapped in a task failure or not.
+    */
+  private def rejection(run: => Any): String = {
+    val e = intercept[Exception](run)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case i: IllegalArgumentException => i.getMessage }
+      .getOrElse(fail(s"no IllegalArgumentException in the cause chain of $e"))
+  }
+
+  test("non-finite prices fail the batch, parallel and streaming scans, naming the value") {
+    // a non-finite first price, and NaN or -inf after it. +inf after the
+    // first tick is covered in RenkoEngineSpec, where a capped collector
+    // stops the endless emission it would cause without the check
+    val cases = Seq(
+      Seq(100.0, 101.5, Double.NaN) -> "NaN",
+      Seq(100.0, 101.5, Double.NegativeInfinity) -> "-Infinity",
+      Seq(Double.PositiveInfinity, 101.5, 103.0) -> "Infinity")
+    for ((prices, name) <- cases) {
+      val rows = prices.zipWithIndex.map { case (p, i) => (i.toLong, p) }
+      val msgs = Seq(
+        rejection(Renko.fromTicks(ticksDf(rows), 1.0).collect()),
+        rejection(Renko.fromTicksParallel(ticksDf(rows), 1.0, numPartitions = 2).collect()),
+        rejection(RenkoWS.replay(rows.map { case (t, p) => PriceEvent("x", t, p) }.toDS(), 1.0).collect()))
+      msgs.foreach(m => assert(m == s"renko price must be finite, got $name", m))
+    }
+  }
+
   test("streaming replay of empty / single-event series") {
     val empty = spark.emptyDataset[PriceEvent]
     assert(RenkoWS.replay(empty, 1.0).count() == 0)

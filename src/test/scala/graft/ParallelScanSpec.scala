@@ -34,7 +34,7 @@ class ParallelScanSpec extends SparkTestBase {
     val seqOut = Renko.fromTicks(df, brick)
       .orderBy(col("datetime"), (col("close") * col("direction")).asc)
       .collect()
-    val parOut = noCacheLeft(Renko.fromTicksParallel(df, brick, numPartitions = parts, prefixCap = cap))
+    val parOut = noCacheLeft(Renko.parallelScan(df, brick, numPartitions = parts, prefixCap = cap)._1)
       .orderBy(col("datetime"), (col("close") * col("direction")).asc)
       .collect()
     assert(seqOut.length == parOut.length,
@@ -104,8 +104,8 @@ class ParallelScanSpec extends SparkTestBase {
     val ord = Seq(col("symbol"), col("datetime"), (col("close") * col("direction")).asc)
     val seqOut = Renko.fromTicks(df, brick, symbolCol = Some("symbol"))
       .orderBy(ord: _*).collect()
-    val parOut = Renko.fromTicksParallel(df, brick, numPartitions = parts,
-      prefixCap = cap, symbolCol = Some("symbol"))
+    val parOut = Renko.parallelScan(df, brick, numPartitions = parts,
+      prefixCap = cap, symbolCol = Some("symbol"))._1
       .orderBy(ord: _*).collect()
     assert(seqOut.length == parOut.length,
       s"row count: seq=${seqOut.length} par=${parOut.length}")
@@ -138,7 +138,7 @@ class ParallelScanSpec extends SparkTestBase {
   test("multi-series: per-symbol drop-first rule and tiny series survive") {
     import spark.implicits._
     // one 4-tick series next to one large one — the small series is fully
-    // driver-replayed (plan = MaxValue) while the big one stitches
+    // driver-replayed (sync depth Long.MaxValue) while the big one syncs
     val tiny = Seq(("T", 0L, 100.0), ("T", 1L, 103.5), ("T", 2L, 96.2), ("T", 3L, 108.0))
       .toDF("symbol", "datetime", "close")
     val df = multiWalk(8000, Seq("BIG")).unionByName(tiny)
@@ -196,14 +196,9 @@ class ParallelScanSpec extends SparkTestBase {
     assert(seqOut.length == parOut.length && seqOut.length > 0,
       s"row count: seq=${seqOut.length} par=${parOut.length}")
     seqOut.zip(parOut).foreach { case (a, b) => assert(a == b) }
-    // ZERO shuffles on the DATA path: the whole point of the sorted
-    // variant. The drop-first rule's broadcast side legitimately carries a
-    // single-row min aggregate (partial_min per partition -> one merge row
-    // each — O(partitions) rows, not data movement), so broadcast subtrees
-    // are excluded from the count.
+    // ZERO shuffles: the whole point of the sorted variant
     val plan = sp.queryExecution.executedPlan
     def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int = p match {
-      case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => 0
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         shuffles(a.executedPlan)
       case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
@@ -211,7 +206,7 @@ class ParallelScanSpec extends SparkTestBase {
       case other => other.children.map(shuffles).sum
     }
     assert(shuffles(plan) == 0,
-      s"sorted parallel scan must plan zero data-path shuffles:\n$plan")
+      s"sorted parallel scan must plan zero shuffles:\n$plan")
   }
 
   test("sorted parallel scan: unsorted partitions violate the contract -> fallback, never wrong") {
@@ -251,9 +246,27 @@ class ParallelScanSpec extends SparkTestBase {
       (lit(100.0) + pmod(col("id"), lit(3)).cast("double") * lit(0.1)).as("close"))
     val ord = Seq(col("datetime"), (col("close") * col("direction")).asc)
     val seqOut = Renko.fromTicks(flat, 1.0).orderBy(ord: _*).collect()
-    val parOut = Renko.fromSortedTicksParallel(flat, 1.0, prefixCap = 64)
+    val parOut = Renko.parallelScan(flat, 1.0, prefixCap = 64, presorted = true)._1
       .orderBy(ord: _*).collect()
     assert(seqOut.length == parOut.length)
     seqOut.zip(parOut).foreach { case (a, b) => assert(a == b) }
+  }
+
+  test("sorted parallel scan: first-brick timestamp tied across a partition border") {
+    import spark.implicits._
+    // partition 0 emits the series' first brick at ts 2; partition 1 opens
+    // at ts 2 and emits there too. The drop-first rule is per symbol, so it
+    // must drop the second run's ts-2 brick as well
+    val rows = Seq((0L, 100.0), (1L, 100.5), (2L, 101.2), (2L, 102.3), (3L, 103.4), (4L, 104.6))
+    val df = spark.createDataset(spark.sparkContext.parallelize(rows, 2)).toDF("datetime", "close")
+    assert(df.rdd.glom().collect().map(_.length).toSeq == Seq(3, 3))
+    val ord = Seq(col("datetime"), (col("close") * col("direction")).asc)
+    val seqOut = Renko.fromSortedTicks(df.coalesce(1), 1.0).orderBy(ord: _*).collect()
+    assert(seqOut.map(_.getAs[Double]("close")).toSeq == Seq(103.0, 104.0))
+    assert(!Renko.parallelScan(df, 1.0, presorted = true)._2.fellBack,
+      "a tie at the border meets the sorted contract")
+    val sp = Renko.fromSortedTicksParallel(df, 1.0)
+    assert(sp.orderBy(ord: _*).collect().toSeq == seqOut.toSeq)
+    assert(sp.filter(unix_micros(col("datetime")) === 2L).isEmpty, "no brick may carry the first ts")
   }
 }
