@@ -316,8 +316,8 @@ object Bench {
       // do not drain a dirtied old gen)
       //
       // single large series, unsorted input: parallel range-sort +
-      // sync-point stitched scan (fromTicksParallel) — the sequential
-      // fromTicks path would pay a 1-task sort of all 14.7M rows here
+      // sync-point stitched scan (fromTicksParallel) — fromTicks would
+      // merge all 14.7M ticks on one task here
       "renko_14m_1series" -> (s => RenkoModes.project(
         Renko.fromTicksParallel(synthTicks(s, 14700000L, 1), 1.0, tsUnit = "us"), "wicks")),
       "renko_14m_32series" -> (s => RenkoModes.project(

@@ -1,17 +1,26 @@
 package graft.operators
 
 import graft.core.{Brick, RenkoEngine, RenkoSnapshot}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, GraftSqlShim}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.{CatalystSerde, MapPartitions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 
 /** One input tick, normalized: per-series key, epoch-µs time, price. */
 final case class Tick(symbol: String, t: Long, price: Double)
+
+/** One series' ticks from one input partition, sorted by `t` (stable:
+  * ties keep their row order). `part` is the input partition and `seq`
+  * the block's place among that partition's blocks, so (part, seq) is the
+  * input order of the block's ticks.
+  */
+private[graft] final case class TickBlock(symbol: String, part: Int, seq: Int, t: Array[Long], price: Array[Double])
 
 /** One output brick row: series key + the 19-column wide record
   * (reference `renkodf.py:60-67`). `datetime_us` is epoch µs; the public
@@ -43,13 +52,16 @@ final case class BrickRow(
   *
   * Spark-first design: the scan is inherently sequential *within* a series
   * (the fold is not associative, so no partial/final split exists), but
-  * embarrassingly parallel *across* series. `fromTicks` therefore shuffles
-  * once on the series key and sorts each partition by (symbol, t) — no
-  * global sort, and at cluster scale parallelism = number of series. A
-  * series too large for one task goes through the sync-point stitch of
-  * `fromTicksParallel` instead. Column pruning to exactly (symbol, datetime,
-  * close) happens *before* the typed operator because Catalyst cannot push
-  * a projection through `mapPartitions`.
+  * embarrassingly parallel *across* series. `fromTicks` therefore packs
+  * each input partition's ticks, in parallel, into per-series blocks of
+  * primitive arrays sorted by time, shuffles those few block rows once on
+  * the series key, and k-way merges each series' blocks into the fold — no
+  * global sort and no per-tick sort after the scan; at cluster scale
+  * parallelism = number of series. A series too large for one task goes
+  * through the sync-point stitch of `fromTicksParallel` instead. Column
+  * pruning to exactly (symbol, datetime, close) happens *before* the
+  * block pack because Catalyst cannot push a projection through
+  * `mapPartitions`.
   *
   * Capability match: reference `Renko.__init__`/`_create_renko`
   * (`/root/reference/src/renkodf/renkodf.py:16-252`), generalized from one
@@ -62,6 +74,7 @@ object Renko {
 
   implicit private val tickEnc: Encoder[Tick] = Encoders.product[Tick]
   implicit private val brickEnc: Encoder[BrickRow] = Encoders.product[BrickRow]
+  implicit private val blockEnc: Encoder[TickBlock] = Encoders.product[TickBlock]
 
   /** Columns of the wide brick table, in reference order (renkodf.py:60-67),
     * with the series key prepended.
@@ -101,17 +114,51 @@ object Renko {
     // own buffers, so the value is validated with the reference's message
     // and otherwise ignored. Kept so reference code ports without edits.
     require(divideBy > 0, "divide_by cannot be 'None' or '<= 0'")
-    val ticks = normalizedTicks(df, brickSize, symbolCol, datetimeCol, closeCol, tsUnit).as[Tick]
+    blockScan(normalizedTicks(df, brickSize, symbolCol, datetimeCol, closeCol, tsUnit), brickSize, dropFirst)
+  }
 
-    // one hash exchange on the series key + in-partition sort, then a flat
-    // per-partition scan over contiguous same-symbol runs. Measurably
-    // cheaper than groupByKey.flatMapSortedGroups (which pays typed
-    // key-encoding overhead in the exchange) with identical semantics.
-    val bricks: Dataset[BrickRow] = ticks
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("t"))
-      .mapPartitions(it => scanPartition(it, brickSize, dropFirst))
+  /** Ticks per [[TickBlock]]: a partition holding more of one series emits
+    * several blocks, each sorted on its own.
+    */
+  private val BlockCap = 1 << 20
 
+  /** The plan behind [[fromTicks]], over (symbol, t, price) rows:
+    *
+    *  1. map side, in parallel: each input partition packs its ticks into
+    *     per-series [[TickBlock]]s of at most `blockCap` ticks, each stably
+    *     sorted by t (pre-sorted input costs one pass);
+    *  2. one hash exchange of the block rows on the series key, and a sort
+    *     of those few rows by (symbol, part, seq);
+    *  3. reduce side: each series' blocks are k-way merged by (t, part,
+    *     seq) — a tie keeps input partition order, then row order — into
+    *     [[RunFold]].
+    *
+    * No tick row is exchanged, sorted or decoded into a `Tick`.
+    */
+  private[graft] def blockScan(
+      ticks: DataFrame,
+      brickSize: Double,
+      dropFirst: Boolean,
+      blockCap: Int = BlockCap): DataFrame = {
+    // the pack reads Spark's internal rows: the tick columns go in as one
+    // struct, so `symbol` stays UTF-8 and no typed decoder runs per tick
+    val packed = MapPartitions(
+      (it: Iterator[Any]) => new BlockPacker(it.asInstanceOf[Iterator[InternalRow]], blockCap),
+      CatalystSerde.generateObjAttr[TickBlock],
+      ticks.select(struct(col("symbol"), col("t"), col("price"))).queryExecution.analyzed)
+    val bricks: Dataset[BrickRow] =
+      GraftSqlShim.ofRows(ticks.sparkSession, CatalystSerde.serialize[TickBlock](packed))
+        .repartition(col("symbol"))
+        .sortWithinPartitions(col("symbol"), col("part"), col("seq"))
+        .as[TickBlock]
+        .mapPartitions { blocks =>
+          new RunFold[BlockMerge](new BlockMerge(blocks), brickSize, dropFirst) {
+            protected def runStart(m: BlockMerge): RunStart =
+              if (m.seriesStart) RunStart(m.symbol, null, 0L, None) else null
+            protected def ts(m: BlockMerge): Long = m.t
+            protected def price(m: BlockMerge): Double = m.price
+          }
+        }
     widen(bricks.toDF())
   }
 
@@ -567,6 +614,192 @@ object Renko {
       protected def ts(t: Tick): Long = t.t
       protected def price(t: Tick): Double = t.price
     }
+
+  /** The map side of [[blockScan]]: packs one input partition's
+    * struct(symbol, t, price) rows into per-series [[TickBlock]]s, emitting
+    * a series' block when it reaches `cap` ticks and the rest when the
+    * partition ends.
+    */
+  private final class BlockPacker(in: Iterator[InternalRow], cap: Int) extends Iterator[TickBlock] {
+    // starts small: a partition may hold many short series
+    private final class Builder {
+      var t = new Array[Long](16)
+      var price = new Array[Double](16)
+      var n = 0
+    }
+    private val part = TaskContext.getPartitionId()
+    private var emitted = 0
+    // insertion order keeps the end-of-partition flush deterministic
+    private val open = new java.util.LinkedHashMap[UTF8String, Builder]()
+    private var key: UTF8String = null
+    private var cur: Builder = null
+    private var ready: TickBlock = null
+    private var rest: java.util.Iterator[java.util.Map.Entry[UTF8String, Builder]] = null
+
+    override def hasNext: Boolean = {
+      while (ready == null && (rest == null || rest.hasNext)) {
+        if (rest != null) {
+          val e = rest.next()
+          ready = block(e.getKey, e.getValue)
+        } else if (in.hasNext) {
+          // MapPartitionsExec hands over the struct column's value
+          val tick = in.next()
+          if (tick.isNullAt(1) || tick.isNullAt(2))
+            throw new IllegalArgumentException("ticks need a non-null datetime and close")
+          val k = tick.getUTF8String(0)
+          // the row's buffer is reused: a new key is cloned before it is kept
+          if (cur == null || k != key) {
+            key = if (k == null) null else k.clone()
+            cur = open.get(key)
+            if (cur == null) { cur = new Builder; open.put(key, cur) }
+          }
+          if (cur.n == cur.t.length) {
+            val size = math.min(cap, cur.n * 2)
+            cur.t = java.util.Arrays.copyOf(cur.t, size)
+            cur.price = java.util.Arrays.copyOf(cur.price, size)
+          }
+          cur.t(cur.n) = tick.getLong(1)
+          cur.price(cur.n) = tick.getDouble(2)
+          cur.n += 1
+          if (cur.n == cap) {
+            ready = block(key, cur)
+            cur.n = 0
+          }
+        } else rest = open.entrySet.iterator
+      }
+      ready != null
+    }
+
+    override def next(): TickBlock = {
+      if (!hasNext) throw new NoSuchElementException
+      val b = ready
+      ready = null
+      b
+    }
+
+    /** The builder's ticks as the partition's next block; null if none. */
+    private def block(k: UTF8String, b: Builder): TickBlock =
+      if (b.n == 0) null
+      else {
+        val (t, price) = sortedByTime(b.t, b.price, b.n)
+        emitted += 1
+        TickBlock(keyString(k), part, emitted, t, price)
+      }
+  }
+
+  /** The first `n` ticks of (t, price), stably sorted by t: a bottom-up
+    * merge of the natural ascending runs, so sorted input is one pass plus
+    * a copy and a tie keeps its row order.
+    */
+  private[graft] def sortedByTime(t: Array[Long], price: Array[Double], n: Int): (Array[Long], Array[Double]) = {
+    var st = java.util.Arrays.copyOf(t, n)
+    var sp = java.util.Arrays.copyOf(price, n)
+    // run starts, then n
+    val starts = new ArrayBuilder.ofInt
+    starts += 0
+    for (i <- 1 until n) if (st(i) < st(i - 1)) starts += i
+    starts += n
+    var bounds = starts.result()
+    if (bounds.length > 2) {
+      var dt = new Array[Long](n)
+      var dp = new Array[Double](n)
+      while (bounds.length > 2) {
+        val merged = new ArrayBuilder.ofInt
+        merged += 0
+        var r = 0
+        while (r + 1 < bounds.length) {
+          val lo = bounds(r)
+          val mid = bounds(r + 1)
+          val hi = if (r + 2 < bounds.length) bounds(r + 2) else mid
+          var i = lo
+          var j = mid
+          var k = lo
+          while (k < hi) {
+            // the left run wins a tie: stable
+            if (j >= hi || (i < mid && st(i) <= st(j))) { dt(k) = st(i); dp(k) = sp(i); i += 1 }
+            else { dt(k) = st(j); dp(k) = sp(j); j += 1 }
+            k += 1
+          }
+          merged += hi
+          r += 2
+        }
+        val (ot, op) = (st, sp)
+        st = dt; sp = dp; dt = ot; dp = op
+        bounds = merged.result()
+      }
+    }
+    (st, sp)
+  }
+
+  /** The reduce side of [[blockScan]]: [[TickBlock]]s ordered by (symbol,
+    * part, seq) in, each series' ticks out in (t, part, seq, row) order.
+    * It holds one series' blocks at a time and merges them with a binary
+    * heap of block cursors. The iterator is its own element: `symbol`, `t`,
+    * `price` and `seriesStart` describe the tick the last `next()` reached.
+    */
+  private final class BlockMerge(in: Iterator[TickBlock]) extends Iterator[BlockMerge] {
+    var symbol: String = null
+    var t = 0L
+    var price = 0.0
+    var seriesStart = false
+
+    private val blocks = in.buffered
+    private val series = new ArrayBuffer[TickBlock](8)
+    private var pos: Array[Int] = Array.emptyIntArray
+    // heap of indices into `series`, which is in (part, seq) order
+    private var heap: Array[Int] = Array.emptyIntArray
+    private var live = 0
+
+    override def hasNext: Boolean = live > 0 || blocks.hasNext
+
+    override def next(): BlockMerge = {
+      seriesStart = live == 0
+      if (seriesStart) {
+        if (!blocks.hasNext) throw new NoSuchElementException
+        series.clear()
+        symbol = blocks.head.symbol
+        while (blocks.hasNext && blocks.head.symbol == symbol) series += blocks.next()
+        live = series.length
+        pos = new Array[Int](live)
+        heap = Array.range(0, live)
+        for (i <- live / 2 - 1 to 0 by -1) siftDown(i)
+      }
+      val b = heap(0)
+      val blk = series(b)
+      t = blk.t(pos(b))
+      price = blk.price(pos(b))
+      pos(b) += 1
+      if (pos(b) == blk.t.length) {
+        live -= 1
+        heap(0) = heap(live)
+      }
+      siftDown(0)
+      this
+    }
+
+    /** Block a's next tick comes before block b's. */
+    private def before(a: Int, b: Int): Boolean = {
+      val ta = series(a).t(pos(a))
+      val tb = series(b).t(pos(b))
+      ta < tb || (ta == tb && a < b)
+    }
+
+    private def siftDown(from: Int): Unit = {
+      var i = from
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1
+        if (l >= live) done = true
+        else {
+          val c = if (l + 1 < live && before(heap(l + 1), heap(l))) l + 1 else l
+          if (before(heap(c), heap(i))) {
+            val x = heap(i); heap(i) = heap(c); heap(c) = x
+            i = c
+          } else done = true
+        }
+      }
+    }
+  }
 
   /** The reference's argument checks (renkodf.py) and the one input shape
     * every entry point scans: (symbol, t = epoch µs, price), with the

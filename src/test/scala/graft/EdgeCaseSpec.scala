@@ -84,6 +84,25 @@ class EdgeCaseSpec extends SparkTestBase {
     }
   }
 
+  test("a null datetime or close fails every batch path with the same message") {
+    val nullClose = Seq(("a", Option(1L), Option(100.0)), ("a", Option(2L), Option.empty[Double]))
+    val nullTime = Seq(("a", Option(1L), Option(100.0)), ("a", Option.empty[Long], Option(102.0)))
+    for (rows <- Seq(nullClose, nullTime)) {
+      val df = rows.toDF("sym", "datetime", "close")
+      val runs = Seq(
+        () => Renko.fromTicks(df, 1.0).collect(),
+        () => Renko.fromTicks(df, 1.0, symbolCol = Some("sym")).collect(),
+        () => Renko.fromTicksParallel(df, 1.0, numPartitions = 2).collect(),
+        () => Renko.fromTicksParallel(df, 1.0, numPartitions = 2, symbolCol = Some("sym")).collect())
+      for (run <- runs) {
+        val e = intercept[Exception](run())
+        val root = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq.last
+        assert(root.isInstanceOf[IllegalArgumentException], s"root cause $root")
+        assert(root.getMessage == "ticks need a non-null datetime and close", root.getMessage)
+      }
+    }
+  }
+
   test("streaming replay of empty / single-event series") {
     val empty = spark.emptyDataset[PriceEvent]
     assert(RenkoWS.replay(empty, 1.0).count() == 0)

@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.Renko
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
@@ -35,6 +35,24 @@ class PlanQualitySpec extends SparkTestBase {
     // the wide events schema (event_type, props, user_id) must NOT be read
     assert(!readSchema.contains("props") && !readSchema.contains("user_id"),
       s"column pruning failed before the typed operator: $readSchema")
+  }
+
+  test("renko fromTicks: one exchange, of tick blocks; no sort over tick rows") {
+    val ticks = spark.read.parquet(s"$sf/events.parquet")
+      .select(col("ts").as("datetime"), col("value").as("close"), col("event_type"))
+    for (symbolCol <- Seq(None, Some("event_type"))) {
+      val plan = Renko.fromTicks(ticks, 25.0, symbolCol = symbolCol, tsUnit = "ns").queryExecution.executedPlan
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case _ => p +: p.children.flatMap(nodes)
+      }
+      val all = nodes(plan)
+      assert(all.count(_.isInstanceOf[ShuffleExchangeExec]) == 1, s"expected one exchange:\n$plan")
+      val sorts = all.collect { case s: SortExec => s }
+      // a block row carries its input partition and block number; a tick row does not
+      assert(sorts.nonEmpty && sorts.forall(_.child.output.map(_.name).contains("seq")),
+        s"sorts must be over block rows only:\n$plan")
+    }
   }
 
   test("q2 filter pushdown reaches the lineitem scan") {
