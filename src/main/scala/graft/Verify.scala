@@ -5,11 +5,12 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query names (local iteration only —
-    // the driver always passes two args and gets every query)
+    // optional 3rd arg: comma-separated query names, each either exact or
+    // a prefix ending in `*` (`sim_topk_ivf*,text_bm25*`) — local iteration
+    // only; with two args every query runs
     val (sfDir, outDir, only) = args match {
-      case Array(a, b)    => (a, b, Option.empty[Set[String]])
-      case Array(a, b, c) => (a, b, Some(c.split(",").toSet))
+      case Array(a, b)    => (a, b, Option.empty[Seq[String]])
+      case Array(a, b, c) => (a, b, Some(c.split(",").toSeq.map(_.trim).filter(_.nonEmpty)))
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -23,7 +24,7 @@ object Verify {
     graft.util.SparkLogNoise.suppressAccumulatorUpdateErrors()
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => only.forall(_.exists(selects(_, name))) }
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     var dumped = 0
     selected.foreach { case (name, fn) =>
@@ -70,4 +71,10 @@ object Verify {
     // otherwise-usable partial dump.
     spark.stop()
   }
+
+  /** Whether a name-list entry selects query `name`: an entry ending in
+    * `*` is a prefix, any other entry the exact name.
+    */
+  private[graft] def selects(entry: String, name: String): Boolean =
+    if (entry.endsWith("*")) name.startsWith(entry.dropRight(1)) else name == entry
 }

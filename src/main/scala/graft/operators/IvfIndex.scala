@@ -289,15 +289,14 @@ object IvfIndex {
     val cents = readCentroids(spark, path)
     val codebook = readPqCodebook(spark, path)
     val qs = Similarity.ivfProbeSide(queries, cents, nprobe, idCol, vecCol)
-    val probed = qs.select(col("cid")).distinct().collect().map(_.getLong(0))
+    val probed = Similarity.probedCids(qs)
     // filtered search: the predicate restricts both the ADC candidate scan
     // and the float rescore to matching rows (see probeQuantized)
     def lists(cols: Column*): DataFrame =
-      readLists(spark, path, probed.toIndexedSeq, predicate).select(cols: _*)
-    // probe side: (query_id, float query + its exact norm, probed cids)
-    val fq = queries.select(col(idCol).as("query_id"), col(vecCol).as("q"),
-      l2Norm(col(vecCol)).as("nq"))
-    val qsq = qs.select(col("query_id"), col("cid")).join(fq, Seq("query_id"))
+      readLists(spark, path, probed, predicate).select(cols: _*)
+    // probe side: (query_id, float query + its exact norm, probed cid)
+    val qsq = Similarity.probeRows(qs)
+    val fq = qs.select(col("query_id"), col("q"), col("nq"))
     val scored = lists(col("id").as("neighbor_id"), col("codes"),
         col("rnrm"), col("cid"))
       .join(broadcast(qsq), Seq("cid"))
@@ -620,16 +619,20 @@ object IvfIndex {
       .filterNot(e => dead.contains(s"tombstones/$e"))
   }
 
-  /** The union of live tombstoned ids, or None when nothing is deleted. */
+  /** The live tombstoned ids as written (an id deleted twice appears
+    * twice — an anti-join needs no dedupe), or None when nothing is
+    * deleted. The tombstone schema is fixed by [[delete]], so the read
+    * infers nothing and lists on the driver: no Spark job to plan it.
+    */
   private def readTombstones(spark: SparkSession, path: String): Option[DataFrame] =
     readTombstonesOf(spark, path, liveTombstoneEpochs(spark, path))
 
   private def readTombstonesOf(
-      spark: SparkSession, path: String, epochs: Seq[String]): Option[DataFrame] = {
+      spark: SparkSession, path: String, epochs: Seq[String]): Option[DataFrame] =
     if (epochs.isEmpty) None
-    else Some(spark.read.parquet(epochs.map(e => s"$path/tombstones/$e"): _*)
-      .select(col("id")).distinct())
-  }
+    else Some(graft.util.ProbePlanning.withDriverListing(spark) { ss =>
+      ss.read.schema("id BIGINT").parquet(epochs.map(e => s"$path/tombstones/$e"): _*)
+    })
 
   /** Operational snapshot of the index's serving state: one row per live
     * tree — (kind = base|epoch|compact, per-kind ordinal in committed
@@ -653,7 +656,7 @@ object IvfIndex {
       (kindOf(t), ordinals(t), spark.read.parquet(r).select(col("id")).count())
     }
     val tombRow = readTombstones(spark, path) match {
-      case Some(ts) => Seq(("tombstones", 0L, ts.count()))
+      case Some(ts) => Seq(("tombstones", 0L, ts.distinct().count()))
       case None => Seq.empty
     }
     (treeRows ++ tombRow)
@@ -943,12 +946,11 @@ object IvfIndex {
           .withColumn("cid", col("cid").cast("long"))
           .filter(col("cid").isin(probedCids: _*))
       } else {
-        // leaf schema is identical across every tree's cid dirs — cached
-        // keyed by the HEAD TREE's immutable lists dir (r17; was the index
-        // root, which every append/delete re-signatured), so mutations no
-        // longer force the next probe to re-pay the footer-read job
+        // leaf schema is identical across every tree's cid dirs: one
+        // part file's footer, read on the driver (no inference job) and
+        // cached keyed by the HEAD TREE's immutable lists dir
         val sch = graft.util.IndexMetaCache.getOrCompute(spark, roots.head, "ivf.leafSchema") {
-          ss.read.parquet(dirs.head).schema
+          graft.util.ProbePlanning.footerSchema(spark, dirs.head)
         }
         // the pruned-scan RELATION is cached per index state (r18):
         // resolving `read.parquet(dirs)` lists every pruned cid directory
@@ -1030,18 +1032,18 @@ object IvfIndex {
     import org.apache.spark.sql.expressions.Window
     val cents = readCentroids(spark, path)
     val qs = Similarity.ivfProbeSide(queries, cents, nprobe, idCol, vecCol)
-    val qq = Similarity.quantize(queries, idCol, vecCol)
-      .select(col("id").as("query_id"), col("qvec").as("qq"),
-        l2Norm(col("qvec")).as("qqn"))
-    // quantized probe side: (query_id, quantized query, its probed cids)
-    val qsq = qs.select(col("query_id"), col("cid"))
-      .join(qq, Seq("query_id"))
-    val probed = qs.select(col("cid")).distinct().collect().map(_.getLong(0))
+    // quantized probe side: (query_id, quantized query, a probed cid), the
+    // int8 form projected inline from the same query vector
+    val qsq = Similarity.probeRows(qs)
+      .withColumn("qq", graft.functions.expressions.QuantizeExpression
+        .quantizeNative(col("q")).getField("qvec"))
+      .select(col("query_id"), col("cid"), col("qq"), l2Norm(col("qq")).as("qqn"))
+    val probed = Similarity.probedCids(qs)
     // the serving predicate (filtered search) applies at BOTH consumers of
     // the pruned lists — candidates are preselected among matching rows
     // only, and the rescore sees the same filtered view
     def lists(cols: Column*): DataFrame =
-      readLists(spark, path, probed.toIndexedSeq, predicate).select(cols: _*)
+      readLists(spark, path, probed, predicate).select(cols: _*)
     val qscored = lists(col("id").as("neighbor_id"), col("qvec").as("qv"),
         col("qnrm").as("qnv"), col("cid"))
       .join(broadcast(qsq), Seq("cid"))
@@ -1053,8 +1055,7 @@ object IvfIndex {
     val candidates = qscored.withColumn("qrank", row_number().over(wq))
       .filter(col("qrank") <= k * candFactor)
       .select(col("query_id"), col("neighbor_id"))
-    val fq = queries.select(col(idCol).as("query_id"), col(vecCol).as("q"),
-      l2Norm(col(vecCol)).as("nq"))
+    val fq = qs.select(col("query_id"), col("q"), col("nq"))
     val rescored = broadcast(candidates)
       .join(lists(col("id").as("neighbor_id") +: col("v") +: col("nrm") +:
         metaCols.map(col): _*), Seq("neighbor_id"))
@@ -1097,14 +1098,13 @@ object IvfIndex {
     val qs = Similarity.ivfProbeSide(queries, cents, nprobe, idCol, vecCol)
     // the probed-list set is ≤ nlist values regardless of |queries| —
     // readLists prunes to exactly those directories on the driver
-    val probed = qs.select(col("cid")).distinct().collect().map(_.getLong(0))
     // metaCols: build-persisted metadata columns (write's keepCols) to
     // carry into the output per neighbor — the serving-TVF surface exposes
     // them so an outer WHERE can become a filtered probe
-    val corpus = readLists(spark, path, probed.toIndexedSeq, predicate)
+    val corpus = readLists(spark, path, Similarity.probedCids(qs), predicate)
       .select(col("id").as("neighbor_id") +: col("v") +: col("nrm") +:
         col("cid") +: metaCols.map(col): _*)
-    Similarity.ivfRank(corpus, qs, k, metaCols)
+    Similarity.ivfRank(corpus, Similarity.probeRows(qs), k, metaCols)
   }
 
   /** Metadata column names the build persisted into the list rows (write's
@@ -1137,11 +1137,10 @@ object IvfIndex {
     require(roots.nonEmpty, s"no index lists at $path — build with write() first")
     // keyed by the head tree's immutable lists dir (r17; was the index
     // root): the list schema is frozen for the index's life, so appends/
-    // deletes no longer force the TVF's next planning to re-read footers
+    // deletes no longer force the TVF's next planning to re-read footers.
+    // The data columns only: `cid` is partition metadata, and reserved
     graft.util.IndexMetaCache.getOrCompute(spark, roots.head, "ivf.listFields") {
-      graft.util.ProbePlanning.withDriverListing(spark) { ss =>
-        ss.read.parquet(roots.head).schema.fields.toSeq
-      }
+      graft.util.ProbePlanning.footerSchema(spark, roots.head).fields.toSeq
     }
   }
 

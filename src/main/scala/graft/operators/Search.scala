@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.TextFunctions.tokens
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Full-text retrieval over the corpus: BM25 top-k scoring of a fixed query
@@ -12,9 +11,9 @@ import org.apache.spark.sql.functions._
   * Scale design: the corpus is NEVER exploded into a full inverted index for
   * a single query — tokens are filtered to the query's terms at the scan
   * (`filter(w, t -> t IN terms)`), so the exploded row count is the number
-  * of query-term OCCURRENCES, not total tokens. Document frequencies and
-  * corpus stats (N, avgdl) are one-row/tiny aggregates joined back by
-  * broadcast. Per-document scores are assembled as one conditional-aggregate
+  * of query-term OCCURRENCES, not total tokens. The corpus stats (N,
+  * avgdl) are literals; document frequencies are a one-row aggregate over
+  * the per-document rows, joined back by broadcast. Per-document scores are assembled as one conditional-aggregate
   * column PER TERM and added in fixed query order — floating-point addition
   * order is deterministic, so results are bit-stable across partitionings
   * (and match the oracle's identical CASE-WHEN formulation).
@@ -39,71 +38,70 @@ object Search {
       col(idCol).as("doc_id"),
       size(tokens(col(textCol))).cast("long").as("dl"),
       filter(tokens(col(textCol)), t => t.isin(queryTerms.map(x => x: Any): _*)).as("qw"))
-    // corpus stats: one-row aggregate, broadcast into every score row.
-    // avgdl = sum(dl)/N — an exact integer sum divided once, deterministic.
-    val stats = tok.agg(
-      count(lit(1)).as("n_docs"),
-      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
+    // corpus stats, collected: avgdl = sum(dl)/N — an exact integer sum
+    // divided once on the driver, the same IEEE division Spark would run
+    val st = tok.agg(count(lit(1)), sum(col("dl"))).collect().head
+    val nDocs = st.getLong(0)
+    val sumDl = if (st.isNullAt(1)) 0L else st.getLong(1)
     val tf = tok.filter(size(col("qw")) >= 1)
       .select(col("doc_id"), col("dl"), explode(col("qw")).as("term"))
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
-    bm25Score(tf, stats, queryTerms, k, k1, b)
+    bm25Score(tf, nDocs, sumDl.toDouble / nDocs, queryTerms, k, k1, b)
   }
 
   /** Scoring tail shared bit-for-bit by the in-plan scan ([[bm25TopK]]) and
     * the persisted-index probe ([[TextIndex.bm25TopK]]): both feed the same
     * (doc_id, dl, term, tf) rows and (n_docs, avgdl) stats, so sharing the
-    * tail — dfreq, idf/tf saturation, per-term conditional aggregates added
+    * tail — per-doc term frequencies, df, idf/tf saturation per term added
     * in fixed query order, TakeOrderedAndProject top-k — is what makes the
     * index bit-transparent rather than approximately equal.
+    *
+    * One aggregate per document carries each query term's tf (a doc has
+    * one row per term, so each sum() holds one element — exact); each
+    * term's df is the count of documents with that term, one more
+    * aggregate over those rows, cross-joined back as one broadcast row.
+    * The corpus stats arrive as literals.
     */
   private[operators] def bm25Score(
       tf: DataFrame,
-      stats: DataFrame,
+      nDocs: Long,
+      avgdl: Double,
       queryTerms: Seq[String],
       k: Int,
       k1: Double,
       b: Double,
       serveFilter: Option[Column] = None,
       metaCols: Seq[String] = Nil): DataFrame = {
-    // document frequency per query term: at most |queryTerms| rows — over
-    // the UNFILTERED candidates (filtered-search semantics: a serving
-    // predicate restricts who can be returned, not the statistics)
-    val dfreq = tf.groupBy(col("term")).agg(count_distinct(col("doc_id")).as("df"))
-    val served = serveFilter.map(tf.filter).getOrElse(tf)
-    val scored = served.join(broadcast(dfreq), Seq("term")).crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-      .withColumn("tscore",
-        col("idf") * (col("tf") * (k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
-    // one aggregate column per term, added in FIXED query order (each doc has
-    // at most one row per term, so every sum() is a single element — exact)
-    val perTerm = queryTerms.zipWithIndex.map { case (t, i) =>
-      sum(when(col("term") === t, col("tscore"))).as(s"s_$i")
-    }
-    val total = queryTerms.indices
-      .map(i => coalesce(col(s"s_$i"), lit(0.0)): Column)
-      .reduceLeft(_ + _)
+    val terms = queryTerms.indices
     // metaCols are per-DOC metadata (constant across a doc's term rows),
     // so first() inside the same aggregate carries them for free
-    val byDoc = scored.groupBy(col("doc_id"))
-      .agg(perTerm.head, perTerm.tail ++ metaCols.map(m => first(col(m)).as(m)): _*)
-      .withColumn("bm25", round(total, 6))
-    // global top-k via TakeOrderedAndProject (distributed partial top-k per
-    // partition, k rows to the driver-side reduce) — then rank the k rows
-    // via the broadcast self-join (SmallPrefix.rankSmall: no ranking
-    // window, no single-task stage, no WindowExec warning)
-    val top = byDoc.orderBy(col("bm25").desc, col("doc_id").asc).limit(k)
-    graft.util.SmallPrefix.rankSmall(top, (b, a) =>
-        col(s"$b.bm25") > col(s"$a.bm25") ||
-          (col(s"$b.bm25") === col(s"$a.bm25") && col(s"$b.doc_id") < col(s"$a.doc_id")))
-      .select(col("doc_id") +: col("rank").as("rank") +:
-        col("bm25") +: metaCols.map(col): _*)
-      // row order IS rank order — the window this replaced emitted sorted
-      // rows and callers (and tests) read the frame that way; a k-row sort
-      .orderBy(col("rank"))
+    def perDoc(rows: DataFrame): DataFrame = {
+      val aggs = max(col("dl")).as("dl") +:
+        terms.map(i => sum(when(col("term") === queryTerms(i), col("tf"))).as(s"tf_$i")) ++:
+        metaCols.map(m => first(col(m)).as(m))
+      rows.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+    }
+    // df is over the UNFILTERED candidates (filtered-search semantics: a
+    // serving predicate restricts who can be returned, not the
+    // statistics); the predicate filters the scored rows at their scan
+    val dfs = perDoc(tf).agg(count(col("tf_0")).as("df_0"),
+      terms.tail.map(i => count(col(s"tf_$i")).as(s"df_$i")): _*)
+    def tscore(i: Int): Column = {
+      val t = col(s"tf_$i")
+      val df = col(s"df_$i")
+      val idf = log((lit(nDocs) - df + 0.5) / (df + 0.5) + 1.0)
+      idf * (t * (k1 + 1.0)) /
+        (t + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl)))
+    }
+    // per-term scores added in FIXED query order
+    val total = terms.map(i => coalesce(tscore(i), lit(0.0))).reduceLeft(_ + _)
+    // every doc here has some query term's row, so a score
+    val scored = perDoc(serveFilter.map(tf.filter).getOrElse(tf))
+      .crossJoin(broadcast(dfs))
+      .select(col("doc_id") +: round(total, 6).as("bm25") +: metaCols.map(col): _*)
+    graft.util.SmallPrefix.rankTopK(scored, Seq(col("bm25").desc, col("doc_id").asc), k)
+      .select(col("doc_id") +: col("rank") +: col("bm25") +: metaCols.map(col): _*)
   }
 
   /** Hybrid retrieval: reciprocal-rank fusion [Cormack et al., SIGIR'09] of
@@ -211,24 +209,18 @@ object Search {
 
   /** RRF fusion tail shared by the brute-force and index-served forms:
     * full-outer join of the two ≤poolK-row pools, 1/(rrfK+rank) added in
-    * fixed arm order, global top-k via TakeOrderedAndProject, ranking
-    * window over just k rows.
+    * fixed arm order, global top-k ranked over just k rows.
     */
   private def fuseRrf(lex: DataFrame, sem: DataFrame, k: Int, rrfK: Int): DataFrame = {
     val fused = lex.join(sem, Seq("doc_id"), "full_outer")
       .withColumn("rrf",
         coalesce(lit(1.0) / (lit(rrfK) + col("lex_rank")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(rrfK) + col("sem_rank")), lit(0.0)))
-    // global top-k via TakeOrderedAndProject, then the broadcast
-    // self-join rank over just k rows — same shape as bm25TopK's tail
-    val top = fused.orderBy(col("rrf").desc, col("doc_id").asc).limit(k)
-    graft.util.SmallPrefix.rankSmall(top, (b, a) =>
-        col(s"$b.rrf") > col(s"$a.rrf") ||
-          (col(s"$b.rrf") === col(s"$a.rrf") && col(s"$b.doc_id") < col(s"$a.doc_id")))
+    // global top-k, ranked over just k rows — same tail as bm25TopK's
+    graft.util.SmallPrefix.rankTopK(fused, Seq(col("rrf").desc, col("doc_id").asc), k)
       .select(col("doc_id"), col("rank"),
         round(col("rrf"), 6).as("rrf"),
         coalesce(col("lex_rank"), lit(-1L)).as("lex_rank"),
         coalesce(col("sem_rank"), lit(-1L)).as("sem_rank"))
-      .orderBy(col("rank"))
   }
 }

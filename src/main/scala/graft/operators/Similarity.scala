@@ -220,8 +220,7 @@ object Similarity {
     val corpus = normed
       .withColumn("cid", centroidAssignExpr(cents))
       .select(col("id").as("neighbor_id"), col("v"), col("nrm"), col("cid"))
-    val qs = ivfProbeSide(queries, cents, nprobe, idCol, vecCol)
-    ivfRank(corpus, qs, k)
+    ivfRank(corpus, probeRows(ivfProbeSide(queries, cents, nprobe, idCol, vecCol)), k)
   }
 
   /** The coarse quantizer of [[ivfTopK]]/[[IvfIndex]]: tiny and fixed — ONE
@@ -291,10 +290,11 @@ object Similarity {
   }
 
   /** Query side of an IVF probe: each query vector with the cids of its
-    * `nprobe` nearest centroids → (query_id, q, nq, cid). |queries| x nlist
-    * rows is negligible — the ranking window keeps the top-nprobe lists per
-    * query with no scale concern; the centroid frame is rebuilt from the
-    * collected rows (no second scan).
+    * `nprobe` nearest centroids → (query_id, q, nq, cids), `cids` nearest
+    * first. One codegen'd expression over the driver-resident quantizer
+    * ([[graft.functions.expressions.NearestCentroids]]), no cross join and
+    * no window, so a local-relation query side stays a local relation.
+    * [[probeRows]] explodes it to one row per probed list.
     */
   private[graft] def ivfProbeSide(
       queries: DataFrame,
@@ -302,19 +302,23 @@ object Similarity {
       nprobe: Int,
       idCol: String,
       vecCol: String): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centroids = broadcast(cents.toSeq.toDF("cid", "cv", "cnrm"))
-    val qn = queries.select(col(idCol).as("id"), col(vecCol).as("v"), l2Norm(col(vecCol)).as("nrm"))
-    val qScored = qn.join(centroids, lit(true))
-      .select(qn.columns.toIndexedSeq.map(col) :+ col("cid") :+
-        cosine(col("v"), col("cv"), col("nrm"), col("cnrm")).as("csim"): _*)
-    val qw = Window.partitionBy(col("id")).orderBy(col("csim").desc, col("cid").asc)
-    qScored.withColumn("crank", row_number().over(qw))
-      .filter(col("crank") <= nprobe)
-      .drop("csim", "crank")
-      .select(col("id").as("query_id"), col("v").as("q"), col("nrm").as("nq"), col("cid"))
+    val qn = queries.select(col(idCol).as("query_id"), col(vecCol).as("q"),
+      l2Norm(col(vecCol)).as("nq"))
+    qn.withColumn("cids", graft.functions.expressions.NearestCentroidExpression
+      .nearestCentroidsNative(col("q"), col("nq"), cents, nprobe))
   }
+
+  /** The probe side as (query_id, q, nq, cid): one row per probed list. */
+  private[graft] def probeRows(qs: DataFrame): DataFrame =
+    qs.select(col("query_id"), col("q"), col("nq"), explode(col("cids")).as("cid"))
+
+  /** The probed-list set of a probe side, ascending: ≤ nlist values. Read
+    * from the `cids` column on the driver — no Spark job when the queries
+    * are a local relation (the optimizer folds the projection into it).
+    */
+  private[graft] def probedCids(qs: DataFrame): Seq[Long] =
+    qs.select(col("cids")).collect()
+      .flatMap(_.getSeq[Long](0)).distinct.sorted.toSeq
 
   /** Exact re-scoring + per-query top-k over the probed inverted lists:
     * corpus rows (neighbor_id, v, nrm, cid) joined to the probe side on cid.
@@ -322,8 +326,8 @@ object Similarity {
   private[graft] def ivfRank(
       corpus: DataFrame, qs: DataFrame, k: Int,
       metaCols: Seq[String] = Nil): DataFrame = {
-    // metaCols ride along per neighbor row (constant per neighbor_id, so
-    // the trailing distinct() still dedups multi-probe duplicates exactly)
+    // metaCols ride along per neighbor row. No trailing distinct: the
+    // row_number rank makes (query_id, rank) unique, so rows never repeat
     val scored = corpus.join(broadcast(qs), Seq("cid"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id") +: col("neighbor_id") +:
@@ -335,7 +339,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id") +: col("rank") +: col("neighbor_id") +:
         col("cos_sim") +: metaCols.map(col): _*)
-      .distinct()
   }
 
   /** Deduped candidate pairs (id_a < id_b) that share a hyperplane bucket in

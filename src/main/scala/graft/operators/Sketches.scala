@@ -110,11 +110,7 @@ object Sketches {
     val est = probes.join(broadcast(sketch), Seq("d", "bucket"))
       .groupBy(col("term"), col("exact_count"))
       .agg(min(col("cnt")).as("est_count"))
-    val top = est.orderBy(col("est_count").desc, col("term").asc).limit(k)
-    graft.util.SmallPrefix.rankSmall(top, (b, a) =>
-        col(s"$b.est_count") > col(s"$a.est_count") ||
-          (col(s"$b.est_count") === col(s"$a.est_count") && col(s"$b.term") < col(s"$a.term")))
+    graft.util.SmallPrefix.rankTopK(est, Seq(col("est_count").desc, col("term").asc), k)
       .select(col("term"), col("rank"), col("est_count"), col("exact_count"))
-      .orderBy(col("rank"))
   }
 }

@@ -49,9 +49,9 @@ import org.apache.spark.sql.functions._
   * vocabulary size so each bucket directory stays a few hundred MB;
   * `filesPerBucket` is the same skew/parallelism dial as [[IvfIndex]]'s
   * `filesPerList` — 1 clusters each bucket into one writer task, raise it
-  * when a hot bucket (stopword-heavy) outgrows one task. Probes broadcast
-  * only the tiny dfreq/stats frames and shuffle only scored posting rows
-  * for the query's terms.
+  * when a hot bucket (stopword-heavy) outgrows one task. Probes take the
+  * corpus stats as literals, broadcast only the one-row df frame and the
+  * tombstone ids, and shuffle only the query terms' posting rows.
   */
 object TextIndex {
 
@@ -286,57 +286,52 @@ object TextIndex {
       .filterNot(e => dead.contains(s"tombstones/$e"))
   }
 
-  /** One row per tombstoned doc (a doc deleted twice counts once). */
-  private def readTombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    readTombstonesOf(spark, path, liveTombstones(spark, path))
+  /** The meta schema [[postingRows]] and [[compact]] write: fixed, so a
+    * meta read infers nothing (schema inference is a Spark job of its own).
+    */
+  private val MetaSchema = "n_docs BIGINT, sum_dl BIGINT, n_buckets INT"
 
+  /** The tombstone schema [[delete]] writes. */
+  private val TombstoneSchema = "doc_id BIGINT, dl BIGINT"
+
+  /** The tombstoned doc ids as written, for an anti-join (a doc deleted
+    * twice appears twice, which a left anti join ignores), or None.
+    */
   private def readTombstonesOf(
-      spark: SparkSession, path: String, ts: Seq[String]): Option[DataFrame] = {
+      spark: SparkSession, path: String, ts: Seq[String]): Option[DataFrame] =
     if (ts.isEmpty) None
-    else Some(
-      spark.read.parquet(ts.map(e => s"$path/tombstones/$e"): _*)
-        .groupBy(col("doc_id")).agg(max(col("dl")).as("dl")))
-  }
+    else Some(graft.util.ProbePlanning.withDriverListing(spark) { ss =>
+      ss.read.schema(TombstoneSchema).parquet(ts.map(e => s"$path/tombstones/$e"): _*)
+        .select(col("doc_id"))
+    })
 
-  /** Summed (n_docs, sum_dl, n_buckets) over the given trees' metas in ONE
-    * multi-root read — probe planning pays one driver job regardless of how
-    * many epochs are live, instead of one per tree.
+  /** Summed (n_docs, sum_dl, n_buckets) of `trees`' metas and the (docs,
+    * token mass) of the tombstones in `tombs` — a doc deleted twice counts
+    * once, with its largest recorded dl — from ONE Spark job: the metas and
+    * the raw tombstone rows are read with their fixed schemas, collected
+    * together (both are driver-sized: one row per tree, one per deleted
+    * doc, which the anti-join broadcasts anyway) and summed on the driver.
     */
-  private def sumMetas(
-      spark: SparkSession, path: String, trees: Seq[String]): (Long, Long, Int) =
-    // cached per index state (the tree set is itself a function of that
-    // state, so it rides the signature): probes stop paying a stats
-    // aggregate job for sums that cannot have changed
-    // the kind key carries a DIGEST of the tree subset (compaction sums a
-    // strict subset of the live trees, so the subset is part of the value's
-    // identity) — digested so key size stays fixed, and any signature
-    // change drops the whole per-path group anyway (ADVICE r13)
-    graft.util.IndexMetaCache.getOrCompute(
-      spark, path, "lex.sumMetas:" + java.util.Base64.getEncoder.encodeToString(
-        java.security.MessageDigest.getInstance("SHA-256")
-          .digest(trees.mkString(",").getBytes(java.nio.charset.StandardCharsets.UTF_8)))) {
-      sumMetasNow(spark, path, trees)
+  private def statsNow(
+      spark: SparkSession, path: String, trees: Seq[String], tombs: Seq[String])
+      : ((Long, Long, Int), (Long, Long)) = {
+    val parts = graft.util.ProbePlanning.withDriverListing(spark) { ss =>
+      Seq(
+        Option.when(trees.nonEmpty)(ss.read.schema(MetaSchema)
+          .parquet(trees.map(t => treeMeta(path, t)): _*).withColumn("meta", lit(true))),
+        Option.when(tombs.nonEmpty)(ss.read.schema(TombstoneSchema)
+          .parquet(tombs.map(e => s"$path/tombstones/$e"): _*).withColumn("meta", lit(false))))
+        .flatten
     }
-
-  private def sumMetasNow(
-      spark: SparkSession, path: String, trees: Seq[String]): (Long, Long, Int) = {
-    val r = spark.read.parquet(trees.map(t => treeMeta(path, t)): _*)
-      .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("s"),
-        max(col("n_buckets")).as("b"))
-      .collect().head
-    (r.getLong(0), r.getLong(1), r.getInt(2))
-  }
-
-  /** (deleted docs, deleted token mass) of the live tombstone set — the
-    * sums coalesce to 0 so an empty tombstone epoch (a [[delete]] call with
-    * no rows) can never turn the stats aggregate null and wedge probes.
-    */
-  private def tombstoneStats(ts: Option[DataFrame]): (Long, Long) = ts match {
-    case Some(t) =>
-      val r = t.agg(count(lit(1)).as("n"),
-        coalesce(sum(col("dl")), lit(0L)).as("s")).collect().head
-      (r.getLong(0), r.getLong(1))
-    case None => (0L, 0L)
+    val rows = parts.reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .map(_.collect()).getOrElse(Array.empty[org.apache.spark.sql.Row])
+    val (metas, dead) = rows.partition(_.getAs[Boolean]("meta"))
+    val sums = (metas.map(_.getAs[Long]("n_docs")).sum, metas.map(_.getAs[Long]("sum_dl")).sum,
+      metas.map(_.getAs[Int]("n_buckets")).maxOption.getOrElse(0))
+    // one entry per doc id (null included, as a groupBy would keep it)
+    val dls = dead.groupBy(r => Option(r.getAs[java.lang.Long]("doc_id"))).values
+      .map(_.flatMap(r => Option(r.getAs[java.lang.Long]("dl"))).map(_.longValue).maxOption.getOrElse(0L))
+    (sums, (dls.size.toLong, dls.sum))
   }
 
   /** Consolidate every live tree (base + committed epochs) into ONE
@@ -404,13 +399,11 @@ object TextIndex {
       // apply live deletes permanently: the consolidated tree holds the
       // anti-joined survivors, the merged meta their exact stats, and the
       // manifest retires the tombstone epochs in the same commit
-      val ts = if (protectSet.isEmpty) readTombstones(spark, path) else None
-      val all = ts match {
-        case Some(t) => all0.join(broadcast(t.select(col("doc_id"))), Seq("doc_id"), "left_anti")
+      val all = readTombstonesOf(spark, path, tombs) match {
+        case Some(t) => all0.join(broadcast(t), Seq("doc_id"), "left_anti")
         case None => all0
       }
-      val (nDocsAll, sumDlAll, nBuckets) = sumMetas(spark, path, trees)
-      val (nDel, sumDlDel) = tombstoneStats(ts)
+      val ((nDocsAll, sumDlAll, nBuckets), (nDel, sumDlDel)) = statsNow(spark, path, trees, tombs)
       val cpt = s"compact-${java.util.UUID.randomUUID.toString.take(8)}"
       clusterForWrite(all, nBuckets, filesPerBucket)
         .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/epochs/$cpt/postings")
@@ -532,18 +525,20 @@ object TextIndex {
   }
 
   /** Everything bm25TopK's PLANNING needs — live trees, the all-tree meta
-    * sums, the live tombstone epochs — as ONE root-keyed cache entry, so a
-    * probe pays exactly ONE FS-signature walk (r18: the per-kind keys each
-    * re-derive the signature per call; three planning lookups per probe
-    * measured as the epochs-probe floor). Mutations invalidate through the
+    * sums, the live tombstones' (docs, token mass) and epochs — as ONE
+    * root-keyed cache entry, so a probe pays exactly ONE FS-signature walk
+    * (r18: the per-kind keys each re-derive the signature per call; three
+    * planning lookups per probe measured as the epochs-probe floor) and at
+    * most one Spark job ([[statsNow]]). Mutations invalidate through the
     * root signature (every writer stamps).
     */
   private def probePlan(spark: SparkSession, path: String)
-      : (Seq[String], (Long, Long, Int), Seq[String]) =
+      : (Seq[String], ((Long, Long, Int), (Long, Long)), Seq[String]) =
     graft.util.IndexMetaCache.getOrCompute(spark, path, "lex.probePlan") {
       val trees = liveTreesNow(spark, path)
       require(trees.nonEmpty, s"no live index trees at $path — build with write() first")
-      (trees, sumMetasNow(spark, path, trees), liveTombstonesNow(spark, path))
+      val tombs = liveTombstonesNow(spark, path)
+      (trees, statsNow(spark, path, trees, tombs), tombs)
     }
 
   /** Bucket count of the build, read from any live tree's meta (every
@@ -610,7 +605,7 @@ object TextIndex {
       val (n, dl) = byTree(t)
       (kindOf(t), ordinals(t), n, dl)
     }
-    val tombRow = tombstoneStats(readTombstones(spark, path)) match {
+    val tombRow = statsNow(spark, path, Nil, liveTombstones(spark, path))._2 match {
       case (0L, _) => Seq.empty
       case (n, dl) => Seq(("tombstones", 0L, n, dl))
     }
@@ -651,12 +646,11 @@ object TextIndex {
     // planning cost stays flat in the number of live epochs. All three
     // planning facts come from the ONE root-keyed bundle (r18), so the
     // probe pays a single FS-signature walk
-    val (trees, (nDocsAll, sumDlAll, nBuckets), tombEpochs) = probePlan(spark, path)
+    val (trees, ((nDocsAll, sumDlAll, nBuckets), (nDel, sumDlDel)), tombEpochs) =
+      probePlan(spark, path)
     // live tombstones shrink the corpus stats exactly (tombstones carry
-    // the dl captured at delete time, so no postings read is needed); the
-    // subtraction rides the probe's own job (see `stats` below) instead of
-    // a planning-time collect — planning pays exactly one Spark job (the
-    // meta sum) whether or not deletes are live
+    // the dl captured at delete time, so no postings read is needed): the
+    // subtraction is driver arithmetic on the planning collect's sums
     val tombstones = readTombstonesOf(spark, path, tombEpochs)
     // bucket of each query term via the SAME Catalyst expression classes
     // the build partitioned with (`pmod(xxhash64(term), n_buckets)`),
@@ -728,27 +722,13 @@ object TextIndex {
         }
       }.filter(col("term").isin(queryTerms.map(x => x: Any): _*))
     val tf = tombstones match {
-        case Some(t) =>
-          masked.join(broadcast(t.select(col("doc_id"))), Seq("doc_id"), "left_anti")
+        case Some(t) => masked.join(broadcast(t), Seq("doc_id"), "left_anti")
         case None => masked
       }
-    // the same sum(dl)::double / n_docs division the in-plan stats
-    // aggregate performs — one IEEE op over the stored exact integers. The
-    // tombstone subtraction is a 1-row subtree of the probe plan (the sums
-    // coalesce to 0 so an empty tombstone epoch can never null the stats),
-    // not a separate planning job
-    val stats = tombstones match {
-      case None => spark.range(1).select(
-        lit(nDocsAll).as("n_docs"),
-        (lit(sumDlAll).cast("double") / lit(nDocsAll)).as("avgdl"))
-      case Some(t) => t
-        .agg(count(lit(1)).as("n_del"), coalesce(sum(col("dl")), lit(0L)).as("dl_del"))
-        .select(
-          (lit(nDocsAll) - col("n_del")).as("n_docs"),
-          ((lit(sumDlAll) - col("dl_del")).cast("double") /
-            (lit(nDocsAll) - col("n_del"))).as("avgdl"))
-    }
-    Search.bm25Score(tf, stats, queryTerms, k, k1, b,
+    // the same sum(dl)::double / n_docs division the in-plan stats perform
+    // — one IEEE op over the stored exact integers — passed as literals
+    val nDocs = nDocsAll - nDel
+    Search.bm25Score(tf, nDocs, (sumDlAll - sumDlDel).toDouble / nDocs, queryTerms, k, k1, b,
       serveFilter = predicate, metaCols = metaCols)
   }
 

@@ -2,9 +2,9 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -17,6 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.util
+import scala.jdk.CollectionConverters._
 
 /** `graft-replay`: a DataSource V2 micro-batch source that replays a
   * RECORDED tick table in its stored row order at a configurable
@@ -35,10 +36,12 @@ import java.util
   * micro-batch. Offsets are plain GLOBAL row positions over the static
   * recording (cumulative across files), so recovery from a checkpoint
   * resumes exactly — the engine re-plans `[start, end)` ranges, the stream
-  * maps them back onto per-file slices, and gets identical rows. Readers
-  * skip to their range sequentially (the example-level parquet API has no
-  * row seek); fine for the bounded recordings this source exists for — it
-  * is a REPLAY/testing source, not an ingest path.
+  * maps them back onto per-file slices, and gets identical rows. A reader
+  * seeks to its range start by skipping whole row groups (footer row
+  * counts) and decoding only the row group that holds the start, so a
+  * replay is linear in the recording length once its row groups are
+  * smaller than a micro-batch. It is a REPLAY/testing source, not an
+  * ingest path.
   */
 class TickReplaySource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -85,32 +88,44 @@ object TickReplaySource {
     files
   }
 
-  /** (file, rowCount) per file plus the cumulative global start offset of
-    * each — the offset map a multi-file recording replays through.
+  /** Each file of the recording with its cumulative global start offset,
+    * its row count and its row groups as (file offset, row count), from
+    * the footers — the offset map a multi-file recording replays through.
     */
-  private[sources] def fileOffsets(path: String): Seq[(String, Long, Long)] = {
+  private[sources] def fileOffsets(path: String): Seq[ReplayFile] = {
     val conf = new Configuration()
     var cum = 0L
     resolveFiles(path).map { f =>
-      val in = HadoopInputFile.fromPath(new Path(f), conf)
-      val r = ParquetFileReader.open(in)
-      val n = try r.getRecordCount finally r.close()
-      val entry = (f, cum, n)
-      cum += n
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      val groups = try r.getRowGroups.asScala.map(g => (g.getStartingPos, g.getRowCount)).toIndexedSeq
+        finally r.close()
+      val entry = ReplayFile(f, cum, groups.map(_._2).sum, groups)
+      cum += entry.rows
       entry
     }
   }
 
-  /** Map a global `[start, end)` row range onto per-file partitions. */
+  /** Map a global `[start, end)` row range onto per-file partitions, each
+    * told where its reader seeks to: the row group holding its start.
+    */
   private[sources] def slice(
-      offsets: Seq[(String, Long, Long)], start: Long, end: Long): Array[InputPartition] =
+      offsets: Seq[ReplayFile], start: Long, end: Long): Array[InputPartition] =
     offsets.collect {
-      case (f, fileStart, n) if fileStart < end && fileStart + n > start =>
-        ReplayPartition(f,
-          math.max(0L, start - fileStart),
-          math.min(n, end - fileStart)): InputPartition
+      case f if f.start < end && f.start + f.rows > start =>
+        val from = math.max(0L, start - f.start)
+        // rows before each row group; `g` holds `from` (from < f.rows)
+        val before = f.groups.scanLeft(0L)(_ + _._2)
+        val g = before.lastIndexWhere(_ <= from)
+        ReplayPartition(f.path, from, math.min(f.rows, end - f.start),
+          f.groups(g)._1, before(g)): InputPartition
     }.toArray
 }
+
+/** A recording file: its global start offset, row count and row groups as
+  * (file offset, row count).
+  */
+private[sources] case class ReplayFile(
+    path: String, start: Long, rows: Long, groups: IndexedSeq[(Long, Long)])
 
 private[sources] class ReplayTable(path: String, rowsPerBatch: Long)
     extends Table with SupportsRead {
@@ -131,7 +146,7 @@ private[sources] class ReplayTable(path: String, rowsPerBatch: Long)
         override def toBatch: Batch = new Batch {
           override def planInputPartitions(): Array[InputPartition] =
             TickReplaySource.fileOffsets(path)
-              .map { case (f, _, n) => ReplayPartition(f, 0L, n): InputPartition }
+              .map(f => ReplayPartition(f.path, 0L, f.rows, 0L, 0L): InputPartition)
               .toArray
           override def createReaderFactory(): PartitionReaderFactory =
             new ReplayReaderFactory
@@ -152,9 +167,9 @@ private[sources] class ReplayStream(path: String, rowsPerBatch: Long)
 
   // the recording's offset map: (file, global start offset, row count),
   // cumulative in sorted file order — resolved once, the recording is static
-  private lazy val offsets: Seq[(String, Long, Long)] =
+  private lazy val offsets: Seq[ReplayFile] =
     TickReplaySource.fileOffsets(path)
-  private lazy val totalRows: Long = offsets.map(_._3).sum
+  private lazy val totalRows: Long = offsets.map(_.rows).sum
 
   override def initialOffset(): Offset = ReplayOffset(0L)
   override def deserializeOffset(json: String): Offset = ReplayOffset(json.trim.toLong)
@@ -198,18 +213,26 @@ private[sources] class ReplayStream(path: String, rowsPerBatch: Long)
   override def stop(): Unit = ()
 }
 
-private[sources] case class ReplayPartition(path: String, start: Long, end: Long)
+/** Rows `[start, end)` of one file; the reader opens at file offset
+  * `seekPos`, the row group whose first row is `seekRow`.
+  */
+private[sources] case class ReplayPartition(
+    path: String, start: Long, end: Long, seekPos: Long, seekRow: Long)
     extends InputPartition
 
 private[sources] class ReplayReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ReplayPartition]
     new PartitionReader[InternalRow] {
+      // seek to the range start: the row groups before it are skipped by
+      // opening at the file offset of the row group holding it, and only
+      // that row group is decoded up to it — a micro-batch costs its own
+      // rows, not the recording's prefix
       private val reader: ParquetReader[Group] =
-        ParquetReader.builder(new GroupReadSupport(), new Path(p.path)).build()
-      private var pos = 0L
+        ParquetReader.builder(new GroupReadSupport(), new Path(p.path))
+          .withFileRange(p.seekPos, Long.MaxValue).build()
+      private var pos = p.seekRow // file row of the next record
       private var current: Group = _
-      // sequential skip to the range start (no row seek at this API level)
       while (pos < p.start && { current = reader.read(); current != null }) pos += 1
 
       override def next(): Boolean = {

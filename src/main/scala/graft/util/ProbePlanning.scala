@@ -1,6 +1,11 @@
 package graft.util
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Probe-time relation construction over partitioned index trees.
   *
@@ -67,4 +72,30 @@ object ProbePlanning {
     */
   def withDriverListing[A](spark: SparkSession)(f: SparkSession => A): A =
     f(servingSession(spark))
+
+  /** The Spark schema of the parquet data under `dir` (a data directory or
+    * a partitioned tree; partition columns are not included), from the
+    * footer of its first part file read on the driver. `read.parquet(dir)
+    * .schema` would run a schema-inference Spark job for the same footer.
+    */
+  def footerSchema(spark: SparkSession, dir: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    def visible(st: FileStatus) = {
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    def firstFile(p: Path): Option[FileStatus] = {
+      val (dirs, files) = fs.listStatus(p).filter(visible).sortBy(_.getPath.getName)
+        .partition(_.isDirectory)
+      files.headOption.orElse(dirs.iterator.flatMap(d => firstFile(d.getPath)).nextOption())
+    }
+    val file = firstFile(root).getOrElse(
+      throw new IllegalArgumentException(s"no parquet part file under $dir"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 }

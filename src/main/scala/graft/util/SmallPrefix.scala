@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exclusive prefix sums over a BROADCAST-SIZED keyed frame — the
@@ -19,25 +20,6 @@ import org.apache.spark.sql.functions._
   * `rowsBetween(unboundedPreceding, -1)` frame.
   */
 object SmallPrefix {
-
-  /** 1-based rank over a BROADCAST-SIZED frame (a top-k output):
-    * rank(a) = 1 + |{b : b strictly before a}| via the same broadcast
-    * non-equi self-join — replaces the empty-partitionSpec ranking window
-    * a `orderBy.limit(k)` tail used to need. `before(bAlias, aAlias)` must
-    * encode a STRICT total order (include an id tiebreaker), or two rows
-    * share a rank.
-    */
-  def rankSmall(
-      base: DataFrame,
-      before: (String, String) => Column,
-      out: String = "rank"): DataFrame = {
-    val keep = base.columns.toSeq
-    val a = base.as("__ra")
-    val b = base.withColumn("__one", lit(1)).as("__rb")
-    a.join(broadcast(b), before("__rb", "__ra"), "left")
-      .groupBy(keep.map(c => col(s"__ra.$c").as(c)): _*)
-      .agg((count(col("__rb.__one")) + lit(1L)).as(out))
-  }
 
   def exclusivePrefix(
       base: DataFrame,
@@ -59,4 +41,16 @@ object SmallPrefix {
           coalesce(sum(col(s"__pb.$v")), lit(0L)).as(out)
         }: _*)
   }
+
+  /** Global top-`k` of `df` by `order` (which must be a strict total
+    * order: include an id tiebreaker) with a 1-based `rank` (long):
+    * TakeOrderedAndProject — a distributed partial top-k per partition, k
+    * rows to one task — then `row_number` over those k rows, which are
+    * already one sorted partition, so the ranking adds no exchange and no
+    * sort. Row order is rank order.
+    */
+  def rankTopK(df: DataFrame, order: Seq[Column], k: Int): DataFrame =
+    df.orderBy(order: _*).limit(k)
+      .withColumn("rank", row_number().over(Window.orderBy(order: _*)).cast("long"))
+      .orderBy(col("rank"))
 }

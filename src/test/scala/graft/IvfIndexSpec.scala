@@ -404,6 +404,45 @@ class IvfIndexSpec extends SparkTestBase {
       s"probe planning jobs must not scale with epochs: 2-tree=$jSmall, 11-tree=$jBig")
   }
 
+  test("cold probe job budget: local queries plan with no job, a probe runs <= 3 jobs (<= 4 with deletes)") {
+    import spark.implicits._
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    // a local relation of query vectors, the serving shape: ids disjoint
+    // from the corpus so every neighbor counts
+    val queries = emb.filter(col("vec_id") < 8).collect().toSeq
+      .map(r => (-1L - r.getAs[Number]("vec_id").longValue(),
+        r.getAs[scala.collection.Seq[Float]]("embedding").toArray))
+      .toDF("vec_id", "embedding")
+    val path = java.nio.file.Files.createTempDirectory("graft-ivf-jobs").toString
+    IvfIndex.write(emb.filter(col("vec_id") % 10 =!= 3), path, nlist = 16)
+    // the append reads (and caches) the frozen quantizer; every other
+    // planning fact of the next probe is cold: the append re-signatured
+    // the root, and no probe has read a list footer yet
+    IvfIndex.append(emb.filter(col("vec_id") % 10 === 3), path)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("query_id"), col("rank")).collect().toSeq
+    def coldProbe(budget: Int): Seq[org.apache.spark.sql.Row] = {
+      var df: org.apache.spark.sql.DataFrame = null
+      val jBuild = countJobs { df = IvfIndex.probe(spark, path, queries, k = 10, nprobe = 4) }
+      assert(jBuild == 0, s"building a probe over local queries must run no Spark job, ran $jBuild")
+      var got: Seq[org.apache.spark.sql.Row] = null
+      val jRun = countJobs { got = df.collect().toSeq }
+      assert(jRun <= budget, s"a cold probe must run <= $budget Spark jobs, ran $jRun")
+      got
+    }
+    val afterAppend = coldProbe(3)
+    assert(afterAppend.map(r => r.getAs[Long]("query_id")).distinct.size == 8)
+    IvfIndex.delete(emb.filter(col("vec_id") % 10 === 5), path)
+    val afterDelete = coldProbe(4)
+    assert(afterDelete.forall(r => r.getAs[Long]("neighbor_id") % 10 != 5),
+      "no deleted vector may come back")
+    // the same answers as the probe over a cluster-side query relation
+    assert(afterDelete.sortBy(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank"))) ==
+      rows(IvfIndex.probe(spark, path,
+        emb.filter(col("vec_id") < 8).select((lit(-1L) - col("vec_id")).as("vec_id"),
+          col("embedding")), k = 10, nprobe = 4)))
+  }
+
   test("filtered quantized/PQ probes: only matching rows served, predicate at the scan, scores exact") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 10)

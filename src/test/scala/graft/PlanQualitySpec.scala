@@ -260,13 +260,18 @@ class PlanQualitySpec extends SparkTestBase {
   test("IVF assign: corpus centroid assignment is an expression, not a window") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val df = graft.operators.Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 10), 5)
-    // only two windows may remain: the top-nprobe query assignment (tiny)
-    // and the final per-query ranking — the corpus-sized assignment window
-    // (corpus x nlist shuffle) must be gone
-    val windows = df.queryExecution.optimizedPlan.collect {
+    // only the final per-query ranking window may remain: the corpus-sized
+    // assignment window (corpus x nlist shuffle) must be gone, and the
+    // top-nprobe query assignment is an expression too (no cross join)
+    val plan = df.queryExecution.optimizedPlan
+    val windows = plan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }.size
-    assert(windows == 2, s"expected 2 windows (query assign + final rank), got $windows")
+    assert(windows == 1, s"expected 1 window (final rank), got $windows")
+    val crossJoins = plan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join if j.condition.isEmpty => j
+    }.size
+    assert(crossJoins == 0, s"the probe side must not cross-join the centroids:\n$plan")
   }
 
   test("ANN LSH plan: query side broadcast, no cartesian") {

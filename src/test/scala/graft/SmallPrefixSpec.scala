@@ -4,10 +4,11 @@ import graft.util.SmallPrefix
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Direct pins for the broadcast self-join prefix/rank that replaced every
+/** Direct pins for the broadcast self-join prefix that replaced every
   * single-task window (r15): bit-equality against the window formulation
   * it displaced, on frames with gaps, duplicate-free keys, negative keys,
-  * and single rows — plus the plan property (no WindowExec at all).
+  * and single rows; and for the top-k rank, equality with `row_number` and
+  * no exchange added above the top-k.
   */
 class SmallPrefixSpec extends SparkTestBase {
 
@@ -35,21 +36,28 @@ class SmallPrefixSpec extends SparkTestBase {
     assert(one.getAs[Long]("p") == 0L)
   }
 
-  test("rankSmall == row_number over the same strict order; no WindowExec in its plan") {
+  test("rankTopK == row_number over the same strict order, cut at k") {
     import spark.implicits._
     val base = Seq((10L, 3.0), (11L, 3.0), (12L, 9.0), (13L, 1.0), (14L, 9.0))
-      .toDF("id", "score")
-    val ranked = SmallPrefix.rankSmall(base, (b, a) =>
-      col(s"$b.score") > col(s"$a.score") ||
-        (col(s"$b.score") === col(s"$a.score") && col(s"$b.id") < col(s"$a.id")))
-    val got = ranked.orderBy("rank").collect().map(r => (r.getLong(0), r.getLong(2)))
-    val w = Window.orderBy(col("score").desc, col("id").asc)
+      .toDF("id", "score").repartition(3)
+    val order = Seq(col("score").desc, col("id").asc)
+    val w = Window.orderBy(order: _*)
     val want = base.withColumn("rank", row_number().over(w).cast("long"))
       .orderBy("rank").collect().map(r => (r.getLong(0), r.getLong(2)))
-    assert(got.toSeq == want.toSeq)
-    assert(got.map(_._2).toSeq == (1L to 5L), "ranks dense from 1")
-    // the whole point: no window operator anywhere in the physical plan
-    val plan = ranked.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"rankSmall must not plan a window:\n$plan")
+    for (k <- Seq(1, 3, 5, 9)) {
+      val ranked = SmallPrefix.rankTopK(base, order, k)
+      val got = ranked.collect().map(r => (r.getLong(0), r.getLong(2)))
+      assert(got.toSeq == want.toSeq.take(k), s"k=$k: rows in rank order, ranks dense from 1")
+      // the ranking rides the top-k's single sorted partition: the only
+      // exchange is the one the input repartition asked for
+      val plan = ranked.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      val exchanges = plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+      }
+      assert(exchanges.size == 1, s"k=$k: expected only the input's exchange:\n$plan")
+    }
   }
 }

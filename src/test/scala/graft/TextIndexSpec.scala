@@ -248,6 +248,23 @@ class TextIndexSpec extends SparkTestBase {
       s"probe planning jobs must not scale with epochs: 2-tree=$jSmall, 11-tree=$jBig")
   }
 
+  test("cold probe job budget: <= 6 jobs after an append, <= 7 with live deletes") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val path = java.nio.file.Files.createTempDirectory("graft-text-jobs").toString
+    TextIndex.write(docs.filter(col("doc_id") % 10 =!= 3), path, nBuckets = 16)
+    // every probe below is cold: each commit re-signatures the index root
+    TextIndex.append(docs.filter(col("doc_id") % 10 === 3), path)
+    var got: Seq[org.apache.spark.sql.Row] = null
+    val jAppend = countJobs { got = rows(TextIndex.bm25TopK(spark, path, terms, k = 20)) }
+    assert(jAppend <= 6, s"a cold probe after an append must run <= 6 Spark jobs, ran $jAppend")
+    assert(got == rows(Search.bm25TopK(docs, terms, k = 20)))
+    TextIndex.delete(docs.filter(col("doc_id") % 10 === 5), path)
+    val jDelete = countJobs { got = rows(TextIndex.bm25TopK(spark, path, terms, k = 20)) }
+    assert(jDelete <= 7, s"a cold probe with live deletes must run <= 7 Spark jobs, ran $jDelete")
+    assert(got == rows(Search.bm25TopK(docs.filter(col("doc_id") % 10 =!= 5), terms, k = 20)),
+      "the tombstoned index must answer as the live corpus")
+  }
+
   test("append auto-compaction bounds live trees; probes bit-identical to uncompacted") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val auto = java.nio.file.Files.createTempDirectory("graft-text-aac").toString

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.VectorFunctions
 import graft.functions.expressions.VectorExpressions
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Native codegen'd dot product: bit-identical to the higher-order-function
@@ -195,6 +196,79 @@ class VectorExprSpec extends SparkTestBase {
       val byId = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
       Seq(9001L, 9002L, 9003L, 9004L).foreach(id =>
         assert(byId(id) == minCid, s"nlist=$nlist degenerate vec $id"))
+    }
+  }
+
+  test("graft_nearest_centroids == the top-n row_number window it replaced, codegen and interpreted") {
+    import graft.operators.Similarity
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val base = emb.select(col("vec_id"), col("embedding"))
+    // eight corpus centroids plus exact copies of two of them under higher
+    // cids: every query sees tied scores, which must break by cid ASC
+    val eight = Similarity.collectCentroids(base, 8, "vec_id", "embedding")
+    val cents = (eight ++ Seq(eight(2), eight(5)).zipWithIndex.map { case (c, i) =>
+      (100L + i, c._2, c._3)
+    }).sortBy(_._1)
+    val nlist = cents.length
+    val edges = Seq(
+      Row(9001L, Array.fill[Float](64)(0.0f).toSeq), // zero norm: every score null
+      Row(9002L, (Float.NaN +: Array.fill[Float](63)(0.5f)).toSeq), // NaN scores
+      Row(9003L, null), // null vector
+      Row(9004L, eight(5)._2.map(_.toFloat).toSeq)) // a centroid itself
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType))))
+    // an RDD relation, so the optimizer cannot fold the projection away
+    // and the expression really runs under the configured eval mode
+    val queries = base.filter(col("vec_id") < 40)
+      .unionByName(spark.createDataFrame(spark.sparkContext.parallelize(edges), schema))
+    val cframe = cents.toSeq.toDF("cid", "cv", "cnrm")
+    def windowForm(n: Int): Map[Long, Seq[Long]] = {
+      val qn = queries.select(col("vec_id").as("id"), col("embedding").as("v"),
+        VectorFunctions.l2Norm(col("embedding")).as("nrm"))
+      qn.crossJoin(cframe)
+        .select(col("id"), col("cid"),
+          VectorFunctions.cosine(col("v"), col("cv"), col("nrm"), col("cnrm")).as("csim"))
+        .withColumn("crank", row_number().over(
+          Window.partitionBy(col("id")).orderBy(col("csim").desc, col("cid").asc)))
+        .filter(col("crank") <= n)
+        .collect().groupBy(_.getLong(0))
+        .map { case (id, rs) => id -> rs.sortBy(_.getInt(3)).map(_.getLong(1)).toSeq }
+    }
+    def exprForm(n: Int): Map[Long, Seq[Long]] =
+      Similarity.ivfProbeSide(queries, cents, n, "vec_id", "embedding")
+        .select(col("query_id"), col("cids")).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    def withConf(kv: (String, String)*)(body: => Unit): Unit = {
+      val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally old.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val modes = Seq(
+      "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for (n <- Seq(1, 3, nlist, nlist + 3); (mode, conf) <- modes) withConf(conf: _*) {
+      val want = windowForm(n)
+      val got = exprForm(n)
+      assert(got.keySet == want.keySet && got.size == 44, s"$mode n=$n: query ids differ")
+      got.foreach { case (id, cids) =>
+        assert(cids == want(id), s"$mode n=$n query $id: expression $cids vs window ${want(id)}")
+        assert(cids.size == math.min(n, nlist))
+      }
+      // the degenerate rows: nulls rank last, so an all-null row takes the
+      // lowest cids; a NaN score ranks first; an exact centroid copy ties
+      // with its twin and the lower cid wins
+      assert(got(9001L) == cents.map(_._1).take(n).toSeq, s"$mode n=$n zero norm")
+      assert(got(9003L) == cents.map(_._1).take(n).toSeq, s"$mode n=$n null vector")
+      assert(got(9004L).head == eight(5)._1, s"$mode n=$n centroid copy")
+      if (n > 1) assert(got(9004L)(1) == 101L, s"$mode n=$n tie order")
     }
   }
 

@@ -6,6 +6,10 @@ against the Spark dump the way the driver does — columns sorted by name,
 row values hashed after a stable sort.
 
 Usage: python3 tools/oracle_precheck.py <sfDir> <outDir> [name ...]
+
+Each name is exact or a prefix ending in `*` (quote it from the shell):
+    python3 tools/oracle_precheck.py sf out 'sim_topk_ivf*' 'text_bm25*'
+Comma-separated lists are accepted too, as graft.Verify takes them.
 """
 import json
 import os
@@ -21,9 +25,14 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def selects(entry: str, name: str) -> bool:
+    """An entry ending in `*` is a name prefix; any other is the exact name."""
+    return name.startswith(entry[:-1]) if entry.endswith("*") else name == entry
+
+
 def main() -> int:
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:]) or None
+    only = [e for a in sys.argv[3:] for e in a.split(",") if e] or None
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     con = duckdb.connect()
     for f in os.listdir(sf_dir):
@@ -32,7 +41,7 @@ def main() -> int:
                 f"CREATE VIEW {f[:-8]} AS SELECT * FROM read_parquet('{sf_dir}/{f}')")
     bad = []
     for name, sql in sorted(oracle.items()):
-        if only and name not in only:
+        if only and not any(selects(e, name) for e in only):
             continue
         spark_path = os.path.join(out_dir, name)
         if not os.path.isdir(spark_path):
