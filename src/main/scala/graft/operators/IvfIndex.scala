@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 
 import graft.functions.VectorFunctions._
+import graft.util.IndexTrees
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,14 +27,12 @@ import org.apache.spark.sql.functions._
   *   - `epochs/<e>/lists/cid=<c>/` — appended vectors ([[append]]): a
   *     GROWING corpus adds per-epoch list trees under the FROZEN
   *     centroids instead of full-rebuilding; probes union the base and
-  *     every committed epoch, all still partition-pruned on cid. The same
-  *     epoch-commit discipline as the near-dup admission store
-  *     ([[graft.streaming.NearDupAdmission]]): an ordinary epoch is
-  *     committed iff its lists write carries `_SUCCESS`; a consolidated
-  *     `compact-*` epoch ([[compact]]) is committed iff its `_MERGED`
-  *     manifest exists (written last via atomic rename — the data write
-  *     landing first must stay invisible or it and the roots it copied
-  *     would both be served).
+  *     every committed epoch, all still partition-pruned on cid.
+  *   - `tombstones/<e>/` — (id) of deleted vectors ([[delete]]).
+  *
+  * Trees, epochs, tombstones, compaction and sweeps follow the one
+  * epoch-tree protocol of [[graft.util.IndexTrees]] with the single side
+  * `lists`: its `_SUCCESS` commits a tree.
   *
   * Cluster notes: the build is one corpus scan (assignment is the same
   * scan-stage argmax expression ivfTopK uses) plus a partitioned shuffle
@@ -78,16 +77,67 @@ object IvfIndex {
         s"(${ReservedListCols.toSeq.sorted.mkString(", ")}) — rename before building")
   }
 
-  /** Uncommit the base before a (re)build: the base's commit marker is its
-    * lists `_SUCCESS` — the last write of every builder — so dropping it
-    * first means a crash mid-build leaves the base invisible to
-    * [[listRootsWithIds]] instead of pairing stale lists with fresh
-    * centroids, mirroring the epoch commit protocol.
+  private[graft] def trees(path: String): IndexTrees = IndexTrees(path, Seq("lists"))
+
+  private def listsDir(path: String, id: String): String = trees(path).treeDir(id, "lists")
+
+  /** (id, v, nrm, `cols`…) list rows of a batch, before the rung's columns
+    * and the cid assignment.
     */
-  private def uncommitBase(spark: SparkSession, path: String): Unit = {
-    val p = new Path(s"$path/lists/_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, false)
+  private def listRows(emb: DataFrame, idCol: String, vecCol: String, cols: Seq[String]): DataFrame =
+    emb.select(col(idCol).as("id") +: col(vecCol).as("v") +:
+      l2Norm(col(vecCol)).as("nrm") +: cols.map(col): _*)
+
+  /** The SQ8 columns (`scale`, `qvec`, its norm `qnrm`) — a PURE
+    * PROJECTION of the vector (graft_quantize), attached inline: a self-join
+    * of the batch with its own quantized projection would pay a corpus
+    * exchange for columns the scan computes in place.
+    */
+  private def withSq8(rows: DataFrame): DataFrame =
+    rows
+      .withColumn("__q", graft.functions.expressions.QuantizeExpression.quantizeNative(col("v")))
+      .withColumn("scale", col("__q").getField("scale"))
+      .withColumn("qvec", col("__q").getField("qvec"))
+      .withColumn("qnrm", l2Norm(col("qvec")))
+      .drop("__q")
+
+  private def withPq(rows: DataFrame, codebook: Array[Array[Array[Double]]]): DataFrame =
+    rows
+      .withColumn("codes",
+        graft.functions.expressions.PqEncodeExpression.pqEncodeNative(col("v"), codebook))
+      .withColumn("rnrm", pqReconNorm(col("codes"), codebook))
+
+  /** Write one list tree of `cid`-assigned rows, clustered per cid by the
+    * `filesPerList` dial ([[write]]), partitioned by cid.
+    */
+  private def writeLists(assigned: DataFrame, dir: String, filesPerList: Int): Unit = {
+    val clustered =
+      if (filesPerList <= 1) assigned.repartition(col("cid"))
+      else assigned.repartition(col("cid"), pmod(xxhash64(col("id")), lit(filesPerList.toLong)))
+    clustered.write.mode("overwrite").partitionBy("cid").parquet(dir)
+  }
+
+  /** Build the base of every rung: the store uncommits the old base, then
+    * the quantizer lands, then `rung` adds the rung's columns to the list
+    * rows (writing any index-wide side file of its own, like the PQ
+    * codebook), then the lists commit — a crash mid-build never pairs
+    * stale lists with a fresh quantizer.
+    */
+  private def build(
+      emb: DataFrame, path: String, nlist: Int, idCol: String, vecCol: String,
+      filesPerList: Int, trainIters: Int, keepCols: Seq[String])(
+      rung: DataFrame => DataFrame): Unit = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    requireKeepCols(keepCols)
+    trees(path).writeTree(spark, IndexTrees.Base) { (_, dir) =>
+      val cents = buildCentroids(emb, resolveNlist(emb, nlist), idCol, vecCol, trainIters)
+      cents.toSeq.toDF("cid", "cv", "cnrm")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/centroids")
+      writeLists(rung(listRows(emb, idCol, vecCol, keepCols))
+        .withColumn("cid", Similarity.centroidAssignExpr(cents)), dir, filesPerList)
+    }
   }
 
   /** Coarse quantizer for a build: the lowest-id convention by default, or
@@ -131,25 +181,8 @@ object IvfIndex {
       vecCol: String = "embedding",
       filesPerList: Int = 1,
       trainIters: Int = 0,
-      keepCols: Seq[String] = Nil): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    requireKeepCols(keepCols)
-    uncommitBase(spark, path)
-    val cents = buildCentroids(emb, resolveNlist(emb, nlist), idCol, vecCol, trainIters)
-    cents.toSeq.toDF("cid", "cv", "cnrm")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    val assigned = emb
-      .select(col(idCol).as("id") +: col(vecCol).as("v") +:
-        l2Norm(col(vecCol)).as("nrm") +: keepCols.map(col): _*)
-      .withColumn("cid", Similarity.centroidAssignExpr(cents))
-    val clustered =
-      if (filesPerList <= 1) assigned.repartition(col("cid"))
-      else assigned.repartition(col("cid"), pmod(xxhash64(col("id")), lit(filesPerList.toLong)))
-    clustered.write.mode("overwrite").partitionBy("cid").parquet(s"$path/lists")
-    graft.util.IndexMetaCache.stamp(spark, path)
-  }
+      keepCols: Seq[String] = Nil): Unit =
+    build(emb, path, nlist, idCol, vecCol, filesPerList, trainIters, keepCols)(identity)
 
   /** Build a QUANTIZED index: like [[write]], but each inverted list also
     * carries the vector's symmetric-int8 form ([[Similarity.quantize]] —
@@ -169,35 +202,8 @@ object IvfIndex {
       vecCol: String = "embedding",
       filesPerList: Int = 1,
       trainIters: Int = 0,
-      keepCols: Seq[String] = Nil): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    requireKeepCols(keepCols)
-    uncommitBase(spark, path)
-    val cents = buildCentroids(emb, resolveNlist(emb, nlist), idCol, vecCol, trainIters)
-    cents.toSeq.toDF("cid", "cv", "cnrm")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    // SQ8 columns are a PURE PROJECTION of the vector (graft_quantize) —
-    // attached inline (r17; was a self-join of the corpus with its own
-    // quantized projection on id: a full corpus exchange at scale, paid
-    // for columns the scan can compute in place — guide §2.4)
-    val qq = graft.functions.expressions.QuantizeExpression.quantizeNative(col("v"))
-    val assigned = emb
-      .select(col(idCol).as("id") +: col(vecCol).as("v") +:
-        l2Norm(col(vecCol)).as("nrm") +: keepCols.map(col): _*)
-      .withColumn("__q", qq)
-      .withColumn("scale", col("__q").getField("scale"))
-      .withColumn("qvec", col("__q").getField("qvec"))
-      .withColumn("qnrm", l2Norm(col("qvec")))
-      .drop("__q")
-      .withColumn("cid", Similarity.centroidAssignExpr(cents))
-    val clustered =
-      if (filesPerList <= 1) assigned.repartition(col("cid"))
-      else assigned.repartition(col("cid"), pmod(xxhash64(col("id")), lit(filesPerList.toLong)))
-    clustered.write.mode("overwrite").partitionBy("cid").parquet(s"$path/lists")
-    graft.util.IndexMetaCache.stamp(spark, path)
-  }
+      keepCols: Seq[String] = Nil): Unit =
+    build(emb, path, nlist, idCol, vecCol, filesPerList, trainIters, keepCols)(withSq8)
 
   /** Build a PRODUCT-QUANTIZED index: the memory-ladder rung above SQ8
     * ([[writeQuantized]]). The vector's dimensions split into
@@ -233,32 +239,17 @@ object IvfIndex {
     import spark.implicits._
     require(numSubspaces >= 1 && ksub >= 1 && ksub <= 128,
       s"need 1 <= numSubspaces and 1 <= ksub <= 128, got ($numSubspaces, $ksub)")
-    requireKeepCols(keepCols)
-    uncommitBase(spark, path)
-    val cents = buildCentroids(emb, resolveNlist(emb, nlist), idCol, vecCol, trainIters)
-    cents.toSeq.toDF("cid", "cv", "cnrm")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    val codebook =
-      if (pqTrainIters <= 0) pqCodebook(emb, numSubspaces, ksub, idCol, vecCol)
-      else pqCodebookTrained(emb, numSubspaces, ksub, pqTrainIters, idCol, vecCol)
-    codebook.zipWithIndex.flatMap { case (words, m) =>
-      words.zipWithIndex.map { case (w, j) => (m, j, w.toSeq) }
-    }.toSeq.toDF("m", "j", "w")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/pq")
-    val assigned = emb
-      .select(col(idCol).as("id") +: col(vecCol).as("v") +:
-        l2Norm(col(vecCol)).as("nrm") +: keepCols.map(col): _*)
-      .withColumn("cid", Similarity.centroidAssignExpr(cents))
-      .withColumn("codes",
-        graft.functions.expressions.PqEncodeExpression.pqEncodeNative(col("v"), codebook))
-      .withColumn("rnrm", pqReconNorm(col("codes"), codebook))
-    val clustered =
-      if (filesPerList <= 1) assigned.repartition(col("cid"))
-      else assigned.repartition(col("cid"), pmod(xxhash64(col("id")), lit(filesPerList.toLong)))
-    clustered.write.mode("overwrite").partitionBy("cid").parquet(s"$path/lists")
-    graft.util.IndexMetaCache.stamp(spark, path)
+    build(emb, path, nlist, idCol, vecCol, filesPerList, trainIters, keepCols) { rows =>
+      val codebook =
+        if (pqTrainIters <= 0) pqCodebook(emb, numSubspaces, ksub, idCol, vecCol)
+        else pqCodebookTrained(emb, numSubspaces, ksub, pqTrainIters, idCol, vecCol)
+      codebook.zipWithIndex.flatMap { case (words, m) =>
+        words.zipWithIndex.map { case (w, j) => (m, j, w.toSeq) }
+      }.toSeq.toDF("m", "j", "w")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/pq")
+      withPq(rows, codebook)
+    }
   }
 
   /** Probe a PQ index ([[writePq]]): rank each probed list's members by the
@@ -437,12 +428,14 @@ object IvfIndex {
 
   /** Append new vectors to an existing index WITHOUT rebuilding: assign
     * them against the frozen centroids and write one new committed epoch
-    * (`epochs/<e>/lists/cid=<c>/`). The epoch's single lists write is its
-    * commit unit — a crash mid-write leaves no `_SUCCESS` and the epoch is
-    * invisible wholesale; re-running the append after a crash writes a
-    * fresh uniquely-named epoch (append does NOT dedup ids — the caller
-    * owns id uniqueness, e.g. by appending only post-watermark ids or by
-    * fronting the index with the admission store).
+    * (`epochs/<e>/lists/cid=<c>/`). Re-running an append after a crash
+    * writes a fresh uniquely-named epoch (append does NOT dedup ids — the
+    * caller owns id uniqueness, e.g. by appending only post-watermark ids
+    * or by fronting the index with the admission store); a STREAMING
+    * caller instead passes a deterministic `epochId` keyed by its
+    * micro-batch, and a replay uncommits and rewrites that epoch. An empty
+    * batch is a no-op, never an epoch. `maxLiveTrees > 0` compacts all but
+    * the newest epoch (`keepLatest = 1`) once more trees than that serve.
     *
     * Quantized indexes are detected from the base list schema (`qvec` →
     * SQ8 columns; `codes` → PQ codes re-encoded against the stored
@@ -466,73 +459,20 @@ object IvfIndex {
       sweepGraceMs: Long = 0L): Unit = {
     val spark = emb.sparkSession
     val cents = readCentroids(spark, path)
-    val roots = listRoots(spark, path)
-    require(roots.nonEmpty, s"no index lists at $path — build with write() first")
-    // cached keyed by the head tree's immutable lists dir (r17): the list
-    // schema is frozen for the index's life, so the per-append partition
-    // discovery + footer read runs once, not once per append
-    val baseFields = graft.util.IndexMetaCache
-      .getOrCompute(spark, roots.head, "ivf.baseFields") {
-        spark.read.parquet(roots.head).schema.fieldNames.toSet
-      }
-    // metadata columns the build persisted (write's keepCols): everything
-    // beyond the engine's own list schema — appended rows must carry them
-    // too, or probe-time predicates would see nulls for this epoch
-    val metaCols = (baseFields -- Set(
-      "id", "v", "nrm", "cid", "qvec", "scale", "qnrm", "codes", "rnrm")).toSeq.sorted
-    val base = emb
-      .select(col(idCol).as("id") +: col(vecCol).as("v") +:
-        l2Norm(col(vecCol)).as("nrm") +: metaCols.map(col): _*)
-    val withQ =
-      if (baseFields.contains("qvec")) {
-        // inline projection, not a self-join on id — same r17 fix as
-        // [[writeQuantized]] (the appended batch would otherwise pay a
-        // corpus exchange for scan-computable columns)
-        val qq = graft.functions.expressions.QuantizeExpression.quantizeNative(col("v"))
-        base
-          .withColumn("__q", qq)
-          .withColumn("scale", col("__q").getField("scale"))
-          .withColumn("qvec", col("__q").getField("qvec"))
-          .withColumn("qnrm", l2Norm(col("qvec")))
-          .drop("__q")
-      } else if (baseFields.contains("codes")) {
-        val codebook = readPqCodebook(spark, path)
-        base
-          .withColumn("codes",
-            graft.functions.expressions.PqEncodeExpression.pqEncodeNative(col("v"), codebook))
-          .withColumn("rnrm", pqReconNorm(col("codes"), codebook))
-      } else base
-    val assigned = withQ.withColumn("cid", Similarity.centroidAssignExpr(cents))
-    val clustered =
-      if (filesPerList <= 1) assigned.repartition(col("cid"))
-      else assigned.repartition(col("cid"), pmod(xxhash64(col("id")), lit(filesPerList.toLong)))
-    // default: unique per call (count prefix is cosmetic ordering; the uuid
-    // is the collision guard) — a crashed append never collides with its
-    // retry. A STREAMING caller instead passes a DETERMINISTIC `epochId`
-    // keyed by its micro-batch id: an at-least-once replay then OVERWRITES
-    // its own epoch (the overwrite drops `_SUCCESS` first, so the epoch is
-    // invisible during the rewrite) instead of double-serving the batch.
-    val epoch = epochId.getOrElse(
-      f"${rawEpochs(spark, path).size}%08d-${java.util.UUID.randomUUID.toString.take(8)}")
-    clustered.write.mode("overwrite").partitionBy("cid").parquet(s"$path/epochs/$epoch/lists")
-    // an EMPTY append must be a NO-OP, never an epoch: a zero-row epoch
-    // directory has no parquet footers, so every later probe/compaction
-    // that opens it dies on schema inference — a data-dependent poison
-    // pill planted by whatever upstream filter happened to match nothing
-    // (an empty micro-batch, an ingest slice past the corpus end).
-    // Detected AFTER the write by one FS listing (a zero-row partitioned
-    // write leaves no cid= dirs), so the common non-empty path pays no
-    // extra Spark job — an up-front isEmpty cost a scheduling round per
-    // append, measured ~0.2 s x 11 ops per epoch-store build.
-    if (dropEpochIfRowless(spark, s"$path/epochs/$epoch", "lists", "cid=")) return
-    graft.util.IndexMetaCache.stamp(spark, path)
-    // auto-compaction dial (same as the streaming ingesters'): once more
-    // than `maxLiveTrees` trees serve, fold all but the newest epoch into
-    // one compact tree — probe planning cost stays flat across unbounded
-    // appends with no manual maintenance. keepLatest = 1 so a caller that
-    // replays its own newest epoch (deterministic epochId) rewrites only
-    // itself. 0 disables (default: existing callers manage compaction).
-    if (maxLiveTrees > 0 && liveTreeIds(spark, path).size > maxLiveTrees)
+    // the list schema is frozen for the index's life: metadata columns the
+    // build persisted (write's keepCols) ride every appended epoch too, or
+    // probe-time predicates would see nulls for this epoch; the rung's
+    // marker columns pick the SQ8 / PQ re-encoding
+    val baseFields = listFieldNames(spark, path)
+    val rows = listRows(emb, idCol, vecCol, (baseFields -- ReservedListCols).toSeq.sorted)
+    val withRung =
+      if (baseFields.contains("qvec")) withSq8(rows)
+      else if (baseFields.contains("codes")) withPq(rows, readPqCodebook(spark, path))
+      else rows
+    val epoch = epochId.getOrElse(trees(path).newEpochId(spark))
+    val assigned = withRung.withColumn("cid", Similarity.centroidAssignExpr(cents))
+    if (trees(path).writeTree(spark, epoch)((_, dir) => writeLists(assigned, dir, filesPerList)) &&
+        maxLiveTrees > 0 && trees(path).liveTrees(spark).size > maxLiveTrees)
       compact(spark, path, filesPerList, keepLatest = 1, sweepGraceMs = sweepGraceMs)
   }
 
@@ -552,87 +492,22 @@ object IvfIndex {
     * frozen by design and centroids are reference points, not corpus
     * members.
     *
-    * Crash contract: the epoch's `_SUCCESS` is its commit marker — a crash
-    * mid-write leaves it invisible; re-running the delete writes a fresh
-    * uniquely-named epoch (idempotent: tombstoning an id twice is the
-    * identity).
+    * Re-running a delete writes a fresh uniquely-named epoch (idempotent:
+    * tombstoning an id twice is the identity). Ids are written as given —
+    * every reader tolerates duplicates (anti-joins, and `describe`'s
+    * distinct count), so the write pays no dedupe shuffle.
     */
   def delete(
       ids: DataFrame,
       path: String,
       idCol: String = "vec_id",
-      epochId: Option[String] = None): Unit = {
-    // empty tombstone set: no-op — never a pointless epoch (unlike the
-    // appends' free post-write detection, a coalesce(1) write of an empty
-    // frame DOES emit a footer-valid zero-row part file, so the guard
-    // here is an up-front isEmpty; deletes are rare enough that the one
-    // scheduling round does not matter)
-    if (ids.isEmpty) return
-    val spark = ids.sparkSession
-    val epoch = epochId.getOrElse(
-      f"${rawTombstoneEpochs(spark, path).size}%08d-${java.util.UUID.randomUUID.toString.take(8)}")
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/tombstones/$epoch")
-    graft.util.IndexMetaCache.stamp(spark, path)
-  }
+      epochId: Option[String] = None): Unit =
+    trees(path).writeTombstones(ids.select(col(idCol).cast("long").as("id")), epochId)
 
-  /** Delete `root` (an epoch/tombstone directory) when its `sub` payload
-    * directory contains no entry starting with `prefix` — the signature of
-    * a ZERO-ROW write (only `_SUCCESS`, no partition dirs / part files),
-    * which would poison later schema inference. Returns true when dropped.
-    * Pure FS metadata — no Spark job.
-    */
-  private[operators] def dropEpochIfRowless(
-      spark: SparkSession, root: String, sub: String, prefix: String): Boolean = {
-    val payload = new Path(if (sub.isEmpty) root else s"$root/$sub")
-    val fs = payload.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasRows = fs.exists(payload) &&
-      fs.listStatus(payload).exists(_.getPath.getName.startsWith(prefix))
-    if (!hasRows) fs.delete(new Path(root), true)
-    !hasRows
-  }
-
-  /** Every tombstone epoch directory name, committed or not. */
-  private def rawTombstoneEpochs(spark: SparkSession, path: String): Seq[String] = {
-    val root = new Path(s"$path/tombstones")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName).sorted
-  }
-
-  /** Committed tombstone epochs, minus any a compaction already applied.
-    * Cached keyed by the mutable root — same invalidate-per-mutation
-    * rationale as [[listRootsWithIds]] (probes read the [[probePlan]]
-    * bundle instead).
-    */
-  private def liveTombstoneEpochs(spark: SparkSession, path: String): Seq[String] =
-    graft.util.IndexMetaCache.getOrCompute(spark, path, "ivf.liveTombstoneEpochs") {
-      liveTombstoneEpochsNow(spark, path)
-    }
-
-  private def liveTombstoneEpochsNow(spark: SparkSession, path: String): Seq[String] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dead = mergedIds(spark, path)
-    rawTombstoneEpochs(spark, path)
-      .filter(e => fs.exists(new Path(s"$path/tombstones/$e/_SUCCESS")))
-      .filterNot(e => dead.contains(s"tombstones/$e"))
-  }
-
-  /** The live tombstoned ids as written (an id deleted twice appears
-    * twice — an anti-join needs no dedupe), or None when nothing is
-    * deleted. The tombstone schema is fixed by [[delete]], so the read
-    * infers nothing and lists on the driver: no Spark job to plan it.
-    */
-  private def readTombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    readTombstonesOf(spark, path, liveTombstoneEpochs(spark, path))
-
+  /** The tombstoned ids of `epochs` as written, or None. */
   private def readTombstonesOf(
       spark: SparkSession, path: String, epochs: Seq[String]): Option[DataFrame] =
-    if (epochs.isEmpty) None
-    else Some(graft.util.ProbePlanning.withDriverListing(spark) { ss =>
-      ss.read.schema("id BIGINT").parquet(epochs.map(e => s"$path/tombstones/$e"): _*)
-    })
+    trees(path).readTombstones(spark, epochs, "id BIGINT")
 
   /** Operational snapshot of the index's serving state: one row per live
     * tree — (kind = base|epoch|compact, per-kind ordinal in committed
@@ -645,17 +520,12 @@ object IvfIndex {
     */
   def describe(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val roots = listRootsWithIds(spark, path)
-    require(roots.nonEmpty, s"no index lists at $path — build with write() first")
-    def kindOf(t: String) =
-      if (t == "base") "base" else if (t.startsWith("compact-")) "compact" else "epoch"
-    val ordinals = roots.map(_._1).groupBy(kindOf).flatMap { case (_, ts) =>
-      ts.zipWithIndex.map { case (t, i) => t -> i.toLong }
+    val (live, tombs) = trees(path).live(spark)
+    require(live.nonEmpty, s"no index lists at $path — build with write() first")
+    val treeRows = live.zip(IndexTrees.kinds(live)).map { case (t, (kind, ordinal)) =>
+      (kind, ordinal, spark.read.parquet(listsDir(path, t)).select(col("id")).count())
     }
-    val treeRows = roots.map { case (t, r) =>
-      (kindOf(t), ordinals(t), spark.read.parquet(r).select(col("id")).count())
-    }
-    val tombRow = readTombstones(spark, path) match {
+    val tombRow = readTombstonesOf(spark, path, tombs) match {
       case Some(ts) => Seq(("tombstones", 0L, ts.distinct().count()))
       case None => Seq.empty
     }
@@ -666,19 +536,15 @@ object IvfIndex {
 
   /** Consolidate the base lists and every committed epoch into ONE
     * `compact-*` epoch, then sweep the replaced trees — the maintenance op
-    * that stops per-epoch accretion from making probes file-listing-bound
-    * (same small-files argument as the admission store's compaction). Pure
-    * IO: rows are unioned — never re-assigned or re-quantized — with live
-    * tombstones APPLIED and retired in the same `_MERGED` commit (the
-    * manifest names them alongside the replaced roots), so deleted rows
-    * leave disk here.
-    *
-    * Crash contract: the consolidated epoch's commit marker is its
-    * `_MERGED` manifest, written last via atomic rename and naming the
-    * roots it replaced; a crash before the rename leaves an orphaned,
-    * invisible compact tree (reclaimed by the next sweep), a crash after
-    * it leaves replaced trees that are already invisible. Run between
-    * probes/appends — maintenance does not race itself.
+    * that stops per-epoch accretion from making probes file-listing-bound.
+    * Pure IO: rows are unioned — never re-assigned or re-quantized — with
+    * live tombstones APPLIED and retired in the same `_MERGED` commit, so
+    * deleted rows leave disk here. `keepLatest` and `sweepGraceMs`: see
+    * [[graft.util.IndexTrees.compact]] and its sweep. A grace is REQUIRED
+    * when probes run concurrently with maintenance: a probe planned
+    * against the old tree list may still be scanning its files, and an
+    * immediate sweep fails it with FILE_NOT_EXIST (found by the
+    * serving_mixed_churn bench).
     */
   def compact(
       spark: SparkSession,
@@ -688,29 +554,8 @@ object IvfIndex {
       sweepGraceMs: Long = 0L): Unit =
     compact(spark, path, filesPerList, sweep = true, keepLatest, sweepGraceMs)
 
-  private[graft] def compact(
-      spark: SparkSession,
-      path: String,
-      filesPerList: Int,
-      sweep: Boolean): Unit =
-    compact(spark, path, filesPerList, sweep, keepLatest = 0, sweepGraceMs = 0L)
-
   /** `sweep = false` stops after the manifest commit (the crash-mid-sweep
-    * state; exercised by IvfIndexSpec — production uses the sweeping
-    * overload). `keepLatest > 0` excludes the newest N ordinary epochs from
-    * the merge (the streaming ingester's replay-safety guard: an epoch not
-    * yet past its streaming checkpoint must stay un-merged so a replay
-    * rewrites only itself); tombstones are applied and retired only on a
-    * FULL compact, since a protected epoch may hold rows of a tombstoned id
-    * and retiring the tombstone would resurrect them. `sweepGraceMs > 0`
-    * defers reclaiming a replaced tree until its manifest has aged past
-    * the window — REQUIRED when probes run concurrently with maintenance
-    * (a probe planned against the old tree list may still be scanning its
-    * files; an immediate sweep fails it with FILE_NOT_EXIST — found by the
-    * serving_mixed_churn bench). Replaced trees are invisible to every
-    * NEW plan the moment the manifest commits either way; the grace only
-    * delays the disk reclaim, and any later sweep (e.g. the next
-    * auto-compaction) reclaims what has aged out.
+    * state the specs build).
     */
   private[graft] def compact(
       spark: SparkSession,
@@ -718,194 +563,22 @@ object IvfIndex {
       filesPerList: Int,
       sweep: Boolean,
       keepLatest: Int,
-      sweepGraceMs: Long): Unit = {
-    val allRoots = listRootsWithIds(spark, path)
-    val protectSet = allRoots.map(_._1)
-      .filter(t => t != "base" && !t.startsWith("compact-"))
-      .sorted.takeRight(keepLatest).toSet
-    val roots = allRoots.filterNot(r => protectSet(r._1))
-    val tombstones =
-      if (protectSet.isEmpty) liveTombstoneEpochs(spark, path) else Seq.empty
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (roots.size > 1 || (roots.nonEmpty && tombstones.nonEmpty)) {
-      val all = roots.map(_._2)
-        .map(r => spark.read.parquet(r).withColumn("cid", col("cid").cast("long")))
+      sweepGraceMs: Long): Unit =
+    trees(path).compact(spark, keepLatest, sweep, sweepGraceMs) { (replaced, tombs, cpt) =>
+      val all = replaced
+        .map(t => spark.read.parquet(listsDir(path, t)).withColumn("cid", col("cid").cast("long")))
         .reduce(_.unionByName(_))
-      // apply live deletes permanently: the consolidated tree is the
-      // anti-joined survivors, and the manifest retires the tombstone
-      // epochs in the same commit
-      val live =
-        (if (protectSet.isEmpty) readTombstones(spark, path) else None) match {
-          case Some(ts) => all.join(broadcast(ts), Seq("id"), "left_anti")
-          case None => all
-        }
-      val clustered =
-        if (filesPerList <= 1) live.repartition(col("cid"))
-        else live.repartition(col("cid"), pmod(xxhash64(col("id")), lit(filesPerList.toLong)))
-      val cpt = s"compact-${java.util.UUID.randomUUID.toString.take(8)}"
-      clustered.write.mode("overwrite").partitionBy("cid")
-        .parquet(s"$path/epochs/$cpt/lists")
-      val tmp = new Path(s"$path/epochs/$cpt/lists/_MERGED.tmp")
-      val out = fs.create(tmp, true)
-      try out.write((roots.map(_._1) ++ tombstones.map(e => s"tombstones/$e"))
-        .mkString("\n").getBytes("UTF-8")) finally out.close()
-      fs.rename(tmp, new Path(s"$path/epochs/$cpt/lists/_MERGED"))
-      graft.util.IndexMetaCache.stamp(spark, path)
-    }
-    if (sweep) sweepMerged(spark, path, sweepGraceMs)
-  }
-
-  /** Delete list trees a committed `_MERGED` manifest replaced — but only
-    * once that manifest has aged `graceMs` (see [[compact]]'s
-    * serving-concurrency note; replaced trees are invisible to new plans
-    * regardless) — plus any orphaned pre-manifest compact tree, which no
-    * reader can ever have planned against.
-    *
-    * ORDERING INVARIANT (the churn test's resurrection catch): a COMPACT
-    * tree is reclaimed only after every tree its OWN manifest names is
-    * already gone. Its manifest is the only record keeping those trees
-    * dead — deleting it while a grace window still defers them would
-    * resurrect them next to their consolidated copy (double-serving).
-    * Manifests are processed oldest-first so one full-aged sweep settles
-    * a whole chain; anything still guarded is left for a later sweep.
-    */
-  private def sweepMerged(spark: SparkSession, path: String, graceMs: Long = 0L): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val now = System.currentTimeMillis()
-    def manifestOf(e: String) = new Path(s"$path/epochs/$e/lists/_MERGED")
-    def namedIds(m: Path): List[String] = {
-      val in = fs.open(m)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    }
-    def treeGone(id: String): Boolean = id match {
-      case "base" => !fs.exists(new Path(s"$path/lists"))
-      case t if t.startsWith("tombstones/") => !fs.exists(new Path(s"$path/$t"))
-      case e2 => !fs.exists(new Path(s"$path/epochs/$e2"))
-    }
-    val manifests = committedEpochIds(spark, path)
-      .map(manifestOf).filter(fs.exists(_))
-      .map(m => (m, fs.getFileStatus(m).getModificationTime))
-      .sortBy(_._2)
-    for ((m, mtime) <- manifests
-         if graceMs <= 0L || now - mtime >= graceMs) {
-      namedIds(m).foreach {
-        case "base" => fs.delete(new Path(s"$path/lists"), true)
-        case t if t.startsWith("tombstones/") =>
-          fs.delete(new Path(s"$path/$t"), true)
-        case e2 if !e2.startsWith("compact-") =>
-          fs.delete(new Path(s"$path/epochs/$e2"), true)
-        case c =>
-          val own = manifestOf(c)
-          if (!fs.exists(own) || namedIds(own).forall(treeGone))
-            fs.delete(new Path(s"$path/epochs/$c"), true)
+      val live = readTombstonesOf(spark, path, tombs) match {
+        case Some(ts) => all.join(broadcast(ts), Seq("id"), "left_anti")
+        case None => all
       }
-    }
-    rawEpochs(spark, path)
-      .filter(e => e.startsWith("compact-") &&
-        !fs.exists(new Path(s"$path/epochs/$e/lists/_MERGED")))
-      .foreach(e => fs.delete(new Path(s"$path/epochs/$e"), true))
-  }
-
-  /** Root ids named by any committed compact manifest ("base" = the
-    * original `lists` tree).
-    */
-  private def mergedIds(spark: SparkSession, path: String): Set[String] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    committedEpochIds(spark, path).flatMap { e =>
-      val m = new Path(s"$path/epochs/$e/lists/_MERGED")
-      if (!fs.exists(m)) Seq.empty
-      else {
-        val in = fs.open(m)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      }
-    }.toSet
-  }
-
-  /** Every epoch directory name under `path/epochs`, committed or not. */
-  private def rawEpochs(spark: SparkSession, path: String): Seq[String] = {
-    val root = new Path(s"$path/epochs")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName).sorted
-  }
-
-  /** Committed epoch ids: ordinary epochs need their lists `_SUCCESS`;
-    * compact epochs need their `_MERGED` manifest (see [[compact]]).
-    */
-  private def committedEpochIds(spark: SparkSession, path: String): Seq[String] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    rawEpochs(spark, path).filter { e =>
-      if (e.startsWith("compact-")) fs.exists(new Path(s"$path/epochs/$e/lists/_MERGED"))
-      else fs.exists(new Path(s"$path/epochs/$e/lists/_SUCCESS"))
-    }
-  }
-
-  /** (id, path) of every live list tree: the base `lists` plus committed
-    * epochs, minus anything a committed compaction replaced.
-    *
-    * Cached keyed by the MUTABLE index root (r18): the listing is a
-    * function of the tree set, so it must invalidate per mutation — which
-    * the root's FS signature does (every writer stamps) — but between
-    * mutations a multi-tree epoch store was paying full epoch listings,
-    * per-epoch commit-marker exists checks and compact-manifest reads on
-    * every probe-planning call (the r17 re-key moved this walk out of the
-    * cached block; epochs probes regressed ~20–40%). One signature walk
-    * per call remains, as it must — which is why the probe path reads the
-    * [[probePlan]] bundle instead of calling this repeatedly.
-    */
-  private def listRootsWithIds(spark: SparkSession, path: String): Seq[(String, String)] =
-    graft.util.IndexMetaCache.getOrCompute(spark, path, "ivf.listRootsWithIds") {
-      listRootsWithIdsNow(spark, path)
+      writeLists(live, listsDir(path, cpt), filesPerList)
     }
 
-  private def listRootsWithIdsNow(
-      spark: SparkSession, path: String): Seq[(String, String)] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dead = mergedIds(spark, path)
-    // base live iff its lists `_SUCCESS` exists — the marker every builder
-    // writes LAST ([[uncommitBase]]), so a half-built base stays invisible
-    val base =
-      if (fs.exists(new Path(s"$path/lists/_SUCCESS")) && !dead.contains("base"))
-        Seq("base" -> s"$path/lists")
-      else Seq.empty
-    base ++ committedEpochIds(spark, path)
-      .filterNot(dead)
-      .map(e => e -> s"$path/epochs/$e/lists")
-  }
-
-  /** Everything a probe's PLANNING needs — live list roots and the live
-    * tombstone epochs — as ONE root-keyed cache entry, so a probe pays
-    * exactly ONE FS-signature walk (r18: per-kind keys each re-derive the
-    * signature per call; multiple planning lookups per probe measured as
-    * the epochs-probe floor). Mutations invalidate through the root
-    * signature (every writer stamps).
-    */
-  private def probePlan(
-      spark: SparkSession, path: String): (Seq[(String, String)], Seq[String]) =
-    graft.util.IndexMetaCache.getOrCompute(spark, path, "ivf.probePlan") {
-      (listRootsWithIdsNow(spark, path), liveTombstoneEpochsNow(spark, path))
-    }
-
-  /** Live tree ids (base + committed epochs) — the streaming ingester's
-    * liveness/auto-compaction probe.
-    */
-  private[graft] def liveTreeIds(spark: SparkSession, path: String): Seq[String] =
-    listRootsWithIds(spark, path).map(_._1)
-
-  /** Live list-tree paths for a probe. */
+  /** Live list-tree paths. */
   private def listRoots(spark: SparkSession, path: String): Seq[String] =
-    listRootsWithIds(spark, path).map(_._2)
+    trees(path).liveTrees(spark).map(listsDir(path, _))
 
-  /** One DataFrame over every live list tree: each tree is loaded as its
-    * own partition-discovery base and the trees are unioned — Spark cannot
-    * infer a single partitioning across base + epoch roots (conflicting
-    * directory structures), but a `cid` predicate pushes through the union
-    * into EVERY per-tree scan, so probes stay partition-pruned in each
-    * (IvfIndexSpec pins filters + selected-directory counts across all
-    * scans).
-    */
   /** The probed slice of every live list tree as ONE relation: cid pruning
     * happens on the DRIVER, before any relation exists — the probed cid
     * set is known (≤ nlist values from the driver-resident quantizer), so
@@ -923,10 +596,10 @@ object IvfIndex {
   private def readLists(
       spark: SparkSession, path: String, probedCids: Seq[Long],
       predicate: Option[Column] = None): DataFrame = {
-    // roots + tombstone epochs from the ONE root-keyed bundle (r18): the
-    // probe pays a single FS-signature walk for all its planning facts
-    val (rootsWithIds, tombEpochs) = probePlan(spark, path)
-    val roots = rootsWithIds.map(_._2)
+    // live trees + tombstone epochs from ONE root-keyed cache entry (r18):
+    // the probe pays a single FS-signature walk for all its planning facts
+    val (live, tombEpochs) = trees(path).live(spark)
+    val roots = live.map(listsDir(path, _))
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dirs = for {
       r <- roots

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 
 import graft.functions.TextFunctions.tokens
+import graft.util.IndexTrees
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,16 +34,14 @@ import org.apache.spark.sql.functions._
   *     GROWING corpus adds per-epoch posting trees plus a delta meta
   *     (n_docs, sum_dl of just that batch) under the base build's FROZEN
   *     bucket count, instead of full-rebuilding. Probes union the base and
-  *     every committed epoch's postings (the bucket predicate pushes into
-  *     each tree's scan) and SUM the metas — df, n_docs and avgdl are all
-  *     additive, so an appended index answers bit-identically to a full
-  *     rebuild over the union (pinned in TextIndexSpec). Commit protocol:
-  *     postings are written FIRST, the epoch's meta LAST — the meta
-  *     `_SUCCESS` is the commit marker, so a crash mid-append leaves the
-  *     epoch invisible; replays with a deterministic `epochId` uncommit
-  *     (delete the meta) before rewriting. [[compact]] consolidates the
-  *     live trees into one `compact-*` epoch behind an atomic `_MERGED`
-  *     manifest — the same maintenance discipline as the IVF index.
+  *     every committed epoch's postings and SUM the metas — df, n_docs and
+  *     avgdl are all additive, so an appended index answers bit-identically
+  *     to a full rebuild over the union (pinned in TextIndexSpec).
+  *   - `tombstones/<e>/` — (doc_id, dl) of deleted documents ([[delete]]).
+  *
+  * Trees, epochs, tombstones, compaction and sweeps follow the one
+  * epoch-tree protocol of [[graft.util.IndexTrees]] with sides
+  * `postings, meta`: the meta's `_SUCCESS` commits a tree.
   *
   * Cluster notes: the build is one tokenize scan + one partial-aggregated
   * groupBy + a partitioned shuffle write. `nBuckets` should scale with
@@ -146,20 +145,22 @@ object TextIndex {
       filesPerBucket: Int = 1,
       keepCols: Seq[String] = Nil): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-    // the base pair follows the SAME commit protocol as an epoch: uncommit
-    // (delete the meta) first, postings next, meta LAST — its `_SUCCESS` is
-    // the base's commit marker. A crash mid-build leaves the base invisible
-    // to [[liveTrees]] instead of half-served, and a rebuild over an
-    // existing index can never pair fresh postings with a stale meta.
-    val spark = docs.sparkSession
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(s"$path/meta"), true)
     val (meta, postings) = postingRows(docs, nBuckets, idCol, textCol, keepCols)
-    clusterForWrite(postings, nBuckets, filesPerBucket)
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/postings")
-    meta.coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    graft.util.IndexMetaCache.stamp(spark, path)
+    writeTree(docs.sparkSession, path, IndexTrees.Base, meta, postings, nBuckets, filesPerBucket)
   }
+
+  /** Write tree `id`'s postings, then its meta, under the store's commit
+    * protocol. Returns false when an epoch's postings came out empty.
+    */
+  private def writeTree(
+      spark: SparkSession, path: String, id: String, meta: DataFrame, postings: DataFrame,
+      nBuckets: Int, filesPerBucket: Int): Boolean =
+    trees(path).writeTree(spark, id) {
+      case ("postings", dir) =>
+        clusterForWrite(postings, nBuckets, filesPerBucket)
+          .write.mode("overwrite").partitionBy("bucket").parquet(dir)
+      case (_, dir) => meta.coalesce(1).write.mode("overwrite").parquet(dir)
+    }
 
   /** Append a batch of NEW documents as a committed epoch under the base
     * build's frozen bucket count. Probes answer over base + every committed
@@ -169,11 +170,11 @@ object TextIndex {
     * what the index already serves (a re-appended document would
     * double-count itself into df and the corpus stats).
     *
-    * Crash/replay contract: postings land first, the epoch's meta last —
-    * the meta `_SUCCESS` commits the epoch, so a crash mid-append leaves
-    * it invisible. A streaming caller passes a deterministic `epochId`
-    * keyed by micro-batch; the replay deletes the stale meta (uncommits)
-    * before rewriting, so a half-rewritten tree is never served.
+    * A streaming caller passes a deterministic `epochId` keyed by
+    * micro-batch; a replay uncommits and rewrites that epoch. An empty
+    * batch is a no-op, never an epoch. `maxLiveTrees > 0` compacts all but
+    * the newest epoch (`keepLatest = 1`) once more trees than that serve;
+    * 0 leaves compaction to the caller.
     */
   def append(
       docs: DataFrame,
@@ -185,45 +186,14 @@ object TextIndex {
       maxLiveTrees: Int = 0,
       sweepGraceMs: Long = 0L): Unit = {
     val spark = docs.sparkSession
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val nBuckets = liveNBuckets(spark, path)
-    val epoch = epochId.getOrElse(
-      f"${rawEpochs(spark, path).size}%08d-${java.util.UUID.randomUUID.toString.take(8)}")
-    val root = s"$path/epochs/$epoch"
-    val metaPath = new Path(s"$root/meta")
-    if (fs.exists(metaPath)) fs.delete(metaPath, true)
     // metadata columns the build persisted (write's keepCols): appended
     // epochs must carry them too, or probe-time predicates would see
-    // nulls for this epoch's docs. Cached keyed by the head tree's
-    // immutable postings dir (r17; was re-read per append — a partition
-    // discovery job + footer read per epoch for a schema frozen at build)
-    val headTree = treePostings(path, liveTrees(spark, path).head)
-    val metaCols = graft.util.IndexMetaCache
-      .getOrCompute(spark, headTree, "lex.appendMetaCols") {
-        (spark.read.parquet(headTree)
-          .schema.fieldNames.toSet -- Set("doc_id", "dl", "term", "tf", "bucket"))
-          .toSeq.sorted
-      }
-    val (meta, postings) = postingRows(docs, nBuckets, idCol, textCol, metaCols)
-    clusterForWrite(postings, nBuckets, filesPerBucket)
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$root/postings")
-    // an EMPTY append must be a NO-OP, never an epoch: a zero-row epoch
-    // directory has no parquet footers, so every later probe/compaction
-    // that opens it dies on schema inference — a data-dependent poison
-    // pill planted by whatever upstream filter happened to match nothing.
-    // Detected AFTER the write by one FS listing (a zero-row partitioned
-    // write leaves no bucket= dirs, and the meta commit below never
-    // happens), so the common non-empty path pays no extra Spark job.
-    if (IvfIndex.dropEpochIfRowless(spark, root, "postings", "bucket=")) return
-    meta.coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
-    graft.util.IndexMetaCache.stamp(spark, path)
-    // auto-compaction dial (same as the streaming ingesters'): once more
-    // than `maxLiveTrees` trees serve, fold all but the newest epoch into
-    // one compact tree — probe planning cost stays flat across unbounded
-    // appends with no manual maintenance. keepLatest = 1 so a caller that
-    // replays its own newest epoch (deterministic epochId) rewrites only
-    // itself. 0 disables (default: existing callers manage compaction).
-    if (maxLiveTrees > 0 && liveTrees(spark, path).size > maxLiveTrees)
+    // nulls for this epoch's docs
+    val (meta, postings) = postingRows(docs, nBuckets, idCol, textCol, metaColNames(spark, path))
+    val epoch = epochId.getOrElse(trees(path).newEpochId(spark))
+    if (writeTree(spark, path, epoch, meta, postings, nBuckets, filesPerBucket) &&
+        maxLiveTrees > 0 && trees(path).liveTrees(spark).size > maxLiveTrees)
       compact(spark, path, filesPerBucket, keepLatest = 1, sweepGraceMs = sweepGraceMs)
   }
 
@@ -244,47 +214,9 @@ object TextIndex {
       docs: DataFrame,
       path: String,
       idCol: String = "doc_id",
-      textCol: String = "text"): Unit = {
-    // empty tombstone set: no-op — never a pointless epoch (unlike the
-    // appends' free post-write detection, a coalesce(1) write of an empty
-    // frame DOES emit a footer-valid zero-row part file, so the guard
-    // here is an up-front isEmpty; deletes are rare enough that the one
-    // scheduling round does not matter)
-    if (docs.isEmpty) return
-    val spark = docs.sparkSession
-    val epoch =
-      f"${rawTombstones(spark, path).size}%08d-${java.util.UUID.randomUUID.toString.take(8)}"
-    docs.select(col(idCol).cast("long").as("doc_id"),
-        size(tokens(col(textCol))).cast("long").as("dl"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/tombstones/$epoch")
-    graft.util.IndexMetaCache.stamp(spark, path)
-  }
-
-  private def rawTombstones(spark: SparkSession, path: String): Seq[String] = {
-    val root = new Path(s"$path/tombstones")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName).sorted
-  }
-
-  /** Committed, un-retired tombstone epochs (retired ones are named in a
-    * compact manifest and swept). Cached keyed by the mutable root — same
-    * invalidate-per-mutation rationale as [[liveTrees]] (probes read the
-    * [[probePlan]] bundle instead).
-    */
-  private def liveTombstones(spark: SparkSession, path: String): Seq[String] =
-    graft.util.IndexMetaCache.getOrCompute(spark, path, "lex.liveTombstones") {
-      liveTombstonesNow(spark, path)
-    }
-
-  private def liveTombstonesNow(spark: SparkSession, path: String): Seq[String] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dead = mergedIds(spark, path)
-    rawTombstones(spark, path)
-      .filter(e => fs.exists(new Path(s"$path/tombstones/$e/_SUCCESS")))
-      .filterNot(e => dead.contains(s"tombstones/$e"))
-  }
+      textCol: String = "text"): Unit =
+    trees(path).writeTombstones(docs.select(col(idCol).cast("long").as("doc_id"),
+      size(tokens(col(textCol))).cast("long").as("dl")))
 
   /** The meta schema [[postingRows]] and [[compact]] write: fixed, so a
     * meta read infers nothing (schema inference is a Spark job of its own).
@@ -299,13 +231,9 @@ object TextIndex {
     */
   private def readTombstonesOf(
       spark: SparkSession, path: String, ts: Seq[String]): Option[DataFrame] =
-    if (ts.isEmpty) None
-    else Some(graft.util.ProbePlanning.withDriverListing(spark) { ss =>
-      ss.read.schema(TombstoneSchema).parquet(ts.map(e => s"$path/tombstones/$e"): _*)
-        .select(col("doc_id"))
-    })
+    trees(path).readTombstones(spark, ts, TombstoneSchema).map(_.select(col("doc_id")))
 
-  /** Summed (n_docs, sum_dl, n_buckets) of `trees`' metas and the (docs,
+  /** Summed (n_docs, sum_dl, n_buckets) of tree `ids`' metas and the (docs,
     * token mass) of the tombstones in `tombs` — a doc deleted twice counts
     * once, with its largest recorded dl — from ONE Spark job: the metas and
     * the raw tombstone rows are read with their fixed schemas, collected
@@ -313,14 +241,14 @@ object TextIndex {
     * doc, which the anti-join broadcasts anyway) and summed on the driver.
     */
   private def statsNow(
-      spark: SparkSession, path: String, trees: Seq[String], tombs: Seq[String])
+      spark: SparkSession, path: String, ids: Seq[String], tombs: Seq[String])
       : ((Long, Long, Int), (Long, Long)) = {
     val parts = graft.util.ProbePlanning.withDriverListing(spark) { ss =>
       Seq(
-        Option.when(trees.nonEmpty)(ss.read.schema(MetaSchema)
-          .parquet(trees.map(t => treeMeta(path, t)): _*).withColumn("meta", lit(true))),
+        Option.when(ids.nonEmpty)(ss.read.schema(MetaSchema)
+          .parquet(ids.map(t => treeMeta(path, t)): _*).withColumn("meta", lit(true))),
         Option.when(tombs.nonEmpty)(ss.read.schema(TombstoneSchema)
-          .parquet(tombs.map(e => s"$path/tombstones/$e"): _*).withColumn("meta", lit(false))))
+          .parquet(tombs.map(trees(path).tombstoneDir): _*).withColumn("meta", lit(false))))
         .flatten
     }
     val rows = parts.reduceOption(_.unionByName(_, allowMissingColumns = true))
@@ -337,16 +265,12 @@ object TextIndex {
   /** Consolidate every live tree (base + committed epochs) into ONE
     * compact epoch — the standing maintenance op once appends accrete and
     * files-per-probe grows, exactly like [[IvfIndex.compact]]. Pure IO:
-    * posting rows are unioned and rewritten bucket-partitioned, the
-    * merged meta is the exact integer sum of the replaced metas, so
-    * probes are bit-identical before and after.
-    *
-    * Crash contract: the compact epoch's commit marker is its `_MERGED`
-    * manifest, written last via atomic rename and naming the trees it
-    * replaced; a crash before the rename leaves an orphaned invisible
-    * compact tree (reclaimed by the next sweep), a crash after it leaves
-    * replaced trees that are already invisible. Run between
-    * probes/appends — maintenance does not race itself.
+    * posting rows are unioned and rewritten bucket-partitioned, minus the
+    * live tombstones, and the merged meta is the exact integer sum of the
+    * replaced metas minus the deleted docs, so probes are bit-identical
+    * before and after. `keepLatest` and `sweepGraceMs`: see
+    * [[graft.util.IndexTrees.compact]] and its sweep; a grace is required
+    * when probes run concurrently with maintenance.
     */
   def compact(
       spark: SparkSession,
@@ -356,24 +280,8 @@ object TextIndex {
       sweepGraceMs: Long = 0L): Unit =
     compact(spark, path, filesPerBucket, sweep = true, keepLatest, sweepGraceMs)
 
-  private[graft] def compact(
-      spark: SparkSession,
-      path: String,
-      filesPerBucket: Int,
-      sweep: Boolean): Unit =
-    compact(spark, path, filesPerBucket, sweep, keepLatest = 0, sweepGraceMs = 0L)
-
   /** `sweep = false` stops after the manifest commit (the crash-mid-sweep
-    * state; exercised by TextIndexSpec — production uses the sweeping
-    * overload). `keepLatest > 0` excludes the newest N ordinary epochs from
-    * the merge: a streaming ingester compacts with `keepLatest = 1` so the
-    * epoch of a micro-batch not yet past its streaming checkpoint is never
-    * folded away — a replay then uncommits and rewrites ONLY its own epoch,
-    * instead of re-appending docs the compact tree already serves.
-    * `sweepGraceMs > 0` defers reclaiming replaced trees until their
-    * manifest has aged past the window — required when probes run
-    * concurrently with maintenance (see [[IvfIndex.compact]]'s
-    * serving-concurrency note; same FILE_NOT_EXIST race).
+    * state the specs build).
     */
   private[graft] def compact(
       spark: SparkSession,
@@ -382,147 +290,28 @@ object TextIndex {
       sweep: Boolean,
       keepLatest: Int,
       sweepGraceMs: Long): Unit = {
-    val allTrees = liveTrees(spark, path)
-    val protectSet = allTrees
-      .filter(t => t != "base" && !t.startsWith("compact-"))
-      .sorted.takeRight(keepLatest).toSet
-    val trees = allTrees.filterNot(protectSet)
-    // tombstones are applied (and retired) only on a FULL compact: a
-    // protected epoch may carry postings of a tombstoned doc, and retiring
-    // the tombstone while those rows stay on disk would resurrect them
-    val tombs =
-      if (protectSet.isEmpty) liveTombstones(spark, path) else Seq.empty
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (trees.size > 1 || (trees.nonEmpty && tombs.nonEmpty)) {
-      val all0 = trees.map(t => spark.read.parquet(treePostings(path, t)))
-        .reduce(_.unionByName(_))
-      // apply live deletes permanently: the consolidated tree holds the
-      // anti-joined survivors, the merged meta their exact stats, and the
-      // manifest retires the tombstone epochs in the same commit
-      val all = readTombstonesOf(spark, path, tombs) match {
-        case Some(t) => all0.join(broadcast(t), Seq("doc_id"), "left_anti")
-        case None => all0
+    val store = trees(path)
+    store.compact(spark, keepLatest, sweep, sweepGraceMs) { (replaced, tombs, cpt) =>
+      val all = replaced.map(t => spark.read.parquet(treePostings(path, t))).reduce(_.unionByName(_))
+      val live = readTombstonesOf(spark, path, tombs) match {
+        case Some(t) => all.join(broadcast(t), Seq("doc_id"), "left_anti")
+        case None => all
       }
-      val ((nDocsAll, sumDlAll, nBuckets), (nDel, sumDlDel)) = statsNow(spark, path, trees, tombs)
-      val cpt = s"compact-${java.util.UUID.randomUUID.toString.take(8)}"
-      clusterForWrite(all, nBuckets, filesPerBucket)
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/epochs/$cpt/postings")
+      val ((nDocsAll, sumDlAll, nBuckets), (nDel, sumDlDel)) = statsNow(spark, path, replaced, tombs)
+      clusterForWrite(live, nBuckets, filesPerBucket)
+        .write.mode("overwrite").partitionBy("bucket").parquet(store.treeDir(cpt, "postings"))
       import spark.implicits._
       Seq((nDocsAll - nDel, sumDlAll - sumDlDel, nBuckets))
         .toDF("n_docs", "sum_dl", "n_buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/epochs/$cpt/meta")
-      val tmp = new Path(s"$path/epochs/$cpt/postings/_MERGED.tmp")
-      val out = fs.create(tmp, true)
-      try out.write((trees ++ tombs.map(e => s"tombstones/$e"))
-        .mkString("\n").getBytes("UTF-8")) finally out.close()
-      fs.rename(tmp, new Path(s"$path/epochs/$cpt/postings/_MERGED"))
-      graft.util.IndexMetaCache.stamp(spark, path)
+        .coalesce(1).write.mode("overwrite").parquet(store.treeDir(cpt, "meta"))
     }
-    if (sweep) sweepMerged(spark, path, sweepGraceMs)
   }
 
-  /** Delete trees a committed `_MERGED` manifest replaced — but only once
-    * that manifest has aged `graceMs` (serving-concurrency: an in-flight
-    * probe may still scan the replaced files; they are invisible to new
-    * plans regardless) — plus any orphaned pre-manifest compact tree,
-    * which no reader can ever have planned against.
-    *
-    * ORDERING INVARIANT (see [[IvfIndex]]'s sweep — same resurrection
-    * catch): a COMPACT tree is reclaimed only after every tree its OWN
-    * manifest names is gone; manifests are processed oldest-first.
-    */
-  private def sweepMerged(spark: SparkSession, path: String, graceMs: Long = 0L): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val now = System.currentTimeMillis()
-    def manifestOf(e: String) = new Path(s"$path/epochs/$e/postings/_MERGED")
-    def namedIds(m: Path): List[String] = {
-      val in = fs.open(m)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    }
-    def treeGone(id: String): Boolean = id match {
-      case "base" => !fs.exists(new Path(s"$path/postings"))
-      case t if t.startsWith("tombstones/") => !fs.exists(new Path(s"$path/$t"))
-      case e2 => !fs.exists(new Path(s"$path/epochs/$e2"))
-    }
-    val manifests = committedEpochs(spark, path)
-      .map(manifestOf).filter(fs.exists(_))
-      .map(m => (m, fs.getFileStatus(m).getModificationTime))
-      .sortBy(_._2)
-    for ((m, mtime) <- manifests
-         if graceMs <= 0L || now - mtime >= graceMs) {
-      namedIds(m).foreach {
-        case "base" =>
-          fs.delete(new Path(s"$path/postings"), true)
-          fs.delete(new Path(s"$path/meta"), true)
-        case t if t.startsWith("tombstones/") =>
-          fs.delete(new Path(s"$path/$t"), true)
-        case e2 if !e2.startsWith("compact-") =>
-          fs.delete(new Path(s"$path/epochs/$e2"), true)
-        case c =>
-          val own = manifestOf(c)
-          if (!fs.exists(own) || namedIds(own).forall(treeGone))
-            fs.delete(new Path(s"$path/epochs/$c"), true)
-      }
-    }
-    rawEpochs(spark, path)
-      .filter(e => e.startsWith("compact-") &&
-        !fs.exists(new Path(s"$path/epochs/$e/postings/_MERGED")))
-      .foreach(e => fs.delete(new Path(s"$path/epochs/$e"), true))
-  }
+  private[graft] def trees(path: String): IndexTrees = IndexTrees(path, Seq("postings", "meta"))
 
-  /** Tree ids named by any committed compact manifest ("base" = the
-    * original `postings`/`meta` pair).
-    */
-  private def mergedIds(spark: SparkSession, path: String): Set[String] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    committedEpochs(spark, path).flatMap { e =>
-      val m = new Path(s"$path/epochs/$e/postings/_MERGED")
-      if (!fs.exists(m)) Seq.empty
-      else {
-        val in = fs.open(m)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      }
-    }.toSet
-  }
+  private def treePostings(path: String, id: String): String = trees(path).treeDir(id, "postings")
 
-  private def treePostings(path: String, id: String): String =
-    if (id == "base") s"$path/postings" else s"$path/epochs/$id/postings"
-
-  private def treeMeta(path: String, id: String): String =
-    if (id == "base") s"$path/meta" else s"$path/epochs/$id/meta"
-
-  /** Live tree ids for a probe: base + committed epochs, minus anything a
-    * committed compact manifest replaced. The base is live only when its
-    * meta carries `_SUCCESS` — the marker [[write]] lands last — so a
-    * half-built base (crash mid-bootstrap) is invisible, mirroring
-    * [[committedEpochs]].
-    *
-    * Cached keyed by the MUTABLE index root (r18): the listing is a
-    * function of the tree set, so it MUST invalidate per mutation — which
-    * the root's FS signature does (every writer stamps) — but between
-    * mutations a multi-tree epoch store was paying 2 full epoch listings,
-    * per-epoch `_SUCCESS` exists checks and compact-manifest reads on
-    * EVERY probe-planning call (the r17 re-key moved this walk out of the
-    * cached block; epochs probes regressed ~40%). One signature walk per
-    * call remains, as it must — which is why the probe path reads the
-    * [[probePlan]] bundle instead of calling this repeatedly.
-    */
-  private[graft] def liveTrees(spark: SparkSession, path: String): Seq[String] =
-    graft.util.IndexMetaCache.getOrCompute(spark, path, "lex.liveTrees") {
-      liveTreesNow(spark, path)
-    }
-
-  private def liveTreesNow(spark: SparkSession, path: String): Seq[String] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dead = mergedIds(spark, path)
-    val base =
-      if (fs.exists(new Path(s"$path/postings")) &&
-          fs.exists(new Path(s"$path/meta/_SUCCESS")) && !dead("base")) Seq("base")
-      else Seq.empty
-    base ++ committedEpochs(spark, path).filterNot(dead)
-  }
+  private def treeMeta(path: String, id: String): String = trees(path).treeDir(id, "meta")
 
   /** Everything bm25TopK's PLANNING needs — live trees, the all-tree meta
     * sums, the live tombstones' (docs, token mass) and epochs — as ONE
@@ -535,44 +324,28 @@ object TextIndex {
   private def probePlan(spark: SparkSession, path: String)
       : (Seq[String], ((Long, Long, Int), (Long, Long)), Seq[String]) =
     graft.util.IndexMetaCache.getOrCompute(spark, path, "lex.probePlan") {
-      val trees = liveTreesNow(spark, path)
-      require(trees.nonEmpty, s"no live index trees at $path — build with write() first")
-      val tombs = liveTombstonesNow(spark, path)
-      (trees, statsNow(spark, path, trees, tombs), tombs)
+      val (live, tombs) = trees(path).liveNow(spark)
+      require(live.nonEmpty, s"no live index trees at $path — build with write() first")
+      (live, statsNow(spark, path, live, tombs), tombs)
     }
 
   /** Bucket count of the build, read from any live tree's meta (every
     * tree carries it; the base pair may have been compacted away).
     */
   private def liveNBuckets(spark: SparkSession, path: String): Int = {
-    val trees = liveTrees(spark, path)
-    require(trees.nonEmpty, s"no live index trees at $path — build with write() first")
     // keyed by the head tree's immutable meta dir (r17; was the index
     // root): the bucket count is frozen at build time, so appends no
     // longer re-pay this collect job once per mutation
-    val headMeta = treeMeta(path, trees.head)
+    val headMeta = treeMeta(path, liveTrees(spark, path).head)
     graft.util.IndexMetaCache.getOrCompute(spark, headMeta, "lex.nBuckets") {
       spark.read.parquet(headMeta).collect().head.getAs[Int]("n_buckets")
     }
   }
 
-  private def rawEpochs(spark: SparkSession, path: String): Seq[String] = {
-    val root = new Path(s"$path/epochs")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName).sorted
-  }
-
-  /** Committed epoch ids: an ordinary epoch's commit marker is its meta
-    * `_SUCCESS`; a `compact-*` epoch's is its `_MERGED` manifest.
-    */
-  private def committedEpochs(spark: SparkSession, path: String): Seq[String] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    rawEpochs(spark, path).filter { e =>
-      if (e.startsWith("compact-"))
-        fs.exists(new Path(s"$path/epochs/$e/postings/_MERGED"))
-      else fs.exists(new Path(s"$path/epochs/$e/meta/_SUCCESS"))
-    }
+  private def liveTrees(spark: SparkSession, path: String): Seq[String] = {
+    val live = trees(path).liveTrees(spark)
+    require(live.nonEmpty, s"no live index trees at $path — build with write() first")
+    live
   }
 
   /** Operational snapshot of the index's serving state: one row per live
@@ -587,25 +360,20 @@ object TextIndex {
     */
   def describe(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val trees = liveTrees(spark, path)
-    require(trees.nonEmpty, s"no live index trees at $path — build with write() first")
-    val byTree = spark.read.parquet(trees.map(t => treeMeta(path, t)): _*)
+    val (live, tombs) = trees(path).live(spark)
+    require(live.nonEmpty, s"no live index trees at $path — build with write() first")
+    val byTree = spark.read.parquet(live.map(t => treeMeta(path, t)): _*)
       .withColumn("tree",
         when(input_file_name().contains("/epochs/"),
           regexp_extract(input_file_name(), "/epochs/([^/]+)/meta/", 1))
           .otherwise(lit("base")))
       .select(col("tree"), col("n_docs").cast("long"), col("sum_dl").cast("long"))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    def kindOf(t: String) =
-      if (t == "base") "base" else if (t.startsWith("compact-")) "compact" else "epoch"
-    val ordinals = trees.groupBy(kindOf).flatMap { case (_, ts) =>
-      ts.zipWithIndex.map { case (t, i) => t -> i.toLong }
-    }
-    val treeRows = trees.map { t =>
+    val treeRows = live.zip(IndexTrees.kinds(live)).map { case (t, (kind, ordinal)) =>
       val (n, dl) = byTree(t)
-      (kindOf(t), ordinals(t), n, dl)
+      (kind, ordinal, n, dl)
     }
-    val tombRow = statsNow(spark, path, Nil, liveTombstones(spark, path))._2 match {
+    val tombRow = statsNow(spark, path, Nil, tombs)._2 match {
       case (0L, _) => Seq.empty
       case (n, dl) => Seq(("tombstones", 0L, n, dl))
     }
@@ -688,21 +456,10 @@ object TextIndex {
     // a serving predicate (or metadata passthrough) references metadata
     // columns beyond the static schema — pay one footer read to pick them
     // up. Discovered from a live TREE (not the pruned dirs) so even an
-    // all-bucket-miss probe keeps the full schema ('bucket' is partition
-    // metadata of the tree root, not a data column — drop it).
+    // all-bucket-miss probe keeps the full schema.
     val sch =
       if (predicate.isEmpty && metaCols.isEmpty) PostingsDataSchema
-      // keyed by the head tree's immutable postings dir (r17; was the
-      // index root): the posting schema is frozen at build time, so
-      // appends/deletes no longer force the footer re-read at probe time
-      else graft.util.IndexMetaCache.getOrCompute(
-        spark, treePostings(path, trees.head), "lex.postingsSchema") {
-        graft.util.ProbePlanning.withDriverListing(spark) { ss =>
-          org.apache.spark.sql.types.StructType(
-            ss.read.parquet(treePostings(path, trees.head)).schema
-              .filterNot(_.name == "bucket"))
-        }
-      }
+      else org.apache.spark.sql.types.StructType(postingFields(spark, path, trees.head))
     // the pruned-scan RELATION is cached per index state (r18): resolving
     // `read.parquet(dirs)` lists every pruned directory on the driver —
     // ~0.15-0.2 s per probe on a 12-tree epoch store, re-paid by every
@@ -746,17 +503,21 @@ object TextIndex {
     * Sorted by name.
     */
   def metaColFields(
-      spark: SparkSession, path: String): Seq[org.apache.spark.sql.types.StructField] = {
-    val trees = liveTrees(spark, path)
-    require(trees.nonEmpty, s"no live index trees at $path — build with write() first")
-    // keyed by the head tree's immutable postings dir (r17; was the index
-    // root) — same rationale as lex.postingsSchema above
-    val headTree = treePostings(path, trees.head)
-    val fields = graft.util.IndexMetaCache.getOrCompute(spark, headTree, "lex.treeFields") {
-      graft.util.ProbePlanning.withDriverListing(spark) { ss =>
-        ss.read.parquet(headTree).schema.fields.toSeq
-      }
+      spark: SparkSession, path: String): Seq[org.apache.spark.sql.types.StructField] =
+    postingFields(spark, path, liveTrees(spark, path).head)
+      .filter(f => !ReservedPostingCols.contains(f.name)).sortBy(_.name)
+
+  /** The posting data columns (`bucket` is partition metadata, not among
+    * them) as tree `head` stores them: one driver-side footer read, no
+    * Spark job. Cached keyed by that tree's immutable postings dir — the
+    * schema is frozen at build time, so appends and deletes never force a
+    * re-read.
+    */
+  private def postingFields(
+      spark: SparkSession, path: String, head: String): Seq[org.apache.spark.sql.types.StructField] = {
+    val dir = treePostings(path, head)
+    graft.util.IndexMetaCache.getOrCompute(spark, dir, "lex.postingFields") {
+      graft.util.ProbePlanning.footerSchema(spark, dir).fields.toSeq
     }
-    fields.filter(f => !ReservedPostingCols.contains(f.name)).sortBy(_.name)
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.IvfIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming ingest for the persisted IVF index: embedding micro-batches
@@ -32,14 +32,8 @@ object IvfIngest {
     * A fold over ordered batches replays the stream exactly (the
     * `sim_topk_ivf_streamed` oracle query).
     *
-    * Bootstrap replay safety (mirrors [[TextIngest.ingestBatch]]): the
-    * bootstrap batch id is recorded in a `_bootstrap_batch` marker written
-    * BEFORE the build, so a replay of that batch re-bootstraps — full
-    * overwrite, idempotent — instead of appending itself as an epoch.
-    * Liveness is judged by the commit-marker-aware live-tree listing, not
-    * directory existence: a half-built base (centroids landed, lists
-    * didn't) is invisible and re-bootstraps cleanly, and a compacted-away
-    * base (epochs live) correctly appends.
+    * Bootstrap replay safety (the `_bootstrap_batch` marker, liveness by
+    * commit marker): [[graft.util.IndexTrees.ingest]].
     *
     * `maxLiveTrees > 0` auto-compacts with `keepLatest = 1` once an append
     * leaves more live trees than the bound — the current batch's epoch
@@ -57,41 +51,15 @@ object IvfIngest {
       maxLiveTrees: Int = 16,
       keepCols: Seq[String] = Nil,
       sweepGraceMs: Long = 0L): Unit = {
-    val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexPath/_bootstrap_batch")
-    val bootBatch: Option[Long] =
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-        finally in.close()
-      }
-    val live = IvfIndex.liveTreeIds(spark, indexPath)
-    if (live.isEmpty || bootBatch.contains(batchId)) {
-      // A genuine bootstrap replay (crash between write() and checkpoint
-      // commit) can never have committed epochs yet. Epochs + a matching
-      // marker means a FRESH checkpoint was pointed at a populated index:
-      // re-writing the base here would silently serve new-base + stale
-      // epochs. Fail loudly instead.
-      val epochs = live.filterNot(_ == "base")
-      require(epochs.isEmpty,
-        s"refusing to re-bootstrap '$indexPath' at batch $batchId: committed " +
-          s"epochs ${epochs.mkString(", ")} are live — this looks like a fresh " +
-          "checkpoint over a populated index; use a new indexPath or compact " +
-          "and remove the _bootstrap_batch marker to adopt the existing index")
-      val out = fs.create(marker, true)
-      try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-      // keepCols matter only at BOOTSTRAP: appended epochs infer and
-      // carry the base's metadata columns automatically
+    // keepCols matter only at BOOTSTRAP: appended epochs infer and carry
+    // the base's metadata columns; the append's own auto-compaction dial
+    // implements the live-tree bound
+    IvfIndex.trees(indexPath).ingest(batch.sparkSession, batchId) {
       IvfIndex.write(batch, indexPath, nlist, idCol, vecCol, filesPerList,
         keepCols = keepCols)
-    } else {
-      // the append's own auto-compaction dial implements the bound
+    } { epoch =>
       IvfIndex.append(batch, indexPath, idCol, vecCol, filesPerList,
-        epochId = Some(f"batch-$batchId%08d"), maxLiveTrees = maxLiveTrees,
-        sweepGraceMs = sweepGraceMs)
+        epochId = Some(epoch), maxLiveTrees = maxLiveTrees, sweepGraceMs = sweepGraceMs)
     }
   }
 

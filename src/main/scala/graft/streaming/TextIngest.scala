@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.TextIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming ingest for the persisted inverted text index: document
@@ -29,15 +29,8 @@ object TextIngest {
     * live trees, else append under the deterministic epoch for `batchId`.
     * A fold over ordered batches replays the stream exactly.
     *
-    * Bootstrap replay safety: the batch id that bootstrapped the base is
-    * recorded in a `_bootstrap_batch` marker written BEFORE the build, so a
-    * replay of that batch (base fully committed, checkpoint not yet
-    * advanced) RE-BOOTSTRAPS — full overwrite, idempotent — instead of
-    * appending itself as an epoch and double-serving batch 0. Liveness is
-    * judged by [[TextIndex.liveTrees]] (commit-marker-aware), never by mere
-    * directory existence: a half-built base from a crash mid-bootstrap is
-    * invisible and triggers a clean re-bootstrap, and a compacted-away base
-    * (epochs still live) correctly appends rather than clobbering.
+    * Bootstrap replay safety (the `_bootstrap_batch` marker, liveness by
+    * commit marker): [[graft.util.IndexTrees.ingest]].
     *
     * `maxLiveTrees > 0` is the auto-compaction dial: after an append that
     * leaves more than that many live trees, the index is compacted with
@@ -57,40 +50,14 @@ object TextIngest {
       maxLiveTrees: Int = 16,
       keepCols: Seq[String] = Nil,
       sweepGraceMs: Long = 0L): Unit = {
-    val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexPath/_bootstrap_batch")
-    val bootBatch: Option[Long] =
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-        finally in.close()
-      }
-    val live = TextIndex.liveTrees(spark, indexPath)
-    if (live.isEmpty || bootBatch.contains(batchId)) {
-      // A genuine bootstrap replay (crash between write() and checkpoint
-      // commit) can never have committed epochs yet. Epochs + a matching
-      // marker means a FRESH checkpoint was pointed at a populated index:
-      // re-writing the base here would silently serve new-base + stale
-      // epochs. Fail loudly instead.
-      val epochs = live.filterNot(_ == "base")
-      require(epochs.isEmpty,
-        s"refusing to re-bootstrap '$indexPath' at batch $batchId: committed " +
-          s"epochs ${epochs.mkString(", ")} are live — this looks like a fresh " +
-          "checkpoint over a populated index; use a new indexPath or compact " +
-          "and remove the _bootstrap_batch marker to adopt the existing index")
-      val out = fs.create(marker, true)
-      try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-      // keepCols matter only at BOOTSTRAP: appended epochs infer and
-      // carry the base's metadata columns automatically
+    // keepCols matter only at BOOTSTRAP: appended epochs infer and carry
+    // the base's metadata columns; the append's own auto-compaction dial
+    // implements the live-tree bound
+    TextIndex.trees(indexPath).ingest(batch.sparkSession, batchId) {
       TextIndex.write(batch, indexPath, nBuckets, idCol, textCol, filesPerBucket, keepCols)
-    } else {
-      // the append's own auto-compaction dial implements the bound
+    } { epoch =>
       TextIndex.append(batch, indexPath, idCol, textCol, filesPerBucket,
-        epochId = Some(f"batch-$batchId%08d"), maxLiveTrees = maxLiveTrees,
-        sweepGraceMs = sweepGraceMs)
+        epochId = Some(epoch), maxLiveTrees = maxLiveTrees, sweepGraceMs = sweepGraceMs)
     }
   }
 

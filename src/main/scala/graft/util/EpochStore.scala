@@ -34,6 +34,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * whether replays key epochs deterministically (needing `keepLatest` to
   * protect un-checkpointed epochs from merging) or uniquely per decision
   * (safe to merge everything).
+  *
+  * The persisted corpus indexes run the same rules through [[IndexTrees]]
+  * instead: their layout is `epochs/<e>/<side>` beside a BASE tree, with
+  * tombstone epochs and a sweep grace for concurrent probes, none of which
+  * this layout has. Merging the two would change one on-disk format.
   */
 final case class EpochStore(storeDir: String, sides: Seq[String]) {
   require(sides.nonEmpty, "an epoch store needs at least one side")

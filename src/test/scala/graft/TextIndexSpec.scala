@@ -201,7 +201,8 @@ class TextIndexSpec extends SparkTestBase {
 
     // crash-mid-sweep state: the manifest is committed, replaced trees are
     // still on disk — they must already be invisible
-    TextIndex.compact(spark, path, 1, sweep = false)
+    TextIndex.compact(spark, path, filesPerBucket = 1, sweep = false, keepLatest = 0,
+      sweepGraceMs = 0L)
     assert(new java.io.File(s"$path/postings").exists, "pre-sweep: base tree still on disk")
     assert(rows(TextIndex.bm25TopK(spark, path, terms, k = 20)) == want,
       "probe must be bit-identical served from the compact tree alone")
