@@ -55,11 +55,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectTableFunction(GraftExtensions.graftRenko)
     ext.injectTableFunction(GraftExtensions.graftBm25)
     ext.injectTableFunction(GraftExtensions.graftAnn)
-    // the multi-series renko TVF plans through RenkoScanNode: the rule
-    // pushes symbol predicates through the stateful scan to the tick
-    // source, the strategy expands the node after optimization
-    ext.injectOptimizerRule(_ => graft.plans.RenkoSymbolPushdown)
-    ext.injectPlannerStrategy(_ => new graft.plans.RenkoScanStrategy)
+    // the renko scan's rule and strategy are installed by Renko.fromTicks
     // the serving TVFs plan through Bm25ScanNode/AnnScanNode: outer
     // metadata WHEREs become filtered probes
     ext.injectOptimizerRule(_ => graft.plans.ServingFilterPushdown)
@@ -227,22 +223,10 @@ object GraftExtensions {
         if (children.length >= 4) Some(stringLit(children(3), "symbol_col")).filter(_.nonEmpty)
         else None
       val tsUnit = if (children.length >= 5) stringLit(children(4), "ts_unit") else "us"
-      val spark = SparkSession.active
-      val tickPlan = relationArg(children(0), "table")
-      val ticks = org.apache.spark.sql.GraftSqlShim.ofRows(spark, tickPlan)
-      val wide = Renko.fromTicks(ticks, brick, symbolCol = symbolCol, tsUnit = tsUnit)
-      val projected = RenkoModes.project(wide, mode)
-      symbolCol match {
-        // multi-series: plan through the RenkoScanNode placeholder so
-        // symbol predicates can push through the scan to the tick source
-        // (RenkoSymbolPushdown + RenkoScanStrategy — registerTvfs and the
-        // extensions path both install them)
-        case Some(sc) =>
-          graft.plans.RenkoScanNode(brick, mode, sc, tsUnit,
-            projected.queryExecution.analyzed.output.map(_.newInstance()),
-            ticks.queryExecution.analyzed)
-        case None => projected.queryExecution.logical
-      }
+      val ticks = org.apache.spark.sql.GraftSqlShim.ofRows(SparkSession.active, relationArg(children(0), "table"))
+      // fromTicks' RenkoScanNode carries symbol predicates to the tick source
+      RenkoModes.project(Renko.fromTicks(ticks, brick, symbolCol = symbolCol, tsUnit = tsUnit), mode)
+        .queryExecution.logical
     })
 
   /** `graft_bm25(index_path, terms_csv [, k [, filter_sql]])` — BM25
@@ -393,21 +377,18 @@ object GraftExtensions {
 
   /** Register every graft table-valued function (`graft_renko`,
     * `graft_bm25`, `graft_ann`) on an already-built session, plus the
-    * optimizer rule and planner strategy the multi-series renko TVF plans
-    * through (via `spark.experimental` — the runtime twin of the
-    * injectOptimizerRule/injectPlannerStrategy extension path).
+    * optimizer rule and planner strategy the serving TVFs plan through
+    * (via `spark.experimental` — the runtime twin of the
+    * injectOptimizerRule/injectPlannerStrategy extension path; the renko
+    * scan installs its own, `RenkoScanStrategy.install`).
     */
   def registerTvfs(spark: SparkSession): Unit = {
     Seq(graftRenko, graftBm25, graftAnn).foreach { f =>
       org.apache.spark.sql.GraftSqlShim.registerTableFunction(spark, f._1, f._2, f._3)
     }
     val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraOptimizations.contains(graft.plans.RenkoSymbolPushdown))
-      exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.RenkoSymbolPushdown
     if (!exp.extraOptimizations.contains(graft.plans.ServingFilterPushdown))
       exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.ServingFilterPushdown
-    if (!exp.extraStrategies.exists(_.isInstanceOf[graft.plans.RenkoScanStrategy]))
-      exp.extraStrategies = exp.extraStrategies :+ new graft.plans.RenkoScanStrategy
     if (!exp.extraStrategies.exists(_.isInstanceOf[graft.plans.ServingScanStrategy]))
       exp.extraStrategies = exp.extraStrategies :+ new graft.plans.ServingScanStrategy
   }

@@ -1,10 +1,10 @@
 package graft.operators
 
 import graft.core.{Brick, RenkoEngine, RenkoSnapshot}
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, GraftSqlShim}
+import graft.plans.{RenkoScanNode, RenkoScanStrategy}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, GraftSqlShim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.{CatalystSerde, MapPartitions}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -14,13 +14,6 @@ import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 
 /** One input tick, normalized: per-series key, epoch-µs time, price. */
 final case class Tick(symbol: String, t: Long, price: Double)
-
-/** One series' ticks from one input partition, sorted by `t` (stable:
-  * ties keep their row order). `part` is the input partition and `seq`
-  * the block's place among that partition's blocks, so (part, seq) is the
-  * input order of the block's ticks.
-  */
-private[graft] final case class TickBlock(symbol: String, part: Int, seq: Int, t: Array[Long], price: Array[Double])
 
 /** One output brick row: series key + the 19-column wide record
   * (reference `renkodf.py:60-67`). `datetime_us` is epoch µs; the public
@@ -52,16 +45,15 @@ final case class BrickRow(
   *
   * Spark-first design: the scan is inherently sequential *within* a series
   * (the fold is not associative, so no partial/final split exists), but
-  * embarrassingly parallel *across* series. `fromTicks` therefore packs
-  * each input partition's ticks, in parallel, into per-series blocks of
-  * primitive arrays sorted by time, shuffles those few block rows once on
-  * the series key, and k-way merges each series' blocks into the fold — no
-  * global sort and no per-tick sort after the scan; at cluster scale
-  * parallelism = number of series. A series too large for one task goes
-  * through the sync-point stitch of `fromTicksParallel` instead. Column
-  * pruning to exactly (symbol, datetime, close) happens *before* the
-  * block pack because Catalyst cannot push a projection through
-  * `mapPartitions`.
+  * embarrassingly parallel *across* series. `fromTicks` is one logical
+  * node, [[graft.plans.RenkoScanNode]], planned as two operators over
+  * internal rows: each input partition's ticks are packed, in parallel,
+  * into per-series blocks of primitive arrays sorted by time; those few
+  * block rows are shuffled once on the series key; each series' blocks are
+  * k-way merged into the fold — no global sort and no per-tick sort after
+  * the scan; at cluster scale parallelism = number of series. A series too
+  * large for one task goes through the sync-point stitch of
+  * `fromTicksParallel` instead.
   *
   * Capability match: reference `Renko.__init__`/`_create_renko`
   * (`/root/reference/src/renkodf/renkodf.py:16-252`), generalized from one
@@ -74,7 +66,6 @@ object Renko {
 
   implicit private val tickEnc: Encoder[Tick] = Encoders.product[Tick]
   implicit private val brickEnc: Encoder[BrickRow] = Encoders.product[BrickRow]
-  implicit private val blockEnc: Encoder[TickBlock] = Encoders.product[TickBlock]
 
   /** Columns of the wide brick table, in reference order (renkodf.py:60-67),
     * with the series key prepended.
@@ -85,6 +76,15 @@ object Renko {
     "normal_high", "normal_low", "nongap_open",
     "reverse_nongap_open", "reverse_fake_nongap_open",
     "reverse_high", "reverse_low", "fake_high", "fake_low")
+
+  /** The wide table's schema: `datetime` a TIMESTAMP, the key nullable. */
+  private val wideSchema = StructType(wideColumns.map {
+    case "symbol" => StructField("symbol", StringType)
+    case "datetime" => StructField("datetime", TimestampType, nullable = false)
+    case c @ ("volume" | "tick_index_open" | "tick_index_close") => StructField(c, LongType, nullable = false)
+    case c @ ("direction" | "is_reversal") => StructField(c, IntegerType, nullable = false)
+    case c => StructField(c, DoubleType, nullable = false)
+  })
 
   /** Build the wide brick table from a tick DataFrame.
     *
@@ -117,49 +117,25 @@ object Renko {
     blockScan(normalizedTicks(df, brickSize, symbolCol, datetimeCol, closeCol, tsUnit), brickSize, dropFirst)
   }
 
-  /** Ticks per [[TickBlock]]: a partition holding more of one series emits
+  /** Ticks per block: a partition holding more of one series emits
     * several blocks, each sorted on its own.
     */
   private val BlockCap = 1 << 20
 
-  /** The plan behind [[fromTicks]], over (symbol, t, price) rows:
-    *
-    *  1. map side, in parallel: each input partition packs its ticks into
-    *     per-series [[TickBlock]]s of at most `blockCap` ticks, each stably
-    *     sorted by t (pre-sorted input costs one pass);
-    *  2. one hash exchange of the block rows on the series key, and a sort
-    *     of those few rows by (symbol, part, seq);
-    *  3. reduce side: each series' blocks are k-way merged by (t, part,
-    *     seq) — a tie keeps input partition order, then row order — into
-    *     [[RunFold]].
-    *
-    * No tick row is exchanged, sorted or decoded into a `Tick`.
+  /** The plan behind [[fromTicks]] over (symbol, t, price) rows: one
+    * [[RenkoScanNode]], planned as `RenkoPackExec` → one exchange and sort
+    * of block rows → `RenkoFoldExec` (see there). No tick row is exchanged,
+    * sorted or decoded into an object.
     */
   private[graft] def blockScan(
       ticks: DataFrame,
       brickSize: Double,
       dropFirst: Boolean,
       blockCap: Int = BlockCap): DataFrame = {
-    // the pack reads Spark's internal rows: the tick columns go in as one
-    // struct, so `symbol` stays UTF-8 and no typed decoder runs per tick
-    val packed = MapPartitions(
-      (it: Iterator[Any]) => new BlockPacker(it.asInstanceOf[Iterator[InternalRow]], blockCap),
-      CatalystSerde.generateObjAttr[TickBlock],
-      ticks.select(struct(col("symbol"), col("t"), col("price"))).queryExecution.analyzed)
-    val bricks: Dataset[BrickRow] =
-      GraftSqlShim.ofRows(ticks.sparkSession, CatalystSerde.serialize[TickBlock](packed))
-        .repartition(col("symbol"))
-        .sortWithinPartitions(col("symbol"), col("part"), col("seq"))
-        .as[TickBlock]
-        .mapPartitions { blocks =>
-          new RunFold[BlockMerge](new BlockMerge(blocks), brickSize, dropFirst) {
-            protected def runStart(m: BlockMerge): RunStart =
-              if (m.seriesStart) RunStart(m.symbol, null, 0L, None) else null
-            protected def ts(m: BlockMerge): Long = m.t
-            protected def price(m: BlockMerge): Double = m.price
-          }
-        }
-    widen(bricks.toDF())
+    val spark = ticks.sparkSession
+    RenkoScanStrategy.install(spark)
+    GraftSqlShim.ofRows(spark, RenkoScanNode(brickSize, dropFirst, blockCap,
+      DataTypeUtils.toAttributes(wideSchema), ticks.queryExecution.analyzed))
   }
 
   /** Zero-shuffle fast path for pre-ordered input (the reference assumes
@@ -317,7 +293,7 @@ object Renko {
     * the symbol's first emitted timestamp when an earlier run emitted it
     * (None = the run learns it from its own first brick).
     */
-  private final case class RunStart(sym: String, entry: RenkoSnapshot, offset: Long, firstTs: Option[Long])
+  private[graft] final case class RunStart(sym: String, entry: RenkoSnapshot, offset: Long, firstTs: Option[Long])
 
   /** First-pass summary of one contiguous same-symbol run of a partition,
     * from the run's own replay off a fresh anchor. Prefix arrays, snapshots
@@ -508,7 +484,7 @@ object Renko {
       val gcBeforeJob2 = gcMillis()
       val bricks = rows.mapPartitionsWithIndex { (pidx, it) =>
         val runStarts = bcStarts.value
-        new RunFold[InternalRow](it, brickSize, dropFirst) {
+        val fold = new RunFold[InternalRow](it, brickSize, dropFirst) {
           private var key: UTF8String = null
           protected def runStart(row: InternalRow): RunStart = {
             val k = row.getUTF8String(0)
@@ -518,6 +494,7 @@ object Renko {
           protected def ts(row: InternalRow): Long = row.getLong(1)
           protected def price(row: InternalRow): Double = row.getDouble(2)
         }
+        fold.map(toRow(fold.symbol, _))
       }
       // eagerly materialize the bricks (orders of magnitude smaller than the
       // ticks): the returned plan then no longer references the ticks at
@@ -551,8 +528,8 @@ object Renko {
     * — with a multi-brick first gap this can legally produce an empty
     * series.
     */
-  private abstract class RunFold[R](in: Iterator[R], brickSize: Double, dropFirst: Boolean)
-      extends Iterator[BrickRow] {
+  private[graft] abstract class RunFold[R](in: Iterator[R], brickSize: Double, dropFirst: Boolean)
+      extends Iterator[Brick] {
     /** The start of the run `r` opens, or null when `r` continues `run`. */
     protected def runStart(r: R): RunStart
     protected def ts(r: R): Long
@@ -560,6 +537,8 @@ object Renko {
 
     /** The run being folded; null before the first tick. */
     protected var run: RunStart = null
+    /** The key of the run the last brick came from. */
+    final def symbol: String = run.sym
     private val buf = new ArrayBuffer[Brick](8)
     private var pos = 0
     private var eng: RenkoEngine = null
@@ -594,10 +573,10 @@ object Renko {
       }
       true
     }
-    override def next(): BrickRow = {
+    override def next(): Brick = {
       if (!hasNext) throw new NoSuchElementException
       val b = buf(pos); pos += 1
-      toRow(run.sym, b)
+      b
     }
   }
 
@@ -607,84 +586,14 @@ object Renko {
   private[graft] def scanPartition(
       it: Iterator[Tick],
       brickSize: Double,
-      dropFirst: Boolean): Iterator[BrickRow] =
-    new RunFold[Tick](it, brickSize, dropFirst) {
+      dropFirst: Boolean): Iterator[BrickRow] = {
+    val fold = new RunFold[Tick](it, brickSize, dropFirst) {
       protected def runStart(t: Tick): RunStart =
         if (run != null && t.symbol == run.sym) null else RunStart(t.symbol, null, 0L, None)
       protected def ts(t: Tick): Long = t.t
       protected def price(t: Tick): Double = t.price
     }
-
-  /** The map side of [[blockScan]]: packs one input partition's
-    * struct(symbol, t, price) rows into per-series [[TickBlock]]s, emitting
-    * a series' block when it reaches `cap` ticks and the rest when the
-    * partition ends.
-    */
-  private final class BlockPacker(in: Iterator[InternalRow], cap: Int) extends Iterator[TickBlock] {
-    // starts small: a partition may hold many short series
-    private final class Builder {
-      var t = new Array[Long](16)
-      var price = new Array[Double](16)
-      var n = 0
-    }
-    private val part = TaskContext.getPartitionId()
-    private var emitted = 0
-    // insertion order keeps the end-of-partition flush deterministic
-    private val open = new java.util.LinkedHashMap[UTF8String, Builder]()
-    private var key: UTF8String = null
-    private var cur: Builder = null
-    private var ready: TickBlock = null
-    private var rest: java.util.Iterator[java.util.Map.Entry[UTF8String, Builder]] = null
-
-    override def hasNext: Boolean = {
-      while (ready == null && (rest == null || rest.hasNext)) {
-        if (rest != null) {
-          val e = rest.next()
-          ready = block(e.getKey, e.getValue)
-        } else if (in.hasNext) {
-          // MapPartitionsExec hands over the struct column's value
-          val tick = in.next()
-          if (tick.isNullAt(1) || tick.isNullAt(2))
-            throw new IllegalArgumentException("ticks need a non-null datetime and close")
-          val k = tick.getUTF8String(0)
-          // the row's buffer is reused: a new key is cloned before it is kept
-          if (cur == null || k != key) {
-            key = if (k == null) null else k.clone()
-            cur = open.get(key)
-            if (cur == null) { cur = new Builder; open.put(key, cur) }
-          }
-          if (cur.n == cur.t.length) {
-            val size = math.min(cap, cur.n * 2)
-            cur.t = java.util.Arrays.copyOf(cur.t, size)
-            cur.price = java.util.Arrays.copyOf(cur.price, size)
-          }
-          cur.t(cur.n) = tick.getLong(1)
-          cur.price(cur.n) = tick.getDouble(2)
-          cur.n += 1
-          if (cur.n == cap) {
-            ready = block(key, cur)
-            cur.n = 0
-          }
-        } else rest = open.entrySet.iterator
-      }
-      ready != null
-    }
-
-    override def next(): TickBlock = {
-      if (!hasNext) throw new NoSuchElementException
-      val b = ready
-      ready = null
-      b
-    }
-
-    /** The builder's ticks as the partition's next block; null if none. */
-    private def block(k: UTF8String, b: Builder): TickBlock =
-      if (b.n == 0) null
-      else {
-        val (t, price) = sortedByTime(b.t, b.price, b.n)
-        emitted += 1
-        TickBlock(keyString(k), part, emitted, t, price)
-      }
+    fold.map(toRow(fold.symbol, _))
   }
 
   /** The first `n` ticks of (t, price), stably sorted by t: a bottom-up
@@ -729,76 +638,6 @@ object Renko {
       }
     }
     (st, sp)
-  }
-
-  /** The reduce side of [[blockScan]]: [[TickBlock]]s ordered by (symbol,
-    * part, seq) in, each series' ticks out in (t, part, seq, row) order.
-    * It holds one series' blocks at a time and merges them with a binary
-    * heap of block cursors. The iterator is its own element: `symbol`, `t`,
-    * `price` and `seriesStart` describe the tick the last `next()` reached.
-    */
-  private final class BlockMerge(in: Iterator[TickBlock]) extends Iterator[BlockMerge] {
-    var symbol: String = null
-    var t = 0L
-    var price = 0.0
-    var seriesStart = false
-
-    private val blocks = in.buffered
-    private val series = new ArrayBuffer[TickBlock](8)
-    private var pos: Array[Int] = Array.emptyIntArray
-    // heap of indices into `series`, which is in (part, seq) order
-    private var heap: Array[Int] = Array.emptyIntArray
-    private var live = 0
-
-    override def hasNext: Boolean = live > 0 || blocks.hasNext
-
-    override def next(): BlockMerge = {
-      seriesStart = live == 0
-      if (seriesStart) {
-        if (!blocks.hasNext) throw new NoSuchElementException
-        series.clear()
-        symbol = blocks.head.symbol
-        while (blocks.hasNext && blocks.head.symbol == symbol) series += blocks.next()
-        live = series.length
-        pos = new Array[Int](live)
-        heap = Array.range(0, live)
-        for (i <- live / 2 - 1 to 0 by -1) siftDown(i)
-      }
-      val b = heap(0)
-      val blk = series(b)
-      t = blk.t(pos(b))
-      price = blk.price(pos(b))
-      pos(b) += 1
-      if (pos(b) == blk.t.length) {
-        live -= 1
-        heap(0) = heap(live)
-      }
-      siftDown(0)
-      this
-    }
-
-    /** Block a's next tick comes before block b's. */
-    private def before(a: Int, b: Int): Boolean = {
-      val ta = series(a).t(pos(a))
-      val tb = series(b).t(pos(b))
-      ta < tb || (ta == tb && a < b)
-    }
-
-    private def siftDown(from: Int): Unit = {
-      var i = from
-      var done = false
-      while (!done) {
-        val l = 2 * i + 1
-        if (l >= live) done = true
-        else {
-          val c = if (l + 1 < live && before(heap(l + 1), heap(l))) l + 1 else l
-          if (before(heap(c), heap(i))) {
-            val x = heap(i); heap(i) = heap(c); heap(c) = x
-            i = c
-          } else done = true
-        }
-      }
-    }
   }
 
   /** The reference's argument checks (renkodf.py) and the one input shape

@@ -1,7 +1,6 @@
 package graft.util
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exclusive prefix sums over a BROADCAST-SIZED keyed frame — the
@@ -45,12 +44,13 @@ object SmallPrefix {
   /** Global top-`k` of `df` by `order` (which must be a strict total
     * order: include an id tiebreaker) with a 1-based `rank` (long):
     * TakeOrderedAndProject — a distributed partial top-k per partition, k
-    * rows to one task — then `row_number` over those k rows, which are
-    * already one sorted partition, so the ranking adds no exchange and no
-    * sort. Row order is rank order.
+    * rows to one task — leaves the k rows sorted in one partition, number
+    * 0, where `monotonically_increasing_id` is each row's place. So the
+    * ranking needs no window (an unpartitioned one logs a warning each
+    * time it is planned), no exchange and no sort. Row order is rank order.
     */
   def rankTopK(df: DataFrame, order: Seq[Column], k: Int): DataFrame =
     df.orderBy(order: _*).limit(k)
-      .withColumn("rank", row_number().over(Window.orderBy(order: _*)).cast("long"))
+      .withColumn("rank", monotonically_increasing_id() + 1)
       .orderBy(col("rank"))
 }

@@ -1,13 +1,17 @@
 package graft
 
 import graft.operators.{BrickRow, Renko, Tick}
+import graft.plans.{RenkoFoldExec, RenkoPackExec, RenkoScanStrategy}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 /** `fromTicks` packs each input partition into sorted per-series blocks and
   * k-way merges them. Whatever the input order and partitioning, it must
   * equal the fold over the input's stable (symbol, t) sort, where input
-  * order is partition order, then row order: a tie keeps it.
+  * order is partition order, then row order: a tie keeps it. The
+  * `graft_renko` TVF runs the same plan.
   */
 class BlockScanSpec extends SparkTestBase {
 
@@ -44,6 +48,23 @@ class BlockScanSpec extends SparkTestBase {
     df.withColumn("datetime_us", unix_micros(col("datetime"))).drop("datetime")
       .as[BrickRow].collect().toSeq
 
+  /** Every node of an executed plan, query stages included. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => s +: nodes(s.plan)
+    case _ => p +: p.children.flatMap(nodes)
+  }
+
+  /** The wicks view's columns of a brick, as the TVF's default mode gives them. */
+  private def wicks(b: BrickRow) = (b.symbol, b.datetime_us, b.open, b.high, b.low, b.close, b.volume,
+    b.direction, b.is_reversal, b.tick_index_open, b.tick_index_close)
+
+  private def collectWicks(df: DataFrame) =
+    df.select(col("symbol"), unix_micros(col("datetime")), col("open"), col("high"), col("low"),
+      col("close"), col("volume"), col("direction"), col("is_reversal"), col("tick_index_open"),
+      col("tick_index_close")).as[(String, Long, Double, Double, Double, Double, Long, Int, Int, Long, Long)]
+      .collect().toSeq
+
   private def assertFold(name: String, parts: Seq[Seq[(String, Long, Double)]], keyed: Boolean): Unit = {
     val df = frame(parts)
     val input = df.collect().map(r => Tick(if (keyed) r.getString(0) else "", r.getLong(1), r.getDouble(2)))
@@ -59,6 +80,13 @@ class BlockScanSpec extends SparkTestBase {
       assert(g.keySet == want.keySet, s"$name ($how): series differ")
       for ((sym, rows) <- want) assert(g(sym) == rows, s"$name ($how): series '$sym' differs")
     }
+    GraftExtensions.registerRenkoTvf(spark)
+    df.createOrReplaceTempView("block_scan_ticks")
+    val viaTvf = collectWicks(spark.sql(
+      s"SELECT * FROM graft_renko('block_scan_ticks', $brick, 'wicks', '${if (keyed) "sym" else ""}')"))
+      .groupBy(_._1)
+    assert(viaTvf.keySet == want.keySet, s"$name (TVF): series differ")
+    for ((sym, rows) <- want) assert(viaTvf(sym) == rows.map(wicks), s"$name (TVF): series '$sym' differs")
   }
 
   private val cases: Seq[(String, Seq[Seq[(String, Long, Double)]], Boolean)] = {
@@ -92,6 +120,47 @@ class BlockScanSpec extends SparkTestBase {
         case (k, None) => spark.conf.unset(k)
       }
     }
+
+  test("SQL metrics: ticks, blocks and bricks read right after collect, and explain shows them") {
+    // 3 series over 4 partitions; a block cap of 7 splits the long runs
+    val parts = Seq(walk("a", 40, 21), walk("b", 15, 22) ++ walk("a", 9, 23), Seq.empty, walk("c", 7, 24))
+    val df = frame(parts)
+    val ticks = df.select(col("sym").as("symbol"), col("datetime").as("t"), col("close").as("price"))
+    val wide = Renko.blockScan(ticks, brick, dropFirst = true, blockCap = 7)
+    val rows = wide.collect()
+    val plan = nodes(wide.queryExecution.executedPlan)
+    val pack = plan.collectFirst { case p: RenkoPackExec => p }.get
+    val fold = plan.collectFirst { case f: RenkoFoldExec => f }.get
+    // per partition and series, ceil(n / 7) blocks: a 40 + b 15 + a 9 + c 7
+    assert(pack.metrics("ticks").value == 71)
+    assert(pack.metrics("blocks").value == 6 + 3 + 2 + 1)
+    assert(fold.metrics("numOutputRows").value == rows.length && rows.nonEmpty)
+    assert(pack.metrics("packTime").value > 0 && fold.metrics("foldTime").value > 0)
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(wide.explain("formatted"))
+    val text = out.toString
+    for (m <- Seq("number of ticks: 71", "number of blocks: 12", s"number of bricks: ${rows.length}",
+        "pack time: ", "merge + fold time: "))
+      assert(text.contains(m), s"explain should show '$m':\n$text")
+  }
+
+  test("symbol pushdown from the DataFrame API, in a session without GraftExtensions") {
+    val fresh = spark.newSession()
+    assert(!fresh.conf.getOption("spark.sql.extensions").exists(_.contains("GraftExtensions")))
+    assert(!fresh.experimental.extraStrategies.contains(RenkoScanStrategy), "fromTicks must install the strategy")
+    val dir = java.nio.file.Files.createTempDirectory("block-scan-pushdown").toString + "/ticks"
+    frame(split(scala.util.Random.shuffle(walk("x", 300, 31) ++ walk("y", 300, 32) ++ walk("z", 200, 33)), 3))
+      .write.parquet(dir)
+    val src = fresh.read.parquet(dir)
+    val filtered = Renko.fromTicks(src, brick, symbolCol = Some("sym")).filter(col("symbol") === "y")
+    val scans = nodes(filtered.queryExecution.executedPlan).collect { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty && scans.forall(_.metadata.get("PushedFilters").exists(_.contains("EqualTo(sym,y)"))),
+      s"the symbol predicate must reach the parquet scan:\n${filtered.queryExecution.executedPlan}")
+    val all = Renko.fromTicks(src, brick, symbolCol = Some("sym")).collect()
+    val got = filtered.collect()
+    assert(got.nonEmpty && got.toSeq == all.filter(_.getString(0) == "y").toSeq,
+      "pushed-down bricks must equal the filter after the scan")
+  }
 
   test("sortedByTime: stable natural-run merge") {
     val rnd = new scala.util.Random(5)

@@ -52,6 +52,11 @@ class PlanQualitySpec extends SparkTestBase {
       // a block row carries its input partition and block number; a tick row does not
       assert(sorts.nonEmpty && sorts.forall(_.child.output.map(_.name).contains("seq")),
         s"sorts must be over block rows only:\n$plan")
+      // the pack and the fold read and write internal rows: no object layer
+      val objectNodes = all.filter(n => n.isInstanceOf[org.apache.spark.sql.execution.SerializeFromObjectExec] ||
+        n.isInstanceOf[org.apache.spark.sql.execution.DeserializeToObjectExec] ||
+        n.isInstanceOf[org.apache.spark.sql.execution.MapPartitionsExec])
+      assert(objectNodes.isEmpty, s"no object encode or decode in the renko plan:\n$plan")
     }
   }
 

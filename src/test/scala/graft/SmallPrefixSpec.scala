@@ -60,4 +60,34 @@ class SmallPrefixSpec extends SparkTestBase {
       assert(exchanges.size == 1, s"k=$k: expected only the input's exchange:\n$plan")
     }
   }
+
+  test("planning and running a bm25TopK logs no unpartitioned-window warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val path = java.nio.file.Files.createTempDirectory("graft-rank-warn").toString
+    graft.operators.TextIndex.write(docs, path)
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("window-warnings", null, null, true, null) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("No Partition Defined for Window")) warnings.add(m)
+      }
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    ctx.getConfiguration.getRootLogger.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      val top = graft.operators.TextIndex.bm25TopK(spark, path, Seq("dup", "vector"), 10)
+      top.queryExecution.executedPlan
+      assert(top.collect().nonEmpty, "the probe should find documents")
+    } finally {
+      ctx.getConfiguration.getRootLogger.removeAppender("window-warnings")
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(warnings.isEmpty, s"window warnings: ${warnings.size}")
+  }
 }

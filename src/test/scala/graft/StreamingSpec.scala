@@ -112,6 +112,79 @@ class StreamingSpec extends SparkTestBase {
     assertRowsEqual(got, want, "resume-appended")
   }
 
+  /** events sf0.001 as one tick series: epoch-µs `t`, `close`. */
+  private def eventTicks: DataFrame = {
+    val raw = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    raw.select(SparkTestBase.tsEpochUs(raw).as("t"), col("value").as("close"))
+  }
+
+  private def asPriceEvents(ticks: DataFrame) = {
+    import spark.implicits._
+    ticks.select(lit("").as("symbol"), col("t").as("timestamp"), col("close").as("price")).as[PriceEvent]
+  }
+
+  /** A mode view's comparable columns, time as epoch µs. */
+  private def modeRows(df: DataFrame, mode: String, time: org.apache.spark.sql.Column): Array[Row] =
+    RenkoModes.project(df, mode)
+      .select(col("open"), col("high"), col("low"), col("close"),
+        col("volume").cast("long"), col("direction").cast("long"),
+        col("is_reversal").cast("long"), time.as("t"))
+      .collect()
+
+  test("events sf0.001, brick 25: stream[2:] == batch for all 7 modes, batch == the events golden") {
+    val batchWide = Renko.fromTicks(eventTicks, 25.0, datetimeCol = "t").cache()
+    try {
+      val want = spark.read.parquet(s"$golden/events_sf0001_b25_wide.parquet")
+        .select(col("datetime_us"), col("close")).collect()
+      assertRowsEqual(batchWide.select(unix_micros(col("datetime")), col("close")).collect(), want,
+        "batch vs events golden")
+      val streamTail = RenkoWS.replay(asPriceEvents(eventTicks), 25.0).toDF()
+        .orderBy(col("timestamp"), (col("close") * col("direction")).asc).offset(2)
+      for (mode <- RenkoModes.all) {
+        val s = modeRows(streamTail, mode, col("timestamp"))
+        val b = modeRows(batchWide, mode, unix_micros(col("datetime")))
+        assert(s.length == b.length, s"mode $mode: stream[2:] has ${s.length} rows, batch ${b.length}")
+        // the first move is a two-brick fall: the stream's synthetic initial
+        // brick (direction 1) makes it one reversal bar, whose open the next
+        // brick's wick still reaches, where the batch folds two plain bricks.
+        // So the first compared row agrees in its brick columns (close,
+        // volume, direction, is_reversal, t) and every later row in full.
+        assertRowsEqual(s.take(1).map(r => Row.fromSeq(r.toSeq.drop(3))),
+          b.take(1).map(r => Row.fromSeq(r.toSeq.drop(3))), s"mode $mode, first row")
+        assertRowsEqual(s.drop(1), b.drop(1), s"mode $mode")
+      }
+    } finally batchWide.unpersist()
+  }
+
+  test("events sf0.001, brick 25: to_rws -> stateFromCheckpoint resume splice == the uninterrupted run") {
+    val ticks = eventTicks.cache()
+    try {
+      // checkpoint at a brick: the wide table keeps no ticks after its last one
+      val emitted = Renko.fromTicks(ticks, 25.0, datetimeCol = "t")
+        .select(unix_micros(col("datetime"))).collect().map(_.getLong(0))
+      val split = emitted(emitted.length / 2)
+      val head = ticks.filter(col("t") <= split)
+      val tail = ticks.filter(col("t") > split)
+      val rws = ToRws.toRws(Renko.fromTicks(head, 25.0, datetimeCol = "t"), 25.0)
+      val init = RenkoWS.stateFromCheckpoint(rws).collect().toMap
+      val spliced = normalizeWs(RenkoWS.replay(asPriceEvents(tail), 25.0, initialState = init).toDF()
+        .orderBy(col("timestamp"), (col("close") * col("direction")).asc))
+      val whole = normalizeWs(RenkoWS.replay(asPriceEvents(ticks), 25.0).toDF()
+        .filter(col("timestamp") > split)
+        .orderBy(col("timestamp"), (col("close") * col("direction")).asc))
+      assert(spliced.length > 10 && spliced.length == whole.length,
+        s"spliced ${spliced.length} rows, uninterrupted ${whole.length}")
+      // the resumed state counts on from the checkpoint row's volume, where
+      // the uninterrupted run restarts at 1 after that brick (reference
+      // RenkoWS over an external frame): only the first brick's volume moves
+      val volume = wsCols.indexOf("volume")
+      val lastVolume = init("").volume
+      assertRowsEqual(spliced.take(1), whole.take(1).map(r =>
+        Row.fromSeq(r.toSeq.updated(volume, r.getLong(volume) + lastVolume - 1))), "first resumed brick")
+      assertRowsEqual(spliced.drop(1), whole.drop(1), "resume splice vs uninterrupted")
+    } finally ticks.unpersist()
+  }
+
   test("renko_animate: completed + forming brick bit-exact for all 7 modes") {
     val events = us30Events.collect().toIndexedSeq
     val (state, _) = RenkoWS.processSorted("US30", events, None, 5)
