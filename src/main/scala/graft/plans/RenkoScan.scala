@@ -4,7 +4,7 @@ import graft.operators.Renko
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, AttributeReference, AttributeSet, PredicateHelper, SortOrder, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, AttributeReference, AttributeSet, PredicateHelper, SortOrder, UnsafeArrayData, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable.ArrayBuffer
@@ -246,9 +247,9 @@ private final class BlockPacker(
         val row = in.next()
         if (row.isNullAt(1) || row.isNullAt(2))
           throw new IllegalArgumentException("ticks need a non-null datetime and close")
-        val k = row.getUTF8String(0)
-        // the row's buffer is reused: a new key is cloned before it is kept
-        if (cur == null || k != key) {
+        if (cur == null || !sameKey(row)) {
+          val k = row.getUTF8String(0)
+          // the row's buffer is reused: a new key is cloned before it is kept
           key = if (k == null) null else k.clone()
           cur = open.get(key)
           if (cur == null) { cur = new SeriesTicks(key); open.put(key, cur) }
@@ -264,6 +265,18 @@ private final class BlockPacker(
     if (!hasNext) throw new NoSuchElementException
     ready = false
     w.getRow
+  }
+
+  /** Whether `row`'s key is `key`. An `UnsafeRow`'s key is compared in
+    * place, with no `UTF8String` built per tick.
+    */
+  private def sameKey(row: InternalRow): Boolean = row match {
+    case u: UnsafeRow if !u.isNullAt(0) =>
+      val offsetAndSize = u.getLong(0)
+      val size = offsetAndSize.toInt
+      key != null && size == key.numBytes && ByteArrayMethods.arrayEquals(
+        u.getBaseObject, u.getBaseOffset + (offsetAndSize >> 32), key.getBaseObject, key.getBaseOffset, size)
+    case _ => row.getUTF8String(0) == key
   }
 
   /** Writes `s` as the partition's next block row and empties it. */
