@@ -55,7 +55,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectTableFunction(GraftExtensions.graftRenko)
     ext.injectTableFunction(GraftExtensions.graftBm25)
     ext.injectTableFunction(GraftExtensions.graftAnn)
-    // the renko scan's rule and strategy are installed by Renko.fromTicks
+    // the renko scan: the rule pushes symbol predicates through the scan
+    // to the tick source, the strategy plans RenkoScanNode. Renko.fromTicks
+    // installs both too, for sessions built without these extensions
+    ext.injectOptimizerRule(_ => graft.plans.RenkoSymbolPushdown)
+    ext.injectPlannerStrategy(_ => graft.plans.RenkoScanStrategy)
     // the serving TVFs plan through Bm25ScanNode/AnnScanNode: outer
     // metadata WHEREs become filtered probes
     ext.injectOptimizerRule(_ => graft.plans.ServingFilterPushdown)
@@ -380,7 +384,7 @@ object GraftExtensions {
     * optimizer rule and planner strategy the serving TVFs plan through
     * (via `spark.experimental` — the runtime twin of the
     * injectOptimizerRule/injectPlannerStrategy extension path; the renko
-    * scan installs its own, `RenkoScanStrategy.install`).
+    * scan's are installed by `Renko.fromTicks`, `RenkoScanStrategy.install`).
     */
   def registerTvfs(spark: SparkSession): Unit = {
     Seq(graftRenko, graftBm25, graftAnn).foreach { f =>

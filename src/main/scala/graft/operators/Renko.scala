@@ -4,6 +4,8 @@ import graft.core.{Brick, RenkoEngine, RenkoSnapshot}
 import graft.plans.{RenkoScanNode, RenkoScanStrategy}
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, GraftSqlShim}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -134,8 +136,12 @@ object Renko {
       blockCap: Int = BlockCap): DataFrame = {
     val spark = ticks.sparkSession
     RenkoScanStrategy.install(spark)
-    GraftSqlShim.ofRows(spark, RenkoScanNode(brickSize, dropFirst, blockCap,
-      DataTypeUtils.toAttributes(wideSchema), ticks.queryExecution.analyzed))
+    val scan = RenkoScanNode(brickSize, dropFirst, blockCap,
+      DataTypeUtils.toAttributes(wideSchema), ticks.queryExecution.analyzed)
+    // the analyzer gives a Project's aliases fresh ids where one plan is
+    // read twice (a self-join, a CTE or view used twice), not a node's own
+    // output; the optimizer drops the aliases again
+    GraftSqlShim.ofRows(spark, Project(scan.output.map(a => Alias(a, a.name)()), scan))
   }
 
   /** Zero-shuffle fast path for pre-ordered input (the reference assumes

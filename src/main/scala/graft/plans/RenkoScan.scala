@@ -107,7 +107,7 @@ private[plans] trait MetricsInExplain extends UnaryExecNode {
   * stably sorted by t. `part` is the input partition and `seq` the block's
   * place among its blocks, so (part, seq) is the input order of the
   * block's ticks. Blocks are written as `UnsafeRow`s straight from the
-  * gathered ticks; pre-sorted input is not sorted again.
+  * gathered ticks.
   */
 case class RenkoPackExec(blockCap: Int, output: Seq[Attribute], child: SparkPlan)
     extends UnaryExecNode with MetricsInExplain {
@@ -184,12 +184,10 @@ case class RenkoFoldExec(brickSize: Double, dropFirst: Boolean, output: Seq[Attr
   * held in one huge array while it grows.
   */
 private final class SeriesTicks(val key: UTF8String) {
-  val ts = new ArrayBuffer[Array[Long]](4)
-  val ps = new ArrayBuffer[Array[Double]](4)
-  /** Ticks held, ticks in the last chunk, and whether t never fell. */
+  private val ts = new ArrayBuffer[Array[Long]](4)
+  private val ps = new ArrayBuffer[Array[Double]](4)
+  /** Ticks held, and ticks in the last chunk. */
   var n, last = 0
-  var sorted = true
-  private var lastT = Long.MinValue
 
   def add(t: Long, price: Double): Unit = {
     if (n == 0 || last == ts.last.length) {
@@ -198,19 +196,27 @@ private final class SeriesTicks(val key: UTF8String) {
       ps += new Array[Double](size)
       last = 0
     }
-    if (t < lastT) sorted = false
-    lastT = t
     ts.last(last) = t
     ps.last(last) = price
     last += 1
     n += 1
   }
 
-  /** The chunks of `chunks` (`ts` or `ps`) with their filled lengths. */
-  def filled(chunks: ArrayBuffer[_ <: AnyRef]): Iterator[(AnyRef, Int)] =
-    chunks.indices.iterator.map(i => (chunks(i), if (i == chunks.length - 1) last else ts(i).length))
-
-  def clear(): Unit = { ts.clear(); ps.clear(); n = 0; last = 0; sorted = true; lastT = Long.MinValue }
+  /** The ticks, stably sorted by t, and then none held. */
+  def drain(): (Array[Long], Array[Double]) = {
+    val t = new Array[Long](n)
+    val p = new Array[Double](n)
+    var at = 0
+    for (i <- ts.indices) {
+      val len = if (i == ts.length - 1) last else ts(i).length
+      System.arraycopy(ts(i), 0, t, at, len)
+      System.arraycopy(ps(i), 0, p, at, len)
+      at += len
+    }
+    val sorted = Renko.sortedByTime(t, p, n)
+    ts.clear(); ps.clear(); n = 0; last = 0
+    sorted
+  }
 }
 
 private object SeriesTicks {
@@ -294,38 +300,20 @@ private final class BlockPacker(
     w.write(1, part)
     blockNo += 1
     w.write(2, blockNo)
-    if (s.sorted) {
-      putArray(3, n, s.filled(s.ts), Platform.LONG_ARRAY_OFFSET)
-      putArray(4, n, s.filled(s.ps), Platform.DOUBLE_ARRAY_OFFSET)
-    } else {
-      val t = new Array[Long](n)
-      val p = new Array[Double](n)
-      var at = 0
-      for (((tc, len), (pc, _)) <- s.filled(s.ts).zip(s.filled(s.ps))) {
-        System.arraycopy(tc, 0, t, at, len)
-        System.arraycopy(pc, 0, p, at, len)
-        at += len
-      }
-      val (st, sp) = Renko.sortedByTime(t, p, n)
-      putArray(3, n, Iterator((st, n)), Platform.LONG_ARRAY_OFFSET)
-      putArray(4, n, Iterator((sp, n)), Platform.DOUBLE_ARRAY_OFFSET)
-    }
+    val (t, p) = s.drain()
+    putArray(3, n, t, Platform.LONG_ARRAY_OFFSET)
+    putArray(4, n, p, Platform.DOUBLE_ARRAY_OFFSET)
     ticks += n
     blocks += 1
-    s.clear()
     ready = true
     time += System.nanoTime() - t0
   }
 
-  /** Writes `n` 8-byte elements, copied from `parts`, as array field `ordinal`. */
-  private def putArray(ordinal: Int, n: Int, parts: Iterator[(AnyRef, Int)], srcOffset: Long): Unit = {
+  /** Writes `a`, an array of `n` 8-byte elements, as array field `ordinal`. */
+  private def putArray(ordinal: Int, n: Int, a: AnyRef, srcOffset: Long): Unit = {
     val start = w.cursor()
     new UnsafeArrayWriter(w, 8).initialize(n)
-    var dst: Long = start + UnsafeArrayData.calculateHeaderPortionInBytes(n)
-    for ((src, len) <- parts) {
-      Platform.copyMemory(src, srcOffset, w.getBuffer, dst, 8L * len)
-      dst += 8L * len
-    }
+    Platform.copyMemory(a, srcOffset, w.getBuffer, start + UnsafeArrayData.calculateHeaderPortionInBytes(n), 8L * n)
     w.setOffsetAndSizeFromPreviousCursor(ordinal, start)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{BrickRow, Renko, Tick}
 import graft.plans.{RenkoFoldExec, RenkoPackExec, RenkoScanStrategy}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
@@ -160,6 +160,49 @@ class BlockScanSpec extends SparkTestBase {
     val got = filtered.collect()
     assert(got.nonEmpty && got.toSeq == all.filter(_.getString(0) == "y").toSeq,
       "pushed-down bricks must equal the filter after the scan")
+  }
+
+  test("a self-join of a fromTicks result, and a CTE over graft_renko read twice") {
+    val parts = split(walk("a", 800, 41) ++ walk("b", 600, 42, perTs = 2), 3)
+    val wide = Renko.fromTicks(frame(parts), brick, symbolCol = Some("sym"))
+    val n = wide.count()
+    // bricks of one tick share a datetime but not a close
+    val on = Seq("symbol", "datetime", "close")
+    val self = wide.alias("l").join(wide.alias("r"), on.map(c => col(s"l.$c") === col(s"r.$c")).reduce(_ && _))
+    assert(n > 20 && self.count() == n)
+    GraftExtensions.registerRenkoTvf(spark)
+    frame(parts).createOrReplaceTempView("block_scan_self_join")
+    val viaSql = spark.sql(
+      s"""WITH r AS (SELECT * FROM graft_renko('block_scan_self_join', $brick, 'wicks', 'sym'))
+         |SELECT count(*) FROM r x JOIN r y
+         |  ON x.symbol = y.symbol AND x.datetime = y.datetime AND x.close = y.close""".stripMargin)
+    assert(viaSql.head().getLong(0) == n)
+  }
+
+  /** A session on this suite's context and shared state, built with `install`'s
+    * extensions as `spark.sql.extensions` would build it. Its constructor is
+    * not open to Scala callers, so it is reached by reflection.
+    */
+  private def withExtensions(install: SparkSessionExtensions => Unit): SparkSession = {
+    val ext = new SparkSessionExtensions
+    install(ext)
+    val cls = classOf[org.apache.spark.sql.classic.SparkSession]
+    val make = cls.getConstructor(classOf[org.apache.spark.SparkContext], classOf[Option[_]], classOf[Option[_]],
+      classOf[SparkSessionExtensions], classOf[Map[_, _]], classOf[Map[_, _]])
+    make.newInstance(spark.sparkContext, Some(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState),
+      None, ext, Map.empty[String, String], Map.empty[String, String])
+  }
+
+  test("a session built with GraftExtensions plans the renko node with no fromTicks call of its own") {
+    val view = "block_scan_global_renko"
+    Renko.fromTicks(frame(split(walk("a", 80, 51) ++ walk("b", 60, 52), 2)), brick, symbolCol = Some("sym"))
+      .createOrReplaceGlobalTempView(view)
+    try {
+      val want = spark.table(s"global_temp.$view").collect().map(_.toString).sorted.toSeq
+      val other = withExtensions(new GraftExtensions()).newSession()
+      assert(!other.experimental.extraStrategies.contains(RenkoScanStrategy))
+      assert(want.nonEmpty && other.table(s"global_temp.$view").collect().map(_.toString).sorted.toSeq == want)
+    } finally spark.catalog.dropGlobalTempView(view)
   }
 
   test("sortedByTime: stable natural-run merge") {
