@@ -602,13 +602,15 @@ object Renko {
     fold.map(toRow(fold.symbol, _))
   }
 
-  /** The first `n` ticks of (t, price), stably sorted by t: a bottom-up
-    * merge of the natural ascending runs, so sorted input is one pass plus
-    * a copy and a tie keeps its row order.
+  /** (t, price) stably sorted by t: a bottom-up merge of the natural
+    * ascending runs, so sorted input is one pass and a tie keeps its row
+    * order. The arrays are the caller's to give up: they may be overwritten
+    * or returned.
     */
-  private[graft] def sortedByTime(t: Array[Long], price: Array[Double], n: Int): (Array[Long], Array[Double]) = {
-    var st = java.util.Arrays.copyOf(t, n)
-    var sp = java.util.Arrays.copyOf(price, n)
+  private[graft] def sortedByTime(t: Array[Long], price: Array[Double]): (Array[Long], Array[Double]) = {
+    val n = t.length
+    var st = t
+    var sp = price
     // run starts, then n
     val starts = new ArrayBuilder.ofInt
     starts += 0

@@ -80,7 +80,9 @@ object RenkoScanStrategy extends SparkStrategy {
   }
 
   /** Installs this strategy and [[RenkoSymbolPushdown]] on `spark` once, so
-    * a session built without `GraftExtensions` plans the node too.
+    * a session built without `GraftExtensions` plans the node too. Such a
+    * session plans it only after a `fromTicks` call of its own: one that
+    * reads the node from elsewhere (a global temp view) needs the extensions.
     */
   def install(spark: SparkSession): Unit = {
     val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
@@ -213,9 +215,8 @@ private final class SeriesTicks(val key: UTF8String) {
       System.arraycopy(ps(i), 0, p, at, len)
       at += len
     }
-    val sorted = Renko.sortedByTime(t, p, n)
     ts.clear(); ps.clear(); n = 0; last = 0
-    sorted
+    Renko.sortedByTime(t, p)
   }
 }
 

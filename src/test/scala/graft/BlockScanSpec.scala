@@ -216,8 +216,7 @@ class BlockScanSpec extends SparkTestBase {
         }
       }
       val price = Array.tabulate(n)(_.toDouble) // the input row, to check stability
-      // slack past n must be ignored
-      val (st, sp) = Renko.sortedByTime(t ++ Array(-1L, -1L), price ++ Array(-1.0, -1.0), n)
+      val (st, sp) = Renko.sortedByTime(t.clone(), price.clone())
       val want = t.zip(price).sortBy(_._1)
       assert(st.toSeq == want.map(_._1).toSeq && sp.toSeq == want.map(_._2).toSeq, s"n=$n $shape")
     }
