@@ -65,7 +65,7 @@ class SmallPrefixSpec extends SparkTestBase {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"${sys.props("user.home")}/testdata/sf0.001/documents.parquet")
     val path = java.nio.file.Files.createTempDirectory("graft-rank-warn").toString
     graft.operators.TextIndex.write(docs, path)
     val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()

@@ -114,7 +114,7 @@ class StreamingSpec extends SparkTestBase {
 
   /** events sf0.001 as one tick series: epoch-µs `t`, `close`. */
   private def eventTicks: DataFrame = {
-    val raw = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val raw = spark.read.parquet(s"${sys.props("user.home")}/testdata/sf0.001/events.parquet")
     raw.select(SparkTestBase.tsEpochUs(raw).as("t"), col("value").as("close"))
   }
 
